@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
 import graft.ingest.Pipeline
 import graft.streaming.StreamingIngest
@@ -45,12 +49,14 @@ object IngestMain {
           val q = StreamingIngest.ingestAvailableNow(
             spark, base, component, table, tableDir, env("GRAFT_CHECKPOINT"))
           q.awaitTermination()
-          println(s"""{"mode":"streaming","table":"${table.name}"}""")
+          println(Serialization.write(
+            ListMap("mode" -> "streaming", "table" -> table.name))(DefaultFormats))
         case _ =>
           val r = Pipeline.ingest(spark, base, component, table, tableDir,
             deleteSources = !sys.env.get("GRAFT_KEEP_SOURCE").contains("1"))
           val (snap, rows) = r.commit.map(c => (c.snapshotId, c.rows)).getOrElse((-1L, 0L))
-          println(s"""{"mode":"batch","table":"${table.name}","files":${r.sourceFiles.size},"rows":$rows,"snapshot":$snap}""")
+          println(Serialization.write(ListMap("mode" -> "batch", "table" -> table.name,
+            "files" -> r.sourceFiles.size, "rows" -> rows, "snapshot" -> snap))(DefaultFormats))
       }
     } finally spark.stop()
   }

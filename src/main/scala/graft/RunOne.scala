@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
 /** Dev tool: run a SUBSET of SparkEntry.queries against any table dir
   * and dump result parquet + the matching oracle SQL — Verify's shape
@@ -28,16 +30,9 @@ object RunOne {
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       spark.catalog.clearCache()
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.view.filterKeys(names.contains)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val oracle = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Serialization.write(oracle)(DefaultFormats))
     spark.stop()
   }
 }

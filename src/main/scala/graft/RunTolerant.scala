@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
 /** Dev tool (r16): [[RunOne]]'s shape over EVERY declared query,
   * skipping the ones the table dir cannot serve (degenerate fixtures
@@ -36,16 +38,9 @@ object RunTolerant {
             s"${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString}")
       } finally spark.catalog.clearCache()
     }
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.view.filterKeys(ran.contains)
-      .map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val oracle = SparkEntry.oracleSql.filter(kv => ran.contains(kv._1))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Serialization.write(oracle)(DefaultFormats))
     println(s"RAN ${ran.size} of ${SparkEntry.queries.size}")
     spark.stop()
   }

@@ -77,13 +77,20 @@ object JsonDecode {
   def decodeRaw(raw: DataFrame, schema: GStruct): DataFrame =
     raw.select(schema.fields.map(f => coerceType(col(f.name), f.gtype).as(f.name)): _*)
 
-  /** Decode newline-delimited JSON files into the schema's frame. */
+  /** Decode newline-delimited JSON files into the schema's frame.
+    * Spark expands every path as a Hadoop glob, so glob metacharacters
+    * are escaped: a source named `back\slash.json` or `a[1].json` reads
+    * as itself.
+    */
   def read(spark: SparkSession, schema: GStruct, paths: Seq[String]): DataFrame =
     decodeRaw(
       spark.read
         .schema(readSchema(schema))
         .option("mode", "DROPMALFORMED")
-        .json(paths: _*),
+        .json(paths.map(_.flatMap {
+          case c @ ('\\' | '{' | '}' | '[' | ']' | '*' | '?') => s"\\$c"
+          case c => c.toString
+        }): _*),
       schema)
 
   /** Decode an in-memory JSON-string column (same semantics, used by

@@ -1,10 +1,10 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.json4s._
-import org.json4s.jackson.JsonMethods
+import org.json4s.DefaultFormats
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 /** The table's commit log: one JSON record per snapshot under
   * `<tableDir>/_graft_log/`, emulating the observable metadata of
@@ -20,10 +20,18 @@ import org.json4s.jackson.JsonMethods
   *    fold semantics are those of `rewrite`; the distinct op name keeps
   *    the ledger honest about which snapshots changed rows).
   *
-  * The live file set of a snapshot is the fold of operations up to it;
-  * readers must resolve through the log (never the directory listing —
-  * files replaced by a rewrite remain on disk until expiry, exactly
-  * like Iceberg's snapshot isolation + GC split).
+  * Record format: `<snapshotId %020d>.json` holds one json4s-serialized
+  * [[Record]] — keys in field order, `files` and `sources` sorted, every
+  * string escaped by the JSON writer (a source key may hold any
+  * character a file name can). The log dir and every other
+  * `_`-prefixed directory directly under a table belong to writers
+  * (`_staging_*` is an append in flight); data files live only under
+  * the partition directories.
+  *
+  * The live file set of a snapshot is the fold of operations up to it
+  * ([[fold]]); readers must resolve through the log (never the
+  * directory listing — files replaced by a rewrite remain on disk until
+  * expiry, exactly like Iceberg's snapshot isolation + GC split).
   *
   * `sources` records the consumed input files of an append — the
   * exactly-once ledger: re-offered source files that already appear in
@@ -35,6 +43,13 @@ object GraftLog {
   final case class Record(
       snapshotId: Long, op: String, rows: Long,
       files: Seq[String], sources: Seq[String])
+
+  /** What a prefix of the log folds to: its newest snapshot id (0 for
+    * an empty prefix), the live files and the live rows.
+    */
+  final case class Live(snapshotId: Long, files: Vector[String], rows: Long)
+
+  private implicit val formats: DefaultFormats.type = DefaultFormats
 
   def logDir(tableDir: String): Path = Paths.get(tableDir, "_graft_log")
 
@@ -55,7 +70,7 @@ object GraftLog {
         // r5 randomized-sequence spec) — the rename then fails forever,
         // the id stays occupied-but-invisible to nextSnapshotId, and
         // commit() exhausts its 1000 retries on a permanent collision.
-        try Some(parse(Files.readString(p)))
+        try Some(JsonMethods.parse(Files.readString(p)).extract[Record])
         catch {
           case _: Exception =>
             val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -67,43 +82,32 @@ object GraftLog {
       }
   }
 
-  private def parse(json: String): Record = {
-    val jv = JsonMethods.parse(json)
-    def strs(field: String): Seq[String] = (jv \ field) match {
-      case JArray(xs) => xs.collect { case JString(s) => s }
-      case _          => Seq.empty
-    }
-    def long(field: String, default: Long = 0L): Long = (jv \ field) match {
-      case JInt(n)  => n.toLong
-      case JLong(n) => n
-      case _        => default
-    }
-    val op = (jv \ "op") match {
-      case JString(s) => s
-      case _          => "append"
-    }
-    Record(long("snapshotId"), op, long("rows"), strs("files"), strs("sources"))
-  }
+  /** Fold `recs` up to `upTo` (all when None) in snapshot order.
+    * `rewrite`/`overwrite`/`delete` records carry the FULL live set
+    * (their files and rows replace the fold); appends and unknown ops
+    * carry a delta.
+    */
+  def fold(recs: Seq[Record], upTo: Option[Long] = None): Live =
+    recs.iterator.filter(r => upTo.forall(r.snapshotId <= _))
+      .foldLeft(Live(0L, Vector.empty, 0L)) { (live, r) =>
+        val id = live.snapshotId max r.snapshotId
+        r.op match {
+          case "rewrite" | "overwrite" | "delete" => Live(id, r.files.toVector, r.rows)
+          case _ => Live(id, live.files ++ r.files, live.rows + r.rows)
+        }
+      }
 
   /** Live data files (relative paths) as of `snapshotId` (or the
-    * latest when None): fold appends/rewrites in snapshot order.
+    * latest when None).
     */
-  def liveFiles(tableDir: String, snapshotId: Option[Long] = None): Seq[String] = {
-    val upTo = records(tableDir)
-      .filter(r => snapshotId.forall(r.snapshotId <= _))
-    upTo.foldLeft(Vector.empty[String]) { (live, r) =>
-      r.op match {
-        // these ops commit the FULL live set (their record replaces the
-        // fold); appends and unknown ops commit a delta
-        case "rewrite" | "overwrite" | "delete" => r.files.toVector
-        case _                                  => live ++ r.files
-      }
-    }
-  }
+  def liveFiles(tableDir: String, snapshotId: Option[Long] = None): Seq[String] =
+    fold(records(tableDir), snapshotId).files
 
   /** Every source file ever committed — the exactly-once ledger. */
   def committedSources(tableDir: String): Set[String] =
     records(tableDir).flatMap(_.sources).toSet
+
+  def nextSnapshotId(tableDir: String): Long = fold(records(tableDir)).snapshotId + 1L
 
   /** Commit a record under the next free snapshot id — atomic and
     * collision-safe, the two properties "transactional append" actually
@@ -113,29 +117,12 @@ object GraftLog {
     * `Files.writeString`, so two writers could allocate the same id and
     * silently overwrite each other's commit, and a crash mid-write left
     * truncated JSON that poisoned every later read).
-    *
-    * Protocol: stage the full record to a temp file (invisible to
-    * `records()` — no `.json` suffix), then publish via
-    * `Files.createLink(target, tmp)` — an atomic CREATE-NEW on POSIX
-    * (unlike `ATOMIC_MOVE`, whose rename(2) silently REPLACES an
-    * existing target). If another writer claimed the id first, the link
-    * throws `FileAlreadyExistsException`; re-read the log and retry
-    * with a fresh id. Readers see either no file or the complete
-    * record, and no commit is ever overwritten.
     */
   def commit(tableDir: String, op: String, rows: Long,
-      files: Seq[String], sources: Seq[String]): Record = {
-    var attempt = 0
-    while (true) {
-      val id = nextSnapshotId(tableDir)
-      if (tryClaim(tableDir, id, op, rows, files, sources))
-        return Record(id, op, rows, files.sorted, sources.sorted)
-      attempt += 1 // id raced away — re-read the log, try the next
-      if (attempt > 1000)
-        throw new IllegalStateException(s"commit to $tableDir: 1000 id collisions")
+      files: Seq[String], sources: Seq[String]): Record =
+    claim(tableDir) { recs =>
+      Record(fold(recs).snapshotId + 1L, op, rows, files.sorted, sources.sorted)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Commit a live-set-REPLACING record (`rewrite`/`overwrite`/
     * `delete`) VALIDATED against the base snapshot the operation
@@ -158,10 +145,8 @@ object GraftLog {
     */
   def commitReplacing(tableDir: String, op: String, rows: Long,
       files: Seq[String], sources: Seq[String], baseId: Long,
-      carryAppends: Boolean): Record = {
-    var attempt = 0
-    while (true) {
-      val recs = records(tableDir)
+      carryAppends: Boolean): Record =
+    claim(tableDir) { recs =>
       val newer = recs.filter(_.snapshotId > baseId)
       if (newer.exists(_.op != "append"))
         throw new java.util.ConcurrentModificationException(
@@ -171,44 +156,35 @@ object GraftLog {
         throw new java.util.ConcurrentModificationException(
           s"$op on $tableDir planned from snapshot $baseId but appends " +
             s"landed after it; re-read and re-run")
-      val allFiles = files ++ newer.flatMap(_.files)
-      val allRows = rows + newer.map(_.rows).sum
-      val id = recs.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-      if (tryClaim(tableDir, id, op, allRows, allFiles, sources))
-        return Record(id, op, allRows, allFiles.sorted, sources.sorted)
-      attempt += 1 // lost the id race — revalidate against the new log
-      if (attempt > 1000)
-        throw new IllegalStateException(s"commit to $tableDir: 1000 id collisions")
+      Record(fold(recs).snapshotId + 1L, op, rows + newer.map(_.rows).sum,
+        (files ++ newer.flatMap(_.files)).sorted, sources.sorted)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
-  /** One atomic claim of snapshot `id`: stage the full record to a temp
-    * file (invisible to `records()` — no `.json` suffix), then publish
-    * via `Files.createLink` — an atomic CREATE-NEW on POSIX (unlike
+  /** The optimistic-commit loop: plan a record from a fresh read of the
+    * log (the re-read IS the concurrency check), stage it to a temp file
+    * (invisible to `records()` — no `.json` suffix), then publish via
+    * `Files.createLink` — an atomic CREATE-NEW on POSIX (unlike
     * `ATOMIC_MOVE`, whose rename(2) silently REPLACES an existing
-    * target). Returns false when another writer claimed the id first.
+    * target). If another writer claimed the id first, the link throws
+    * `FileAlreadyExistsException`; re-read and retry with a fresh plan.
+    * Readers see either no file or the complete record, and no commit
+    * is ever overwritten.
     */
-  private def tryClaim(tableDir: String, id: Long, op: String, rows: Long,
-      files: Seq[String], sources: Seq[String]): Boolean = {
-    Files.createDirectories(logDir(tableDir))
-    def arr(xs: Seq[String]) =
-      xs.sorted.map(f => "\"" + f.replace("\\", "/") + "\"").mkString("[", ",", "]")
-    val tmp = logDir(tableDir).resolve(s"_tmp_${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp,
-      s"""{"snapshotId":$id,"op":"$op","rows":$rows,""" +
-        s""""files":${arr(files)},"sources":${arr(sources)}}""")
-    try {
-      Files.createLink(logDir(tableDir).resolve(f"$id%020d.json"), tmp)
-      Files.delete(tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.delete(tmp)
-        false
+  private def claim(tableDir: String)(plan: Seq[Record] => Record): Record = {
+    val dir = logDir(tableDir)
+    Files.createDirectories(dir)
+    var attempt = 0
+    while (attempt <= 1000) {
+      val rec = plan(records(tableDir))
+      val tmp = dir.resolve(s"_tmp_${java.util.UUID.randomUUID()}")
+      Files.writeString(tmp, Serialization.write(rec))
+      try {
+        Files.createLink(dir.resolve(f"${rec.snapshotId}%020d.json"), tmp)
+        return rec
+      } catch {
+        case _: FileAlreadyExistsException => attempt += 1 // id raced away
+      } finally Files.delete(tmp)
     }
+    throw new IllegalStateException(s"commit to $tableDir: 1000 id collisions")
   }
-
-  def nextSnapshotId(tableDir: String): Long =
-    records(tableDir).map(_.snapshotId).maxOption.getOrElse(0L) + 1L
 }

@@ -1,8 +1,10 @@
 package graft.sink
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Table maintenance + snapshot reads over the commit log — the lake
   * operations an Iceberg user relies on, re-expressed over the
@@ -20,8 +22,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object LakeOps {
 
-  /** Snapshot-file read with ADD-COLUMN schema-evolution support, the
-    * shape every lake read here uses. `mergeSchema=true` is the
+  /** Read live files (paths relative to `tableDir`) with ADD-COLUMN
+    * schema-evolution support, the shape every lake read here uses.
+    * basePath keeps Hive partition columns when reading explicit files.
+    *
+    * A full-table DELETE (or a table with no commits) legitimately
+    * leaves zero files; parquet() with no paths cannot infer a schema,
+    * so the empty table surfaces as a 0-column empty frame
+    * (count/isEmpty work; a schema-carrying log — real Iceberg — would
+    * keep the columns).
+    *
+    * `mergeSchema=true` is the
     * semantic contract (a snapshot's schema is the union of its files'
     * schemas) — but Spark implements it as `mergeSchemasInParallel`, a
     * full Spark JOB over the footers launched during ANALYSIS of every
@@ -36,38 +47,36 @@ object LakeOps {
     * footer sets pay the mergeSchema job. Iceberg proper resolves this
     * from table metadata in O(1); this is the emulation's equivalent.
     */
-  private[graft] def mergedRead(spark: SparkSession, tableDir: String,
-      absFiles: Seq[String]): DataFrame = {
-    val base = spark.read.option("basePath", tableDir)
-    if (footersAgree(absFiles)) base.parquet(absFiles: _*)
-    else base.option("mergeSchema", "true").parquet(absFiles: _*)
-  }
+  private def readLive(spark: SparkSession, tableDir: String,
+      files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.emptyDataFrame
+    else {
+      val absFiles = files.map(f => s"$tableDir/$f")
+      val base = spark.read.option("basePath", tableDir)
+      if (footersAgree(absFiles)) base.parquet(absFiles: _*)
+      else base.option("mergeSchema", "true").parquet(absFiles: _*)
+    }
 
   /** True iff every file's parquet footer declares the same schema.
     * Driver-side footer reads; any unreadable footer returns false so
     * the caller falls back to the engine's own merged read and its
     * error surface. Two amortizations keep this cheaper than the job
-    * it replaces: ONE shared Hadoop Configuration (constructing one
-    * per file re-parses the XML config set — measured ~10 ms each,
-    * which made the first cut of this check a net LOSS), and a
-    * process-wide footer-schema cache — published data files are
-    * immutable and UUID-named (never rewritten in place; commits only
-    * add or drop paths), so a path's footer schema is a constant.
+    * it replaces: the sink's ONE shared Hadoop Configuration
+    * ([[HiveParquetWriter.footer]]; constructing one per file re-parses
+    * the XML config set — measured ~10 ms each, which made the first
+    * cut of this check a net LOSS), and a process-wide footer-schema
+    * cache — published data files are immutable and UUID-named (never
+    * rewritten in place; commits only add or drop paths), so a path's
+    * footer schema is a constant.
     */
   private val footerSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
   private def footersAgree(absFiles: Seq[String]): Boolean =
     try {
       val schemas = absFiles.map { f =>
-        footerSchemaCache.computeIfAbsent(f, { path =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(path), footerConf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFooter.getFileMetaData.getSchema.toString
-          finally r.close()
-        })
+        footerSchemaCache.computeIfAbsent(f,
+          HiveParquetWriter.footer(_)(_.getFileMetaData.getSchema.toString))
       }
       schemas.distinct.size <= 1
     } catch { case _: Exception => false }
@@ -76,7 +85,7 @@ object LakeOps {
     * are not in the live set).
     */
   def readTable(spark: SparkSession, tableDir: String): DataFrame =
-    readSnapshot(spark, tableDir, GraftLog.records(tableDir).map(_.snapshotId).max)
+    readLive(spark, tableDir, GraftLog.liveFiles(tableDir))
 
   /** Time travel: the table as of `snapshotId`.
     *
@@ -90,17 +99,8 @@ object LakeOps {
     * but a real `IcebergWriter` behind the [[LakeWriter]] seam would
     * carry the schema in the log, not the files.
     */
-  def readSnapshot(spark: SparkSession, tableDir: String, snapshotId: Long): DataFrame = {
-    val files = GraftLog.liveFiles(tableDir, Some(snapshotId))
-      .map(f => s"$tableDir/$f")
-    // a full-table DELETE legitimately leaves a live set of zero files;
-    // parquet() with no paths cannot infer a schema, so surface the
-    // empty table as a 0-column empty frame (count/isEmpty work; a
-    // schema-carrying log — real Iceberg — would keep the columns)
-    if (files.isEmpty) return spark.emptyDataFrame
-    // basePath keeps Hive partition columns when reading explicit files
-    mergedRead(spark, tableDir, files)
-  }
+  def readSnapshot(spark: SparkSession, tableDir: String, snapshotId: Long): DataFrame =
+    readLive(spark, tableDir, GraftLog.liveFiles(tableDir, Some(snapshotId)))
 
   /** Incremental append scan: rows committed AFTER snapshot
     * `fromExclusive` up to and including `toInclusive` — Iceberg's
@@ -122,8 +122,7 @@ object LakeOps {
     val bad = recs.filter(_.op != "append")
     require(bad.isEmpty, "incremental read is append-only; range contains " +
       bad.map(r => s"${r.snapshotId}:${r.op}").mkString(", "))
-    val files = recs.flatMap(_.files).map(f => s"$tableDir/$f")
-    mergedRead(spark, tableDir, files)
+    readLive(spark, tableDir, recs.flatMap(_.files))
   }
 
   /** Row-level CHANGELOG between two snapshots — the CDC view Iceberg
@@ -143,9 +142,10 @@ object LakeOps {
     */
   def diffSnapshots(spark: SparkSession, tableDir: String,
       fromSnapshot: Long, toSnapshot: Long, keyCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, struct, when}
-    val a0 = readSnapshot(spark, tableDir, fromSnapshot)
-    val b0 = readSnapshot(spark, tableDir, toSnapshot)
+    import org.apache.spark.sql.functions.{lit, struct, when}
+    val recs = GraftLog.records(tableDir)
+    val a0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(fromSnapshot)).files)
+    val b0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(toSnapshot)).files)
     // an empty snapshot (post full-table DELETE) reads as a 0-column
     // frame — borrow the other endpoint's schema so the changelog
     // degenerates correctly (all-inserted / all-deleted) instead of
@@ -188,25 +188,16 @@ object LakeOps {
     require(recs.exists(_.snapshotId == toSnapshotId),
       s"no snapshot $toSnapshotId in $tableDir")
     // restoring old content is content-dependent by definition — abort
-    // if anything commits between planning and publish
-    val baseId = recs.map(_.snapshotId).max
-    val files = GraftLog.liveFiles(tableDir, Some(toSnapshotId))
-    // rows = TOTAL rows of the restored live set (the convention every
+    // if anything commits between planning and publish. rows = the
+    // fold's rows of the restored live set (the convention every
     // full-set op — compact/overwrite/delete — uses), not the target
     // snapshot's own delta: a rollback to an append-on-top-of-appends
     // restores all of them, and the record must describe what its file
-    // set holds (advisor finding r5). Same fold as liveFiles.
-    val rows = GraftLog.records(tableDir)
-      .filter(_.snapshotId <= toSnapshotId)
-      .foldLeft(0L) { (acc, r) =>
-        r.op match {
-          case "rewrite" | "overwrite" | "delete" => r.rows
-          case _                                  => acc + r.rows
-        }
-      }
-    val rec = GraftLog.commitReplacing(tableDir, "rewrite", rows, files,
-      Seq.empty, baseId, carryAppends = false)
-    CommitInfo(rec.snapshotId, rec.files, rows)
+    // set holds (advisor finding r5).
+    val target = GraftLog.fold(recs, Some(toSnapshotId))
+    val rec = GraftLog.commitReplacing(tableDir, "rewrite", target.rows, target.files,
+      Seq.empty, GraftLog.fold(recs).snapshotId, carryAppends = false)
+    CommitInfo(rec.snapshotId, rec.files, target.rows)
   }
 
   /** Bin-pack the live set: one file per partition directory, committed
@@ -218,23 +209,19 @@ object LakeOps {
     // log hasn't moved past it (concurrent appends are carried over —
     // sound for a content-neutral rewrite; a concurrent replacing
     // commit aborts with ConcurrentModificationException for re-run)
-    val baseId = GraftLog.records(tableDir).map(_.snapshotId).maxOption.getOrElse(0L)
-    val live = GraftLog.liveFiles(tableDir, Some(baseId))
-    val partitionCols = live.flatMap(_.split("/").dropRight(1).map(_.takeWhile(_ != '=')))
-      .distinct
-    val df0 = readSnapshot(spark, tableDir, baseId)
-    // render partition values back to strings (they were path-rendered
-    // on write; partition inference may have re-typed them). No
-    // coalesce(1): writeFiles repartitions on the partition key, which
+    val base = GraftLog.fold(GraftLog.records(tableDir))
+    val partitionCols = base.files
+      .flatMap(_.split("/").dropRight(1).map(_.takeWhile(_ != '='))).distinct
+    // No coalesce(1): writeFiles repartitions on the partition key, which
     // already yields one file per partition directory (all rows of a
     // key land in one task) while keeping the rewrite fully parallel —
     // a single-task funnel here would be the scale bottleneck of the
     // whole maintenance op.
-    val df = partitionCols.foldLeft(df0)((d, c) => d.withColumn(c, d(c).cast("string")))
+    val df = asPathStrings(readLive(spark, tableDir, base.files), partitionCols)
     val written = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
     val rows = written.map(_._2).sum
     val rec = GraftLog.commitReplacing(tableDir, "rewrite", rows,
-      written.map(_._1).sorted, Seq.empty, baseId, carryAppends = true)
+      written.map(_._1).sorted, Seq.empty, base.snapshotId, carryAppends = true)
     CommitInfo(rec.snapshotId, rec.files, rec.rows)
   }
 
@@ -273,34 +260,22 @@ object LakeOps {
   def upsert(spark: SparkSession, tableDir: String, updates: DataFrame,
       keyCols: Seq[String], partitionCols: Seq[String],
       sources: Seq[String] = Seq.empty): CommitInfo = {
-    import org.apache.spark.sql.functions.col
-    val up = partitionCols.foldLeft(updates)((d, c) => d.withColumn(c, d(c).cast("string")))
-    val touched: Set[String] = up.select(partitionCols.map(col): _*).distinct()
-      .collect().map { r =>
-        partitionCols.indices.map(i => renderDir(partitionCols(i), r.get(i)))
-          .mkString("/")
-      }.toSet
+    val up = asPathStrings(updates, partitionCols)
+    val touched = touchedDirs(up, partitionCols)
     if (touched.isEmpty) return CommitInfo(0, Seq.empty, 0)
     // content-dependent rewrite: plan against a fixed base snapshot and
     // let commitReplacing ABORT (ConcurrentModificationException) if any
     // commit lands meanwhile — a carried-over concurrent append could
     // contain a merge key this upsert already decided about
-    val baseId = GraftLog.records(tableDir).map(_.snapshotId).maxOption.getOrElse(0L)
-    val live = GraftLog.liveFiles(tableDir, Some(baseId))
-    val (touchedFiles, carried) =
-      live.partition(f => touched.exists(p => f.startsWith(p + "/")))
+    val base = GraftLog.fold(GraftLog.records(tableDir))
+    val (touchedFiles, carried) = splitLive(base.files, touched)
     val merged =
       if (touchedFiles.isEmpty) up
       else {
-        // mergeSchema: a touched partition may hold files from before an
-        // ADD-COLUMN evolution — a single-footer schema would silently
-        // drop (or crash the union on) the added column
-        val cur0 = mergedRead(spark, tableDir,
-          touchedFiles.map(f => s"$tableDir/$f"))
-        // partition inference may re-type the directory values; string
-        // them back so the anti-join/union/write see one schema (same
-        // normalization as compact)
-        val cur = partitionCols.foldLeft(cur0)((d, c) => d.withColumn(c, d(c).cast("string")))
+        // mergeSchema (via readLive): a touched partition may hold files
+        // from before an ADD-COLUMN evolution — a single-footer schema
+        // would silently drop (or crash the union on) the added column
+        val cur = asPathStrings(readLive(spark, tableDir, touchedFiles), partitionCols)
         // whole-row replacement semantics: an update row that omits an
         // evolved column writes null there (allowMissingColumns), the
         // same null a fresh insert would carry
@@ -313,20 +288,33 @@ object LakeOps {
     // counts — read off the parquet footers — and they are summed here;
     // carried files keep their original rows)
     val rec = GraftLog.commitReplacing(tableDir, "overwrite", written.map(_._2).sum,
-      (carried ++ written.map(_._1)).sorted, sources, baseId, carryAppends = false)
+      (carried ++ written.map(_._1)).sorted, sources, base.snapshotId,
+      carryAppends = false)
     CommitInfo(rec.snapshotId, rec.files, written.map(_._2).sum)
   }
 
-  /** Directory-name rendering matching the WRITE path exactly:
-    * Spark's partitionBy escapes special characters (/, =, %, …) via
-    * escapePathName, and writeFiles renames the null dir to `=null` —
-    * a raw-value prefix would never match an escaped directory and the
-    * stale row would silently survive a merge (review finding).
+  /** Partition columns rendered back to strings: they were path-rendered
+    * on write, and partition inference may have re-typed them, so the
+    * rewrite's joins, unions and write see one schema.
     */
-  private def renderDir(colName: String, v: Any): String =
-    if (v == null) s"$colName=null"
-    else s"$colName=" + org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.escapePathName(v.toString)
+  private def asPathStrings(df: DataFrame, partitionCols: Seq[String]): DataFrame =
+    partitionCols.foldLeft(df)((d, c) => d.withColumn(c, d(c).cast("string")))
+
+  /** Relative partition directories the rows of `df` land in, rendered
+    * exactly as the write path names them — a raw-value prefix would
+    * never match an escaped directory and the stale row would silently
+    * survive a merge. Collected to the driver: bounded by the
+    * partitions touched, never by table size.
+    */
+  private def touchedDirs(df: DataFrame, partitionCols: Seq[String]): Set[String] =
+    df.select(partitionCols.map(col): _*).distinct().collect().map { r =>
+      partitionCols.indices
+        .map(i => HiveParquetWriter.renderDir(partitionCols(i), r.get(i))).mkString("/")
+    }.toSet
+
+  /** Split live files into (under a touched directory, carried over). */
+  private def splitLive(live: Seq[String], touched: Set[String]): (Seq[String], Seq[String]) =
+    live.partition(f => touched.exists(p => f.startsWith(p + "/")))
 
   /** Copy-on-write DELETE (the observable semantics of Iceberg's
     * `DELETE FROM t WHERE p` in copy-on-write mode — the GDPR/forget
@@ -352,26 +340,17 @@ object LakeOps {
   def delete(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       partitionCols: Seq[String]): CommitInfo = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     // content-dependent rewrite: fixed base snapshot, abort on any
     // concurrent commit (an appended row could match the predicate)
-    val baseId = GraftLog.records(tableDir).map(_.snapshotId).maxOption.getOrElse(0L)
-    val live = GraftLog.liveFiles(tableDir, Some(baseId))
-    if (live.isEmpty) return CommitInfo(0, Seq.empty, 0)
+    val base = GraftLog.fold(GraftLog.records(tableDir))
+    if (base.files.isEmpty) return CommitInfo(0, Seq.empty, 0)
     val hit = coalesce(predicate, lit(false))
-    def readNorm(files: Seq[String]): DataFrame = {
-      val raw = mergedRead(spark, tableDir, files.map(f => s"$tableDir/$f"))
-      partitionCols.foldLeft(raw)((d, c) => d.withColumn(c, d(c).cast("string")))
-    }
-    val touched: Set[String] = readNorm(live).filter(hit)
-      .select(partitionCols.map(col): _*).distinct()
-      .collect().map { r =>
-        partitionCols.indices.map(i => renderDir(partitionCols(i), r.get(i)))
-          .mkString("/")
-      }.toSet
+    def readNorm(files: Seq[String]): DataFrame =
+      asPathStrings(readLive(spark, tableDir, files), partitionCols)
+    val touched = touchedDirs(readNorm(base.files).filter(hit), partitionCols)
     if (touched.isEmpty) return CommitInfo(0, Seq.empty, 0)
-    val (touchedFiles, carried) =
-      live.partition(f => touched.exists(p => f.startsWith(p + "/")))
+    val (touchedFiles, carried) = splitLive(base.files, touched)
     val cur = readNorm(touchedFiles)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -380,25 +359,29 @@ object LakeOps {
       val written = HiveParquetWriter.writeFiles(survivors, partitionCols, tableDir)
       val kept = written.map(_._2).sum
       val rec = GraftLog.commitReplacing(tableDir, "delete", kept,
-        (carried ++ written.map(_._1)).sorted, Seq.empty, baseId,
+        (carried ++ written.map(_._1)).sorted, Seq.empty, base.snapshotId,
         carryAppends = false)
       CommitInfo(rec.snapshotId, rec.files, before - kept)
     } finally cur.unpersist()
   }
 
   /** Delete data files unreachable from the newest `keepLast`
-    * snapshots. Returns the deleted relative paths.
+    * snapshots. Returns the deleted relative paths. `_`-prefixed
+    * directories under the table belong to writers (the log, and the
+    * `_staging_*` dir of an append in flight, whose staged files are
+    * not yet published) and are never swept.
     */
   def expireSnapshots(tableDir: String, keepLast: Int): Seq[String] = {
     val recs = GraftLog.records(tableDir)
     if (recs.isEmpty) return Seq.empty
     val keptIds = recs.map(_.snapshotId).sorted.takeRight(keepLast)
-    val reachable = keptIds.flatMap(id => GraftLog.liveFiles(tableDir, Some(id))).toSet
+    val reachable = keptIds.flatMap(id => GraftLog.fold(recs, Some(id)).files).toSet
     val root = Paths.get(tableDir)
-    import scala.jdk.CollectionConverters._
-    val onDisk = Files.walk(root).iterator().asScala
+    val onDisk = Files.list(root).iterator().asScala
+      .filterNot(_.getFileName.toString.startsWith("_"))
+      .flatMap(Files.walk(_).iterator().asScala)
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .map(p => root.relativize(p).toString.replace("\\", "/")).toSeq
+      .map(p => root.relativize(p).toString).toSeq
     val doomed = onDisk.filterNot(reachable)
     doomed.foreach(f => Files.deleteIfExists(root.resolve(f)))
     doomed.sorted
@@ -413,18 +396,10 @@ object LakeOps {
     * zero reads here.
     */
   def fileStats(tableDir: String, column: String): Seq[(String, Option[(Long, Long)])] = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val conf = new Configuration()
     GraftLog.liveFiles(tableDir).map { f =>
-      val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$tableDir/$f"), conf)
-      val reader = ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        val ranges = reader.getFooter.getBlocks.asScala.flatMap { block =>
+      HiveParquetWriter.footer(s"$tableDir/$f") { footer =>
+        val ranges = footer.getBlocks.asScala.flatMap { block =>
           block.getColumns.asScala
             .filter(_.getPath.toDotString == column)
             .flatMap { c =>
@@ -442,7 +417,7 @@ object LakeOps {
         }
         f -> (if (ranges.isEmpty) None
               else Some((ranges.map(_._1).min, ranges.map(_._2).max)))
-      } finally reader.close()
+      }
     }
   }
 
@@ -462,21 +437,17 @@ object LakeOps {
     */
   def readPruned(spark: SparkSession, tableDir: String, column: String,
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.col
     val stats = fileStats(tableDir, column)
     val keep = stats.collect {
       case (f, None) => f
       case (f, Some((mn, mx))) if mx >= lo && mn <= hi => f
     }
     val df =
-      if (stats.isEmpty) spark.emptyDataFrame // empty TABLE: no schema to carry
-      else if (keep.isEmpty)
-        // full prune: an empty frame with the table schema, so the
-        // physical-only contract holds for the empty case too
-        mergedRead(spark, tableDir, stats.map(f => s"$tableDir/${f._1}"))
-          .filter(org.apache.spark.sql.functions.lit(false))
-      else mergedRead(spark, tableDir, keep.map(f => s"$tableDir/$f"))
-        .filter(col(column) >= lo && col(column) <= hi)
+      // full prune: an empty frame with the table schema, so the
+      // physical-only contract holds for the empty case too
+      if (keep.isEmpty) readLive(spark, tableDir, stats.map(_._1))
+        .filter(org.apache.spark.sql.functions.lit(false))
+      else readLive(spark, tableDir, keep).filter(col(column) >= lo && col(column) <= hi)
     (df, keep.size, stats.size)
   }
 }

@@ -50,8 +50,6 @@ trait LakeWriter {
   */
 final class HiveParquetWriter extends LakeWriter {
 
-  private val NullDir = "__HIVE_DEFAULT_PARTITION__"
-
   override def append(df: DataFrame, partitionCols: Seq[String], tableDir: String,
       sources: Seq[String] = Seq.empty): CommitInfo = {
     val published = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
@@ -64,68 +62,77 @@ final class HiveParquetWriter extends LakeWriter {
 
 object HiveParquetWriter {
 
-  private val NullDir = "__HIVE_DEFAULT_PARTITION__"
+  /** Directory name of one partition value, matching the write path
+    * exactly: Spark's partitionBy escapes special characters (/, =, %,
+    * …) via escapePathName, and [[writeFiles]] renames Spark's null dir
+    * to the reference's `name=null` (`String.valueOf(null)`).
+    */
+  private[sink] def renderDir(colName: String, v: Any): String =
+    if (v == null) s"$colName=null"
+    else s"$colName=" + org.apache.spark.sql.catalyst.catalog
+      .ExternalCatalogUtils.escapePathName(v.toString)
+
+  private val SparkNullDir = "=__HIVE_DEFAULT_PARTITION__"
 
   /** Stage + publish data files under `tableDir` (no commit record).
     * Returns (relative path, exact per-file row count) pairs — counts
-    * read from the staged parquet footers, no counting job.
+    * read from the staged parquet footers, no counting job. The
+    * `_staging_*` dir is removed whether the write succeeds or fails.
     */
   private[sink] def writeFiles(
       df: DataFrame, partitionCols: Seq[String], tableDir: String): Seq[(String, Long)] = {
     val dir = Paths.get(tableDir)
     Files.createDirectories(dir)
     val staging = dir.resolve(s"_staging_${java.util.UUID.randomUUID()}")
+    try {
+      val writer =
+        if (partitionCols.nonEmpty)
+          df.repartition(partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
+        else df.write
+      writer.parquet(staging.toString)
 
-    val writer =
-      if (partitionCols.nonEmpty)
-        df.repartition(partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
-      else df.write
-    writer.parquet(staging.toString)
-
-    // Row counts come from the staged files' parquet FOOTERS — exact
-    // (a footer's block row counts are the file's row count), read
-    // driver-side without a Spark job. This replaces the former
-    // df.cache().count() pre-pass, which materialized every append
-    // twice (count + write) and paid one extra job per commit (r17
-    // optimization; a cluster deployment would collect the same counts
-    // from the write tasks' commit messages, which is exactly what
-    // Iceberg's commit protocol does).
-    val staged = Files.walk(staging).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .toSeq
-    val counted = staged.map(p => p -> parquetRowCount(p))
-    val rows = counted.map(_._2).sum
-    if (rows == 0) { // Q10: nothing to publish (an all-empty write may
-      // still stage a 0-row schema file — drop it with the staging dir)
+      // Row counts come from the staged files' parquet FOOTERS — exact
+      // (a footer's block row counts are the file's row count), read
+      // driver-side without a Spark job. This replaces the former
+      // df.cache().count() pre-pass, which materialized every append
+      // twice (count + write) and paid one extra job per commit (r17
+      // optimization; a cluster deployment would collect the same counts
+      // from the write tasks' commit messages, which is exactly what
+      // Iceberg's commit protocol does).
+      val counted = Files.walk(staging).iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+        .toSeq
+        .map(p => p -> footer(p.toString)(_.getBlocks.asScala.map(_.getRowCount).sum))
+      // Q10: nothing to publish (an all-empty write may still stage a
+      // 0-row schema file — it goes with the staging dir)
+      if (counted.map(_._2).sum == 0) Seq.empty
+      else counted.map { case (p, n) =>
+        // publish: move into the table tree, normalizing Spark's
+        // null-partition dir to `name=null` (see renderDir)
+        val rel = staging.relativize(p).toString.replace(SparkNullDir, "=null")
+        val target = dir.resolve(rel)
+        Files.createDirectories(target.getParent)
+        Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
+        (rel, n)
+      }
+    } finally if (Files.exists(staging))
       Files.walk(staging).sorted(Comparator.reverseOrder[Path]())
         .iterator().asScala.foreach(Files.delete)
-      return Seq.empty
-    }
-
-    // Publish: move staged data files into the table tree, normalizing
-    // Spark's null-partition dir to the reference's `name=null`.
-    val published = counted.map { case (p, n) =>
-      val rel = staging.relativize(p).toString.replace(s"=$NullDir", "=null")
-      val target = dir.resolve(rel)
-      Files.createDirectories(target.getParent)
-      Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-      (rel, n)
-    }
-    Files.walk(staging).sorted(Comparator.reverseOrder[Path]())
-      .iterator().asScala.foreach(Files.delete)
-    published
   }
 
   // one shared Configuration: constructing one per file re-parses the
   // Hadoop XML config set (~10 ms) — measurable against a KB footer read
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
-  /** Exact row count of one local parquet file, from its footer. */
-  private def parquetRowCount(p: Path): Long = {
+  /** Apply `f` to the parquet footer of one local file — the one footer
+    * reader of the sink (row counts, schemas, column stats).
+    */
+  private[sink] def footer[A](file: String)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), footerConf)
+      new org.apache.hadoop.fs.Path(Paths.get(file).toUri), footerConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
+    try f(r.getFooter)
     finally r.close()
   }
 }

@@ -612,4 +612,108 @@ class LakeOpsSpec extends SparkSpec {
       LakeOps.fileStats(tdir, "note"))
     assert(err.getMessage.contains("note"))
   }
+
+  test("hostile source names: quote, backslash, newline, tab, glob and non-ASCII stay in the ledger exactly") {
+    val root = Files.createTempDirectory("graft_hostile_").toString
+    val tdir = s"$root/w/t"
+    // a non-ASCII file name needs a JVM whose file-name encoding can
+    // represent it (a UTF-8 locale); the record codec itself is pinned
+    // for non-ASCII independently of the locale by the next spec
+    val nonAscii = "ünïcødé€.json"
+    val names = Seq("we\"ird.json", "back\\slash.json", "new\nline.json",
+      "tab\there.json", "gl*b[1]{x}?.json") ++ Seq(nonAscii).filter(n => java.nio.charset.Charset
+        .forName(System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(n))
+    def offer(): Unit = names.zipWithIndex.foreach { case (n, i) =>
+      writeBatch(root, "c1", n, Seq(i + 1))
+    }
+    offer()
+    val keys = Pipeline.listPending(root, "c1")
+      .map(f => Paths.get(f).toAbsolutePath.normalize.toString).toSet
+    assert(keys.size == names.size)
+    val r = Pipeline.ingest(spark, root, "c1", IngestQueries.fixtureTable, tdir)
+    assert(r.commit.exists(_.rows == names.size))
+    // the commit stays live: nothing quarantined, every row readable
+    assert(GraftLog.records(tdir).map(_.snapshotId) == Seq(1L))
+    assert(!Files.list(GraftLog.logDir(tdir)).iterator().asScala
+      .exists(_.getFileName.toString.endsWith(".corrupt")))
+    assert(LakeOps.readTable(spark, tdir).count() == names.size)
+    assert(GraftLog.committedSources(tdir) == keys)
+    assert(Pipeline.listPending(root, "c1").isEmpty, "sources not deleted")
+    // the same names offered again are fenced by the ledger
+    offer()
+    val again = Pipeline.ingest(spark, root, "c1", IngestQueries.fixtureTable, tdir,
+      deleteSources = false)
+    assert(again.commit.isEmpty && again.sourceFiles.isEmpty)
+    assert(GraftLog.records(tdir).size == 1)
+
+    // a streaming fence key carries the checkpoint path verbatim
+    val table = IngestQueries.fixtureTable
+    writeBatch(root, "c2", "s.json", Seq(11, 12))
+    val batch = Pipeline.decode(spark, table, Pipeline.listPending(root, "c2"))
+    val ckpt = s"$root/ck\"pt-ü€"
+    (1 to 2).foreach(_ => graft.streaming.StreamingIngest.appendBatch(
+      new graft.sink.HiveParquetWriter, batch, table, tdir, ckpt, batchId = 0L))
+    assert(GraftLog.records(tdir).map(_.sources) ==
+      Seq(keys.toSeq.sorted, Seq(s"stream:$ckpt:0")))
+    assert(LakeOps.readTable(spark, tdir).count() == names.size + 2)
+  }
+
+  test("a committed record is the json4s Record: keys in field order, sorted arrays, any string") {
+    val tdir = Files.createTempDirectory("graft_fmt_").toString
+    GraftLog.commit(tdir, "append", 3L, Seq("p=b/y.parquet", "p=a/x.parquet"), Seq("s2", "s1"))
+    assert(Files.readString(GraftLog.logDir(tdir).resolve(f"${1L}%020d.json")) ==
+      """{"snapshotId":1,"op":"append","rows":3,""" +
+        """"files":["p=a/x.parquet","p=b/y.parquet"],"sources":["s1","s2"]}""")
+    val hostile = Seq("q\"uote", "back\\slash", "new\nline", "tab\t", "bell\u0007",
+      "ünïcødé€", "emoji\ud83d\ude00", "slash/and\\back")
+    val rec = GraftLog.commit(tdir, "append", 1L, hostile.map(_ + ".parquet"), hostile)
+    assert(GraftLog.records(tdir).last == rec)
+    assert(rec.sources == hostile.sorted && GraftLog.records(tdir).size == 2)
+    assert(GraftLog.committedSources(tdir) == Set("s1", "s2") ++ hostile)
+  }
+
+  test("expireSnapshots leaves a writer's staged files alone") {
+    import spark.implicits._
+    val tdir = Files.createTempDirectory("graft_exp_stage_").toString + "/t"
+    val w = new graft.sink.HiveParquetWriter
+    w.append(Seq((1L, "1")).toDF("id", "p"), Seq("p"), tdir)
+    w.append(Seq((2L, "1")).toDF("id", "p"), Seq("p"), tdir)
+    LakeOps.compact(spark, tdir)
+    // an append in flight: staged under _staging_*, not yet published
+    val staged = Paths.get(tdir, "_staging_x", "p=1", "part-0.parquet")
+    Files.createDirectories(staged.getParent)
+    Files.writeString(staged, "staged")
+    val deleted = LakeOps.expireSnapshots(tdir, keepLast = 1)
+    assert(deleted.size == 2, s"replaced files not expired: $deleted")
+    assert(Files.exists(staged), "expire swept a staged file")
+    assert(LakeOps.readTable(spark, tdir).count() == 2L)
+  }
+
+  test("an append whose Spark job fails leaves no _staging_ dir behind") {
+    val tdir = Files.createTempDirectory("graft_fail_").toString + "/t"
+    val w = new graft.sink.HiveParquetWriter
+    // a range, not a local Seq: the optimizer would fold raise_error
+    // over a local relation before any job starts
+    val bad = spark.range(4).select(col("id"), (col("id") % 2).cast("string").as("p"),
+      when(col("id") === 3L, raise_error(lit("boom"))).otherwise(lit("v")).as("v"))
+    // unpartitioned, the task fails inside the write job; partitioned,
+    // in the shuffle that feeds it
+    intercept[Exception](w.append(bad, Seq.empty, tdir))
+    intercept[Exception](w.append(bad, Seq("p"), tdir))
+    val left = Files.list(Paths.get(tdir)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("_staging_")).toSeq
+    assert(left.isEmpty, s"staging left behind: $left")
+    assert(GraftLog.records(tdir).isEmpty)
+  }
+
+  test("readTable on a table with no commits is the 0-column empty frame") {
+    val root = Files.createTempDirectory("graft_nocommit_").toString
+    val tdir = s"$root/w/t"
+    // a batch whose every line is malformed commits nothing
+    Files.createDirectories(Paths.get(root, "events", "c1"))
+    Files.writeString(Paths.get(root, "events", "c1", "bad.json"), "{not json\n")
+    assert(Pipeline.ingest(spark, root, "c1", IngestQueries.fixtureTable, tdir).commit.isEmpty)
+    val df = LakeOps.readTable(spark, tdir)
+    assert(df.columns.isEmpty && df.count() == 0L)
+  }
 }
