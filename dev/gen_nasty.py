@@ -6,9 +6,10 @@ blob token. Regenerate with:
 
     python3 dev/gen_nasty.py /tmp/fix_nasty /tmp/fix_emptytok
 
-then drive the WHOLE battery via graft.RunTolerant + selfcheck.py —
-RunTolerant (r16) attempts every declared query and skips the ones the
-fixture's documents-only table set cannot serve, so the doc-only list
+then drive the WHOLE battery via `graft.Verify <dir> <out> --tolerant`
++ selfcheck.py — the tolerant dump (r16) attempts every declared query
+and lists in oracle_sql.json only the ones the fixture's documents-only
+table set can serve, so the doc-only list
 is discovered, never hand-maintained (the r15 hand list silently
 missed the multimodal family). The r15 sweep ran the hand-listed
 doc-only battery over fix_nasty and the tokenizer/paragraph rows over
@@ -17,7 +18,7 @@ ANSI element_at on empty WordPiece segs, q_unigram_encode empty-word
 fallback parity, NormalizeText oracle unicode lower() drift, byte- vs
 codepoint-levenshtein in q_fuzzy_match, and the unbounded deletion-
 variant fan-out on blob tokens (the 24-byte word cap). The r16
-RunTolerant sweep (113 runnable rows per fixture, ALL OK after fixes)
+tolerant sweep (113 runnable rows per fixture, ALL OK after fixes)
 additionally caught: q_mm_meta/q_mm_byte_stats oracles using codepoint
 ascii() where Spark reads UTF-8 bytes (now hex(encode(text))),
 stat.bloomFilter NPE on an empty build side (q_triangles' empty
@@ -70,7 +71,7 @@ def write(rows, outdir):
 #     embeddings.
 #   fix_single — exactly one row per table (windows/stats over n=1).
 #   fix_empty — zero rows per table (schema-only).
-# Drive each through graft.RunTolerant + dev/selfcheck.py.
+# Drive each through `graft.Verify <dir> <out> --tolerant` + dev/selfcheck.py.
 
 import numpy as np
 import pyarrow as pa

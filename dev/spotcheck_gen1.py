@@ -12,7 +12,8 @@ prefilter argued result-invisible) and the 3-step iteration. Since r10
 the edge frame is MATERIALIZED as parquet (GraphQueries.undEdges),
 vocabulary-pair-sized (~2.9M rows at gen-sf1) — small enough for DuckDB
 to consume directly. So this script:
-  1. runs q_triangles + q_pagerank3 via graft.RunOne on the gen corpus
+  1. runs q_triangles + q_pagerank3 via SPARK_GRAFT_ONLY + graft.Verify
+     on the gen corpus
      (which also [re]builds the materialized edge table),
   2. locates the edge table via the same identity key the library uses
      (md5 of "abspath:size:mtime_ms", first 16 hex chars),
@@ -63,11 +64,12 @@ def edge_table_path(gendir):
 
 t0 = time.time()
 subprocess.run(
+    f"SPARK_GRAFT_ONLY=q_triangles,q_pagerank3 "
     f"java {ADDOPENS} -Xmx24g -Dspark.ui.enabled=false "
     f"-Dspark.sql.session.timeZone=UTC "
     f"-Dspark.graft.corpusTableDir={TABLE_DIR} "
     f"-cp '/root/repo/target/scala-2.13/classes:/opt/spark/jars/*' "
-    f"graft.RunOne {GEN} {RUNDIR} q_triangles q_pagerank3",
+    f"graft.Verify {GEN} {RUNDIR}",
     shell=True, check=True)
 spark_sec = time.time() - t0
 

@@ -1,9 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+/** Timing run: each selected query through the noop sink, min of
+  * `SPARK_GRAFT_BENCH_REPS` (default 2) reps plus their spread, as one
+  * JSON line on stdout and in `dev/bench_last.json`. Reads
+  * `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS` and `SPARK_GRAFT_ONLY` (a
+  * subset run); `SPARK_GRAFT_NO_QUIET_WAIT` skips the quiet-window gate.
+  */
 object Bench {
 
-  /** The untimed warm-up, callable from Time (`-w`) so first-execution
-    * charges can be measured under Bench's exact conditions.
+  /** The untimed warm-up Bench runs before timing anything; other dev
+    * tools call it to measure under Bench's exact conditions.
     */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
     try {
@@ -17,9 +24,7 @@ object Bench {
       // full-size queries run sort-merge — warm the SMJ shapes instead.
       val prevBT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try
-        graft.queries.DedupQueries.warmPairs(spark, sfDir, 2000)
-          .write.format("noop").mode("overwrite").save()
+      try Harness.noop(graft.queries.DedupQueries.warmPairs(spark, sfDir, 2000))
       finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBT)
       spark.catalog.clearCache()
       // Touch the events table too (footer read + JSON-path and
@@ -28,19 +33,28 @@ object Bench {
       // k and y MUST be consumed by the aggregate: column pruning would
       // otherwise delete them and the JSON-path/timestamp codegen this
       // exists to warm would never run.
-      Tables(spark, sfDir, "events").limit(20000)
+      Harness.noop(Tables(spark, sfDir, "events").limit(20000)
         .select(col("event_type"), get_json_object(col("props"), "$.k").as("k"),
           year(col("ts")).as("y"))
-        .groupBy("event_type").agg(count(col("k")).as("nk"), count(col("y")).as("ny"))
-        .write.format("noop").mode("overwrite").save()
+        .groupBy("event_type").agg(count(col("k")).as("nk"), count(col("y")).as("ny")))
     } catch { case _: Throwable => () }
   }
 
-  /** 1-minute loadavg, or 0.0 if unreadable. */
-  private def load1: Double =
+  /** The 1/5/15-minute load averages as /proc/loadavg prints them, or
+    * empty if unreadable. */
+  private def loadavg: Seq[String] =
     try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-      .trim.split(" ")(0).toDouble
-    catch { case _: Throwable => 0.0 }
+      .trim.split(" ").take(3).toSeq
+    catch { case _: Throwable => Nil }
+
+  /** 1-minute loadavg, or 0.0 if unreadable. */
+  private def load1: Double = loadavg.headOption.map(_.toDouble).getOrElse(0.0)
+
+  // Quiet-window gate thresholds: CPU busy %, the loadavg fallback's
+  // threshold, and the longest wait in seconds.
+  private val QuietBusyPct = 20.0
+  private val QuietLoad = 1.0
+  private val QuietWaitMaxSec = 300
 
   /** (busy, total) jiffies from /proc/stat's aggregate `cpu` line.
     * iowait counts as IDLE: on this box uninterruptible-I/O tasks hold
@@ -74,7 +88,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val queries = Harness.selected
     // Quiet-window gate (r11 verdict #4, reworked r13 per r12 verdict #5
     // / ADVICE #4): the r10 stream failures and r11's 1.5× inflated
     // official total were both ambient load overlapping the bench.
@@ -86,45 +100,36 @@ object Bench {
     // at loadavg 2-3 with the CPU 93%+ free, so a genuinely quiet run
     // burned the full wait and emitted a spurious warning while r12's
     // driver bench started 15% inflated anyway. Gate on /proc/stat CPU
-    // busy%% instead (iowait = idle), threshold SPARK_GRAFT_QUIET_BUSY_PCT
-    // (default 20); where /proc/stat is unreadable fall back to loadavg
-    // with the threshold knob SPARK_GRAFT_QUIET_LOAD (default 1.0).
-    // SPARK_GRAFT_NO_QUIET_WAIT=1 skips (dev sweeps where ambient load
-    // is the measurement's own context).
+    // busy%% instead (iowait = idle), threshold QuietBusyPct; where
+    // /proc/stat is unreadable fall back to loadavg against QuietLoad.
+    // SPARK_GRAFT_NO_QUIET_WAIT=1 skips (dev sweeps and subset runs where
+    // ambient load is the measurement's own context).
     val loadAtStart = load1
     val busyAtStart = busyPct(1000)
     var quietWaitSec = 1
     var busyAtGate = busyAtStart
     if (!sys.env.contains("SPARK_GRAFT_NO_QUIET_WAIT")) {
-      val maxWait = sys.env.getOrElse("SPARK_GRAFT_QUIET_WAIT_MAX", "300").toInt
       if (busyAtStart >= 0) {
-        val thr = sys.env.getOrElse("SPARK_GRAFT_QUIET_BUSY_PCT", "20").toDouble
-        while (busyAtGate > thr && quietWaitSec < maxWait) {
+        while (busyAtGate > QuietBusyPct && quietWaitSec < QuietWaitMaxSec) {
           Thread.sleep(3000L)
           busyAtGate = busyPct(2000) // fresh 2 s sample, no decay lag
           quietWaitSec += 5
         }
-        if (busyAtGate > thr)
+        if (busyAtGate > QuietBusyPct)
           System.err.println(s"WARN: CPU still ${busyAtGate}%% busy after " +
             s"${quietWaitSec}s quiet wait — timings below may be contention-inflated")
       } else {
-        // non-Linux fallback: the old loadavg gate, threshold now a knob
-        val thr = sys.env.getOrElse("SPARK_GRAFT_QUIET_LOAD", "1.0").toDouble
-        while (load1 >= thr && quietWaitSec < maxWait) {
+        // non-Linux fallback: the old loadavg gate
+        while (load1 >= QuietLoad && quietWaitSec < QuietWaitMaxSec) {
           Thread.sleep(10000L)
           quietWaitSec += 10
         }
-        if (load1 >= thr)
+        if (load1 >= QuietLoad)
           System.err.println(s"WARN: loadavg still ${load1} after ${quietWaitSec}s " +
             "quiet wait — timings below may be contention-inflated")
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus, "WARN")
     // Untimed warm-up: the first Spark job in a fresh JVM pays ~4.6 s of
     // scheduler/parquet/codegen-framework bootstrap regardless of what it
     // computes (measured: first count() of a 5k-row parquet 4.62 s, the
@@ -142,11 +147,6 @@ object Bench {
     // round-3 isolation: r1 charged it to q_minhash_dup, r2 to
     // q_dedup_ngram).
     warmUp(spark, sfDir)
-    // Deterministic (sorted) execution order: Map iteration order changes
-    // as queries are added, which re-assigns residual first-execution JIT
-    // to a different query each round and makes per-query numbers
-    // incomparable round-over-round (dev/PERF_NOTES.md: the r1/r2
-    // "39.6 s" flip between q_minhash_dup and q_dedup_ngram).
     // Ambient-load context: PERF_NOTES documents 1.7–2.9× wall-clock
     // inflation from driver background load at sf0.1, which makes
     // single-run round-over-round comparisons meaningless on their own.
@@ -155,33 +155,14 @@ object Bench {
     // against the machine state it ran under (BENCH_r06 rows were
     // 15–45× off clean steady state with exit loadavg 13.94; the
     // single after-the-fact sample couldn't say when the load arrived).
-    def loadavg: String =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .trim.split(" ").take(3).mkString("[", ",", "]")
-      catch { case _: Throwable => "[]" }
-    val loadBefore = loadavg
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                name: String): Double = {
+    val loadBefore = loadavg.mkString("[", ",", "]")
+    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      // noop sink, not count(): count() lets Catalyst prune projections
-      // and drop final sorts, under-measuring scan/projection-heavy
-      // queries; noop materializes every row of the full plan.
       val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        try { Harness.noop(fn(spark, sfDir)); true }
         catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
-      // isolate queries: drop caches a query persisted so later ones
-      // aren't measured under its memory pressure. clearCache only
-      // covers cache-manager entries — a localCheckpoint's blocks (the
-      // iterative rows' round boundaries, r17/r18) are plain persisted
-      // RDDs the catalog never sees, unreachable after the invocation
-      // returns, and otherwise linger until the ContextCleaner gets to
-      // them mid-measurement. Same isolation intent, same declared
-      // methodology (nothing a later query could reuse is dropped —
-      // every invocation rebuilds its own lineage).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.isolate(spark)
       // a query that throws must not masquerade as a fast success
       if (ok) dt else -1.0
     }
@@ -195,7 +176,7 @@ object Bench {
     // (SPARK_GRAFT_BENCH_REPS=1) for dev scale sweeps where four
     // full-surface runs would otherwise double their wall time.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = queries.map { q =>
       // A rep that throws yields -1; keep every successful rep. A query
       // that succeeds on rep 1 but flakes on rep 2 (OOM under ambient
       // load — the very condition min-of-reps targets) still has a valid
@@ -212,13 +193,13 @@ object Bench {
       // query with at least one SUCCESSFUL rep keeps running its
       // remaining reps so min-of-reps and the flaky counter stay
       // meaningful.
-      val times = Iterator.continually(timeOne(fn, name))
+      val times = Iterator.continually(timeOne(q.query))
         .scanLeft(Seq.empty[Double])(_ :+ _).drop(1)
         .find(ts => ts.size == reps || (ts.size >= 2 && ts.forall(_ < 0))).get
       val good = times.filter(_ >= 0)
       val best = if (good.isEmpty) -1.0 else good.min
       val spread = if (best <= 0) -1.0 else good.max / best
-      (name, best, spread, good.size < times.size && good.nonEmpty)
+      (q.name, best, spread, good.size < times.size && good.nonEmpty)
     }
     // Locale.ROOT: f"$x%.2f" uses the JVM default locale, which under a
     // comma-decimal locale (de_DE…) emits "1,23" — invalid JSON (r7 advice).
@@ -231,7 +212,7 @@ object Bench {
     val failed = results.count(_._2 < 0)
     val flaky = results.count(_._4)
     val total = results.map(_._2).filter(_ >= 0).sum
-    val loadAfter = loadavg
+    val loadAfter = loadavg.mkString("[", ",", "]")
     // Full per-query record, named dicts. The driver's artifact keeps only
     // the LAST ~2000 chars of stdout, which cannot hold 163 full-name
     // entries (~3.6 KB at 3 decimals) — BENCH_r07 lost every per-query

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan (and optionally time)
   * of named queries — the `.explain("formatted")`-and-iterate loop.
   * Usage: Explain <sfDir> <queryName> [queryName...]
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.envCpus, "ERROR")
     args.tail.foreach { name =>
       println(s"\n========== $name ==========")
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -2,7 +2,6 @@ package graft
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.SparkSession
 import org.json4s.DefaultFormats
 import org.json4s.jackson.Serialization
 
@@ -34,15 +33,8 @@ object IngestMain {
     val component = env("GRAFT_COMPONENT_ID")
     val table = TableSpecJson.load(env("GRAFT_TABLE_SPEC"))
     val tableDir = s"${env("GRAFT_WAREHOUSE")}/${table.name}"
-    val cpus = sys.env.getOrElse("GRAFT_CPUS", "4")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("GRAFT_CPUS", "4").toInt, "WARN")
     try {
       sys.env.getOrElse("GRAFT_MODE", "batch") match {
         case "streaming" =>

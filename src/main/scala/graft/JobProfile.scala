@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Dev tool: per-JOB wall-clock breakdown of a named query under the
-  * Bench harness (local[32], 32 shuffle partitions, noop sink). Runs
+  * Bench harness (same session, warm-up, noop sink and isolation). Runs
   * the query `reps` times (first runs warm caches/JIT), then prints the
   * job list of the LAST run with durations — the measure-first view the
   * guide §1 asks for when a row's time is spread over many driver
@@ -15,14 +14,8 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val name = args(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val query = Harness.select(Some(args(2))).head.query
+    val spark = Harness.session(Harness.envCpus, "ERROR")
     Bench.warmUp(spark, sfDir)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
@@ -44,11 +37,10 @@ object JobProfile {
         spark.sparkContext.addSparkListener(listener)
       }
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Harness.noop(query(spark, sfDir))
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"RUN $i%d total=$dt%.2fs")
-      spark.catalog.clearCache()
+      Harness.isolate(spark)
     }
     // let the listener bus drain
     Thread.sleep(1000)
