@@ -64,9 +64,9 @@ object Pipeline {
   def listPending(baseDir: String, componentId: String): Seq[String] = {
     val dir = Paths.get(baseDir, "events", componentId)
     if (!Files.isDirectory(dir)) Seq.empty
-    else Files.list(dir).iterator().asScala
+    else scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".json"))
-      .map(_.toString).toSeq.sorted
+      .map(_.toString).toSeq.sorted)
   }
 
   /** Partition-transform column for a spec entry, *stored value*
@@ -98,13 +98,16 @@ object Pipeline {
     case _ => transformColumn(table, p).cast("string")
   }
 
-  /** Decode pending files and attach the partition path columns. */
-  def decode(spark: SparkSession, table: TableDef, files: Seq[String]): DataFrame = {
-    val decoded = JsonDecode.read(spark, table.schema, files)
+  /** Attach the partition path columns to a decoded frame (batch or
+    * streaming). */
+  def withPathColumns(table: TableDef, decoded: DataFrame): DataFrame =
     table.partitionSpec.foldLeft(decoded) { (df, p) =>
       df.withColumn(p.name, pathColumn(table, p))
     }
-  }
+
+  /** Decode pending files and attach the partition path columns. */
+  def decode(spark: SparkSession, table: TableDef, files: Seq[String]): DataFrame =
+    withPathColumns(table, JsonDecode.read(spark, table.schema, files))
 
   /** Full batch ingest for one component. Exactly-once: sources that
     * already appear in a committed snapshot (crash between commit and

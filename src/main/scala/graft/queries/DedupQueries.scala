@@ -24,12 +24,11 @@ import graft.functions.SimHash64.simHash64
   *    on 8-byte hash-aggregable buffers (`min(string)` would fall back
   *    to SortAggregate — a full sort of the exploded shingle set), and
   *    the pair join shuffles longs, not shingle text;
-  *  - only per-DOC frames (signatures, sorted hash sets — corpus-
-  *    linear) are ever persisted; the quadratic pair stream is never
-  *    materialized;
+  *  - only per-DOC frames (sorted hash sets — corpus-linear) are
+  *    ever persisted; the quadratic pair stream is never materialized;
   *  - exhaustive Jaccard uses prefix+position filtering (PPJoin), so
   *    hot shingles never enter the candidate join; MinHash reduces each
-  *    document to a constant-size signature (8 mins = one aggregation)
+  *    document to a constant-size signature (8 mins, one per-row kernel)
   *    and banding makes the candidate join key selective — the full
   *    Jaccard verify runs only on candidates.
   *
@@ -167,16 +166,6 @@ object DedupQueries {
     graft.functions.ExactMath.divTrunc(a, b) // all callers non-negative
   private def ceilDiv(a: Column, b: Column): Column =
     graft.functions.ExactMath.ceilDiv(a, b)
-
-  /** MinHash permutation family g_i(h) = (a_i·h + b_i) mod p over the
-    * 32-bit md5 prefix. p = 2^31−1 (prime); a_i < 2^30 so a_i·h < 2^62
-    * fits signed 64-bit in BOTH engines. Arbitrary fixed odd constants.
-    */
-  private val MinhashP = 2147483647L
-  private val MinhashA = Seq(529959061L, 726648389L, 171676003L, 913871213L,
-    330279721L, 464937097L, 604389403L, 247615843L)
-  private val MinhashB = Seq(117767609L, 326150957L, 892849843L, 503800931L,
-    78126601L, 645859441L, 287709941L, 735603829L)
 
   /** doc_id + distinct 3-token shingle *text*, exploded. Codegen'd
     * [[graft.functions.Shingles]] — the interpreted HOF form
@@ -363,6 +352,7 @@ object DedupQueries {
     * [[ShSql]]) in scope.
     */
   private[queries] val MinhashCandSql = {
+    import graft.functions.MinHashSig.{MinhashA, MinhashB, MinhashP}
     val sigMins = (0 until 8).map(i =>
       s"min((${MinhashA(i)}*h32 + ${MinhashB(i)}) % $MinhashP) AS h$i").mkString(",\n      |  ")
     s"""h32s AS (SELECT doc_id, ('0x' || substring(md5(s0),1,8))::BIGINT AS h32 FROM sh),
@@ -380,77 +370,38 @@ object DedupQueries {
        |  ON a.band = b.band AND a.k1 = b.k1 AND a.k2 = b.k2 AND a.doc_id < b.doc_id)""".stripMargin
   }
 
-  /** STATELESS per-doc LSH band keys (doc_id, band, k1, k2) — the
-    * SAME MinHash(8) + 4×2-band arithmetic as [[minhashDocCand]]
-    * (identical h32, affine family, grouping of mins into bands; the
-    * per-fixture equality is spec-asserted in StreamingQueriesSpec),
-    * but computed as ONE per-row projection: the signature mins are
-    * array-HOF folds over the doc's own distinct-shingle array, never
-    * a groupBy. That makes the frame legal INSIDE a streaming plan
-    * (no per-doc shuffle agg whose state would grow with the stream) —
-    * stream_neardup_e2e's map stage — and usable in batch wherever the
-    * per-doc agg isn't already paid. Docs too short to shingle (< 3
-    * tokens) are dropped, mirroring the agg path which never sees
-    * them.
+  /** Per-doc LSH band keys (doc_id, band, k1, k2): the MinHash(8)
+    * signature ([[graft.functions.MinHashSig]] over the doc's 3-token
+    * window digests) cut into 4 bands of 2 mins, four rows per doc.
+    * One per-row projection, never a groupBy, so the frame is legal
+    * inside a streaming plan (no per-doc shuffle agg whose state would
+    * grow with the stream) and is the map stage of every near-dup row.
+    * Docs with fewer than 3 tokens (or null text) have no signature
+    * and yield no rows. Every key is bit-identical to the oracle's
+    * [[MinhashCandSql]] `bands`.
     */
   private[graft] def minhashBandKeys(docs: DataFrame): DataFrame = {
-    // r15: per-window md5 u64s computed WITHOUT materializing shingle
-    // strings (ShingleMd5U64 streams each window's tokens into the
-    // digest). All windows instead of distinct ones — the signature
-    // folds are array_min per permutation, for which multiplicity is
-    // irrelevant, so every band key is bit-identical to the r14
-    // distinct-shingle derivation (and to the oracle's).
-    val withSig0 = docs
-      .select(col("doc_id"),
-        graft.functions.Md5Ops.shingleMd5U64s(split(col("text"), " "), 3)
-          .as("hu64s"))
-      .filter(size(col("hu64s")) >= 1)
-      .withColumn("h32s", expr("transform(hu64s, u -> shiftrightunsigned(u, 32))"))
-    val sig = (0 until 8).foldLeft(withSig0) { (df, i) =>
-      df.withColumn(s"h$i", array_min(expr(
-        s"transform(h32s, h -> pmod(h * ${MinhashA(i)} + ${MinhashB(i)}, $MinhashP))")))
-    }
-    val bandArr = array((0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        col(s"h${2 * b}").as("k1"), col(s"h${2 * b + 1}").as("k2"))): _*)
-    sig.select(col("doc_id"), explode(bandArr).as("bk"))
+    val sig = col("sig")
+    docs
+      .select(col("doc_id"), graft.functions.MinHashSig.minHashSig(
+        graft.functions.Md5Ops.shingleMd5U64s(split(col("text"), " "), 3)).as("sig"))
+      // explode(null) emits nothing; a Filter on `sig` would be pushed
+      // below the projection and evaluate the kernel twice
+      .select(col("doc_id"), explode(when(sig.isNotNull, array((0 until 4).map(b =>
+        struct(lit(b).as("band"), sig(2 * b).as("k1"), sig(2 * b + 1).as("k2"))): _*)))
+        .as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"),
         col("bk.k1").as("k1"), col("bk.k2").as("k2"))
   }
 
-  /** The LSH band-candidate pair relation WITHOUT the per-doc hash-set
-    * state — the identical (d1 < d2) band collision set
-    * [[minhashDocCand]]'s self-join produces, for a consumer that needs
-    * only the PAIRS (q_minhash_recall — its exact-verify twin
-    * q_minhash_dup keeps the full agg, whose hash sets it re-reads).
-    * Same explode + groupBy(doc_id) signature pass (md5 digested ONCE
-    * per window in the Generate, the 8 affine mins are codegen'd
-    * HashAggregate state — NOT the per-row array-HOF form, whose 8
-    * min columns each re-inline the digest under CollapseProject and
-    * ran 3× slower, measured r18), but the agg carries only the 8
-    * mins: no collect_list of the whole distinct-shingle set, no
-    * sort_array, no persist (r18; guide §2.3 shuffle fewer bytes /
-    * §2.4 remove passes). Pairs come from ONE further (tiny,
-    * 4-rows-per-doc) shuffle on the band key with the pair fan-out
-    * generated inside each collision bucket — the self-join needed
-    * two reads of the band frame, which is what forced docAgg's
-    * persist in the first place.
+  /** The LSH band-candidate pairs (d1 < d2, distinct) of a band-key
+    * frame: ONE shuffle on the band key (4 small rows per doc), with the
+    * pair fan-out generated inside each collision bucket. A band
+    * self-join would read the band frame twice, which forces either a
+    * persist or a second signature pass.
     */
-  private def minhashCandFromBandKeys(docs: DataFrame): DataFrame = {
-    val sh = docs
-      .select(col("doc_id"),
-        explode(graft.functions.Md5Ops
-          .shingleMd5U64s(split(col("text"), " "), 3, distinct = true)).as("u"))
-      .select(col("doc_id"), shiftrightunsigned(col("u"), 32).as("h32"))
-    val aggs = (0 until 8).map(i =>
-      min(pmod(col("h32") * MinhashA(i) + MinhashB(i), lit(MinhashP))).as(s"h$i"))
-    val mins = sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-    val bandArr = array((0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        col(s"h${2 * b}").as("k1"), col(s"h${2 * b + 1}").as("k2"))): _*)
-    mins.select(col("doc_id"), explode(bandArr).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"),
-        col("bk.k1").as("k1"), col("bk.k2").as("k2"))
+  private[graft] def bandPairs(bandKeys: DataFrame): DataFrame =
+    bandKeys
       .groupBy("band", "k1", "k2")
       .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) >= 2)
@@ -462,54 +413,6 @@ object DedupQueries {
           "y -> named_struct('d1', x, 'd2', y))))")).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
       .distinct()
-  }
-
-  /** Per-doc MinHash state + LSH band candidate pairs, shared by
-    * q_minhash_dup (which exact-verifies the candidates) and
-    * q_minhash_recall (which evaluates candidate coverage against the
-    * exact ground truth). Returns (docAgg, cand): `docAgg` the
-    * persisted-and-eager per-doc frame (8 signature mins + sorted
-    * 60-bit hash set + size — corpus-linear, the safe persist), `cand`
-    * the distinct (d1 < d2) band-collision pairs.
-    */
-  private def minhashDocCand(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // r15: both prefixes from ONE streamed digest u64 (u>>>4 = the
-    // 15-digit h, u>>>32 = the 8-digit h32) — no shingle string, no
-    // hex md5, one digest per DISTINCT window instead of the
-    // md5+2×conv chain (distinct = true preserves r14's set semantics
-    // for hs/n; u64 identity IS the downstream identity).
-    val sh = Tables(s, dir, "documents")
-      .select(col("doc_id"),
-        explode(graft.functions.Md5Ops
-          .shingleMd5U64s(split(col("text"), " "), 3, distinct = true)).as("u"))
-      .select(col("doc_id"),
-        shiftrightunsigned(col("u"), 4).as("h"),
-        shiftrightunsigned(col("u"), 32).as("h32"))
-    val aggs = (0 until 8).map(i =>
-      min(pmod(col("h32") * MinhashA(i) + MinhashB(i), lit(MinhashP))).as(s"h$i")) ++
-      Seq(sort_array(collect_list(col("h"))).as("hs"),
-        count(lit(1)).as("n"))
-    // persisted + eager for the same reason as jaccardPairs: multiple
-    // consumers (band self-join ×2, and in q_minhash_dup the verify ×2)
-    // would each recompute the explode + md5 + affine mins +
-    // aggregation. Per-doc data, corpus-linear.
-    val docAggLazy = sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val docAgg = { docAggLazy.count(); docAggLazy }
-    val bandArr = array((0 until 4).map(b =>
-      struct(lit(b).as("band"),
-        col(s"h${2 * b}").as("k1"), col(s"h${2 * b + 1}").as("k2"))): _*)
-    val bands = docAgg.select(col("doc_id"), explode(bandArr).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"),
-        col("bk.k1").as("k1"), col("bk.k2").as("k2"))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.k1") === col("b.k1") &&
-          col("a.k2") === col("b.k2") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    (docAgg, cand)
-  }
 
   /** Connected components of an undirected pair graph → (doc_id,
     * cluster_id = component min, cluster_size). AQE-style adaptive plan
@@ -1022,25 +925,39 @@ object DedupQueries {
     // compute the SAME mins, banding is only a candidate filter, and
     // the verify below is exact-Jaccard on the full 60-bit sets.
     //
-    // One shuffle does all the per-doc work: a single groupBy(doc_id)
-    // produces the 8 signature mins AND the sorted shingle-hash set
-    // (collect_list) AND the set size. The band self-join yields the
-    // (few) candidate pairs, which then broadcast-join back to the
-    // per-doc sets; exact Jaccard is size(array_intersect) per pair —
-    // per-pair cost on candidates only, never the full pair matrix
-    // (the first cut verified via the FULL shingle self-join and was
-    // slower than exhaustive n-gram Jaccard — LSH must prune work,
-    // not add to it).
+    // The signature is one per-doc kernel ([[minhashBandKeys]]) and the
+    // candidate pairs come from one shuffle on the band key
+    // ([[bandPairs]]). Only docs that appear in a candidate pair get a
+    // verify-side hash set (the 60-bit h = u >>> 4 of each distinct
+    // window digest, sorted, plus its size); no corpus-wide per-doc
+    // frame is built or persisted. Exact Jaccard is
+    // size(array_intersect) per pair — per-pair cost on candidates
+    // only, never the full pair matrix (the first cut verified via the
+    // FULL shingle self-join and was slower than exhaustive n-gram
+    // Jaccard — LSH must prune work, not add to it).
     QueryDef(
       "q_minhash_dup",
       (s: SparkSession, dir: String) => {
-        val (docAgg, cand) = minhashDocCand(s, dir)
-        val x = docAgg.select(col("doc_id").as("d1"), col("hs").as("hs1"), col("n").as("n1"))
-        val y = docAgg.select(col("doc_id").as("d2"), col("hs").as("hs2"), col("n").as("n2"))
+        val docs = Tables(s, dir, "documents")
+        val cand = bandPairs(minhashBandKeys(docs))
+        val candDocs =
+          cand.select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
+        // coalesce: a non-nullable `us` keeps the optimizer from inferring
+        // isnotnull(size(us)) off the Jaccard arithmetic and pushing it
+        // below the semi-join, which would digest the whole corpus again
+        val sets = docs.join(candDocs, Seq("doc_id"), "left_semi")
+          .select(col("doc_id"), graft.functions.Md5Ops.shingleMd5U64s(
+            split(coalesce(col("text"), lit("")), " "), 3, distinct = true).as("us"))
+          .select(col("doc_id"),
+            sort_array(transform(col("us"), u => shiftrightunsigned(u, 4))).as("hs"),
+            size(col("us")).cast("long").as("n"))
+        val x = sets.select(col("doc_id").as("d1"), col("hs").as("hs1"), col("n").as("n1"))
+        val y = sets.select(col("doc_id").as("d2"), col("hs").as("hs2"), col("n").as("n2"))
         // no broadcast hint on cand: the candidate-pair set scales with
         // dup density × corpus (data-dependent — the r7 interval-join
-        // bug class); AQE broadcasts it when it is actually small
-        cand.join(x, "d1").join(y, "d2")
+        // bug class); AQE broadcasts it when it is actually small.
+        // d1/d2 come from the per-doc sides, as in documents' schema.
+        y.join(x.join(cand, "d1"), "d2")
           .select(col("d1"), col("d2"),
             size(array_intersect(col("hs1"), col("hs2"))).cast("long").as("common"),
             col("n1"), col("n2"))
@@ -1060,9 +977,9 @@ object DedupQueries {
     // ------------------------------------------------------------------
     // q_minhash_recall ★ (new r11) — IN-ENGINE dedup-candidate
     // evaluation: recall of the MinHash(8)+LSH(4×2) band-candidate
-    // generator (q_minhash_dup's candidate relation, derived here via
-    // the stateless-output [[minhashCandFromBandKeys]] — identical
-    // pair set, see its note) against the EXACT ≥0.6-Jaccard ground truth
+    // generator (q_minhash_dup's candidate relation, the same
+    // [[bandPairs]] over [[minhashBandKeys]]) against the EXACT
+    // ≥0.6-Jaccard ground truth
     // (the SHARED [[jacPairTable]] — q_dedup_ngram's own pair
     // relation), bucketed by true Jaccard band (jac_e4 div 1000: 6..10).
     // This is q_ann_recall's twin for the dedup family — the curve a
@@ -1076,8 +993,8 @@ object DedupQueries {
     // new float decision (intersection counts and the half-up e4 ratio
     // are exact integers on both engines).
     // Scale plan: `truth` is the per-corpus materialized pair table
-    // (dup-pair-sized, always ≪ corpus); `cand` the band equi-join
-    // (the same plan q_minhash_dup runs); the join keys are (d1, d2)
+    // (dup-pair-sized, always ≪ corpus); `cand` the in-bucket pair
+    // fan-out (the same plan q_minhash_dup runs); the join keys are (d1, d2)
     // pairs so the shuffle is candidate+truth-pair-sized.
     // Measured operating points: on the driver corpus (sf0.1) every
     // true pair lands in bands 8-10 (it separates: planted dups ≥0.8,
@@ -1094,11 +1011,7 @@ object DedupQueries {
       "q_minhash_recall",
       (s: SparkSession, dir: String) => {
         val truth = jacPairTable(s, dir)
-        // r18: the pair set without the per-doc hash-set state — same
-        // collision relation as minhashDocCand's self-join (which
-        // q_minhash_dup keeps for its hash-set verify), without the
-        // collect_list agg + persist this query never read
-        val cand = minhashCandFromBandKeys(Tables(s, dir, "documents"))
+        val cand = bandPairs(minhashBandKeys(Tables(s, dir, "documents")))
         truth.join(cand.withColumn("hit", lit(1L)), Seq("d1", "d2"), "left")
           .groupBy(floorDiv(col("jac_e4"), lit(1000L)).as("jac_band"))
           .agg(count(lit(1)).as("n_true"),

@@ -190,9 +190,17 @@ object StreamingQueries {
         sum(when(col("z") >= 0, 1L).otherwise(0L)).as("n_keep"),
         sum("z").as("score_sum_e6"))
 
+  /** Per-band-bucket (owner = MIN(doc_id), n_docs) aggregate of a
+    * band-key frame — the one bucket table of the near-dup rows: the
+    * running stream aggregate, each flush phase's, the empty-corpus
+    * fallback and each staged micro-batch delta. */
+  private def bandBuckets(bandKeys: DataFrame): DataFrame =
+    bandKeys.groupBy("band", "k1", "k2")
+      .agg(min("doc_id").as("owner"), count(lit(1)).as("n_docs"))
+
   /** Streaming NEAR-dup index build: the stateless per-doc MinHash
-    * band-key projection ([[DedupQueries.minhashBandKeys]] — signature
-    * mins are array folds over each doc's own shingles, so the map
+    * band-key projection ([[DedupQueries.minhashBandKeys]] — one
+    * per-row signature kernel over each doc's own windows, so the map
     * stage carries NO state) feeding a per-band-bucket running
     * (owner = min doc_id, n_docs) aggregate. State is one row per
     * DISTINCT band bucket — corpus-linear, not horizon-bounded: a
@@ -204,9 +212,7 @@ object StreamingQueries {
     * operator semantics.
     */
   private def neardupTopo(s: SparkSession, dir: String): DataFrame =
-    DedupQueries.minhashBandKeys(docsStream(s, dir))
-      .groupBy("band", "k1", "k2")
-      .agg(min("doc_id").as("owner"), count(lit(1)).as("n_docs"))
+    bandBuckets(DedupQueries.minhashBandKeys(docsStream(s, dir)))
 
   /** The periodic-flush row's IN-STREAM topology: the stateless per-doc
     * band projection alone — all aggregation is delegated to the
@@ -279,7 +285,6 @@ object StreamingQueries {
     */
   private[graft] def neardupFlushRun(s: SparkSession, dir: String)
       : (DataFrame, Seq[Long]) = {
-    import graft.sink.{HiveParquetWriter, LakeOps}
     val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ndflush_")
     val root = tmpRoot.toString
     val tableDir = s"$root/warehouse/neardupindex"
@@ -304,9 +309,10 @@ object StreamingQueries {
       val bytes =
         try {
           if (java.nio.file.Files.isRegularFile(p)) java.nio.file.Files.size(p)
-          else java.nio.file.Files.list(p).mapToLong(f =>
-            try java.nio.file.Files.size(f) catch { case _: Throwable => 0L })
-            .sum()
+          else scala.util.Using.resource(java.nio.file.Files.list(p))(
+            _.mapToLong(f =>
+              try java.nio.file.Files.size(f) catch { case _: Throwable => 0L })
+              .sum())
         } catch { case _: Throwable => 0L }
       math.max(1L, bytes / 2 / (64L << 20) + 1L).toInt
     }
@@ -320,10 +326,8 @@ object StreamingQueries {
       if (empty) { stateRows += 0L; return }
       val phaseDir = s"$root/in/p$n"
       docs.filter(pred).coalesce(nPhaseFiles).write.parquet(phaseDir)
-      val topo = DedupQueries.minhashBandKeys(
-          s.readStream.schema(schema).parquet(phaseDir))
-        .groupBy("band", "k1", "k2")
-        .agg(min("doc_id").as("owner"), count(lit(1)).as("n_docs"))
+      val topo = bandBuckets(DedupQueries.minhashBandKeys(
+        s.readStream.schema(schema).parquet(phaseDir)))
       val sink = s"graft_ndflush_p$n"
       s.catalog.dropTempView(sink)
       val prev = s.conf.get("spark.sql.shuffle.partitions")
@@ -336,43 +340,13 @@ object StreamingQueries {
           .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
           .map(_.numRowsTotal).maxOption.getOrElse(0L)
       } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      val buckets = s.table(sink)
-        .withColumn("pb", col("band").cast("string"))
-      if (!indexHasData) {
-        new HiveParquetWriter().append(buckets, Seq("pb"), tableDir); ()
-      } else {
-        val atRest = LakeOps.readTable(s, tableDir)
-        require(atRest.inputFiles.nonEmpty &&
-          atRest.inputFiles.forall(_.contains("neardupindex")),
-          "flush merge must probe the at-rest lake index")
-        val old = atRest.select(col("band"), col("k1"), col("k2"),
-          col("owner").as("o0"), col("n_docs").as("n0"))
-        val combined = buckets.join(old, Seq("band", "k1", "k2"), "left")
-          .select(col("band"), col("k1"), col("k2"),
-            least(col("owner"), coalesce(col("o0"), lit(Long.MaxValue)))
-              .as("owner"),
-            (col("n_docs") + coalesce(col("n0"), lit(0L))).as("n_docs"),
-            col("pb"))
-        LakeOps.upsert(s, tableDir, combined,
-          Seq("band", "k1", "k2"), Seq("pb")); ()
-      }
-      indexHasData = true
+      indexHasData = mergeIntoIndex(s, tableDir, s.table(sink), indexHasData)
     }
     try {
       phase(1, col("doc_id") < t, nDocs == 0L || minId >= t)
       phase(2, col("doc_id") >= t, nDocs == 0L || maxId < t)
-      val index = if (indexHasData) {
-        val idx = LakeOps.readTable(s, tableDir)
-          .select(col("band"), col("k1"), col("k2"),
-            col("owner"), col("n_docs"))
-        require(idx.inputFiles.nonEmpty &&
-          idx.inputFiles.forall(_.contains("neardupindex")),
-          "verdict must be read off the flushed lake index")
-        idx
-      } else // empty corpus: batch-derive the (empty) bucket shape
-        DedupQueries.minhashBandKeys(docs).groupBy("band", "k1", "k2")
-          .agg(min("doc_id").as("owner"), count(lit(1)).as("n_docs"))
-      val verdict = neardupVerdict(DedupQueries.minhashBandKeys(docs), index)
+      val verdict = neardupVerdict(DedupQueries.minhashBandKeys(docs),
+        verdictIndex(s, tableDir, indexHasData, docs))
       // Materialize the verdict as a DISTRIBUTED parquet write into the
       // session-scoped verdict store (never a driver collect — the
       // verdict is corpus-sized, 4 longs per doc; r15 verdict #1), then
@@ -432,7 +406,6 @@ object StreamingQueries {
   private[graft] def neardupPeriodicRun(s: SparkSession, dir: String,
       everyN: Int = 2, nSplits: Int = 4)
       : (DataFrame, Seq[(Long, Long)], Long) = {
-    import graft.sink.LakeOps
     val tmpRoot = java.nio.file.Files.createTempDirectory("graft_ndperiodic_")
     val root = tmpRoot.toString
     val tableDir = s"$root/warehouse/neardupindex"
@@ -483,18 +456,8 @@ object StreamingQueries {
       val peakState = q.recentProgress.toSeq
         .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
         .map(_.numRowsTotal).maxOption.getOrElse(0L)
-      val index = if (indexHasData.get()) {
-        val idx = LakeOps.readTable(s, tableDir)
-          .select(col("band"), col("k1"), col("k2"),
-            col("owner"), col("n_docs"))
-        require(idx.inputFiles.nonEmpty &&
-          idx.inputFiles.forall(_.contains("neardupindex")),
-          "verdict must be read off the flushed lake index")
-        idx
-      } else // empty corpus: batch-derive the (empty) bucket shape
-        DedupQueries.minhashBandKeys(docs).groupBy("band", "k1", "k2")
-          .agg(min("doc_id").as("owner"), count(lit(1)).as("n_docs"))
-      val verdict = neardupVerdict(DedupQueries.minhashBandKeys(docs), index)
+      val verdict = neardupVerdict(DedupQueries.minhashBandKeys(docs),
+        verdictIndex(s, tableDir, indexHasData.get(), docs))
       val outDir = s"$verdictStore/periodic"
       verdict.write.mode("overwrite").parquet(outDir)
       import scala.jdk.CollectionConverters._
@@ -518,10 +481,8 @@ object StreamingQueries {
     if (b.isEmpty) return 0L
     if (GraftLog.committedSources(stagingDir).contains(fenceKey) ||
       GraftLog.committedSources(tableDir).contains(fenceKey)) return 0L
-    val delta = b.groupBy("band", "k1", "k2")
-      .agg(min("doc_id").as("owner"), count(lit(1)).as("n_docs"))
     new HiveParquetWriter()
-      .append(delta, Seq.empty, stagingDir, sources = Seq(fenceKey)).rows
+      .append(bandBuckets(b), Seq.empty, stagingDir, sources = Seq(fenceKey)).rows
   }
 
   /** Flush for [[neardupPeriodicRun]]: combine the staged per-batch
@@ -536,36 +497,66 @@ object StreamingQueries {
     */
   private[graft] def flushStagedDeltas(s: SparkSession, stagingDir: String,
       tableDir: String, indexHasData: Boolean): (Boolean, Long) = {
-    import graft.sink.{GraftLog, HiveParquetWriter, LakeOps}
+    import graft.sink.GraftLog
     val stagedKeys = GraftLog.committedSources(stagingDir).toSeq.sorted
     val staged = s.read.parquet(stagingDir)
     val nStaged = staged.count()
     val delta = staged.groupBy("band", "k1", "k2")
       .agg(min("owner").as("owner"), sum("n_docs").as("n_docs"))
-      .withColumn("pb", col("band").cast("string"))
-    val hasData = if (!indexHasData) {
+    val hasData = mergeIntoIndex(s, tableDir, delta, indexHasData, stagedKeys)
+    deleteTree(java.nio.file.Paths.get(stagingDir)) // flushed → gone
+    (hasData, nStaged)
+  }
+
+  /** MERGE a bucket delta (band, k1, k2, owner, n_docs) into the
+    * partitioned at-rest index: until the index has data the delta is
+    * appended; after that owner = MIN / n_docs = SUM combine with the
+    * touched keys' at-rest rows in a copy-on-write upsert (O(delta +
+    * touched keys), nothing old×old re-runs). `sources` become the
+    * commit's ledger keys. Returns whether the index now has data.
+    */
+  private def mergeIntoIndex(s: SparkSession, tableDir: String,
+      delta: DataFrame, indexHasData: Boolean,
+      sources: Seq[String] = Seq.empty): Boolean = {
+    import graft.sink.{HiveParquetWriter, LakeOps}
+    val keyed = delta.withColumn("pb", col("band").cast("string"))
+    if (!indexHasData)
       new HiveParquetWriter()
-        .append(delta, Seq("pb"), tableDir, sources = stagedKeys).rows > 0
-    } else {
-      val atRest = LakeOps.readTable(s, tableDir)
-      require(atRest.inputFiles.nonEmpty &&
-        atRest.inputFiles.forall(_.contains("neardupindex")),
-        "periodic flush must merge into the at-rest lake index")
-      val old = atRest.select(col("band"), col("k1"), col("k2"),
-        col("owner").as("o0"), col("n_docs").as("n0"))
-      val combined = delta.join(old, Seq("band", "k1", "k2"), "left")
+        .append(keyed, Seq("pb"), tableDir, sources = sources).rows > 0
+    else {
+      val old = atRestIndex(s, tableDir).select(col("band"), col("k1"),
+        col("k2"), col("owner").as("o0"), col("n_docs").as("n0"))
+      val combined = keyed.join(old, Seq("band", "k1", "k2"), "left")
         .select(col("band"), col("k1"), col("k2"),
           least(col("owner"), coalesce(col("o0"), lit(Long.MaxValue)))
             .as("owner"),
           (col("n_docs") + coalesce(col("n0"), lit(0L))).as("n_docs"),
           col("pb"))
       LakeOps.upsert(s, tableDir, combined,
-        Seq("band", "k1", "k2"), Seq("pb"), sources = stagedKeys)
+        Seq("band", "k1", "k2"), Seq("pb"), sources = sources)
       true
     }
-    deleteTree(java.nio.file.Paths.get(stagingDir)) // flushed → gone
-    (hasData, nStaged)
   }
+
+  /** The near-dup index as stored, require()d to come off the
+    * `neardupindex` lake files: merges probe it and verdicts read it,
+    * never a recomputed bucket table. */
+  private def atRestIndex(s: SparkSession, tableDir: String): DataFrame = {
+    val idx = graft.sink.LakeOps.readTable(s, tableDir)
+      .select(col("band"), col("k1"), col("k2"), col("owner"), col("n_docs"))
+    require(idx.inputFiles.nonEmpty &&
+      idx.inputFiles.forall(_.contains("neardupindex")),
+      "the near-dup index must be read off the at-rest lake files")
+    idx
+  }
+
+  /** The bucket table a flush row's verdict reads: the at-rest index,
+    * or, when no flush committed data (every doc too short to shingle,
+    * or no docs), the batch-derived empty bucket shape. */
+  private def verdictIndex(s: SparkSession, tableDir: String,
+      indexHasData: Boolean, docs: DataFrame): DataFrame =
+    if (indexHasData) atRestIndex(s, tableDir)
+    else bandBuckets(DedupQueries.minhashBandKeys(docs))
 
   private def deleteTree(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
@@ -704,7 +695,7 @@ object StreamingQueries {
     // stream_neardup_e2e ★ (new r14) — NEAR-duplicate detection as a
     // stream: stream_dedup_e2e generalized from exact keys to MinHash
     // LSH bands. The map stage is the STATELESS per-doc band-key
-    // projection (signature mins as array folds — see
+    // projection (one per-row signature kernel — see
     // [[DedupQueries.minhashBandKeys]]; no per-doc shuffle agg inside
     // the stream), feeding a per-band-bucket running
     // (owner = MIN(doc_id), n_docs) aggregate drained in complete

@@ -56,9 +56,9 @@ object GraftLog {
   def records(tableDir: String): Seq[Record] = {
     val dir = logDir(tableDir)
     if (!Files.isDirectory(dir)) return Seq.empty
-    Files.list(dir).iterator().asScala
+    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
       .filter(_.getFileName.toString.endsWith(".json"))
-      .toSeq.sortBy(_.getFileName.toString)
+      .toSeq.sortBy(_.getFileName.toString))
       .flatMap { p =>
         // A truncated/garbled record (torn write by a foreign or crashed
         // writer — our own commits are atomic renames and can't tear)

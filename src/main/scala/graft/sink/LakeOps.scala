@@ -377,11 +377,11 @@ object LakeOps {
     val keptIds = recs.map(_.snapshotId).sorted.takeRight(keepLast)
     val reachable = keptIds.flatMap(id => GraftLog.fold(recs, Some(id)).files).toSet
     val root = Paths.get(tableDir)
-    val onDisk = Files.list(root).iterator().asScala
+    val onDisk = scala.util.Using.resource(Files.list(root))(_.iterator().asScala
       .filterNot(_.getFileName.toString.startsWith("_"))
       .flatMap(Files.walk(_).iterator().asScala)
       .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .map(p => root.relativize(p).toString).toSeq
+      .map(p => root.relativize(p).toString).toSeq)
     val doomed = onDisk.filterNot(reachable)
     doomed.foreach(f => Files.deleteIfExists(root.resolve(f)))
     doomed.sorted

@@ -39,11 +39,8 @@ object StreamingIngest {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .option("cleanSource", if (cleanSource) "delete" else "off")
       .json(s"$baseDir/events/$componentId")
-    // Same top-level TIME/TIMESTAMP coercion as the batch read.
-    val coerced = JsonDecode.decodeRaw(raw, table.schema)
-    table.partitionSpec.foldLeft(coerced) { (df, p) =>
-      df.withColumn(p.name, Pipeline.pathColumn(table, p))
-    }
+    // Same TIME/TIMESTAMP coercion (at any depth) as the batch read.
+    Pipeline.withPathColumns(table, JsonDecode.decodeRaw(raw, table.schema))
   }
 
   /** Idempotent micro-batch append: `foreachBatch` is at-least-once (a

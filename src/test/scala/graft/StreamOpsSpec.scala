@@ -352,6 +352,25 @@ class StreamOpsSpec extends SparkSpec {
     assert(verdict.collect().map(_.toSeq).toSeq == oneShot)
   }
 
+  test("neardup flush: a first half with no shingleable doc flushes nothing " +
+      "and the second half still builds the index") {
+    import spark.implicits._
+    import graft.queries.StreamingQueries
+    val root = java.nio.file.Files.createTempDirectory("graft_ndshort_")
+    // ids 0-3 (phase 1) all have < 3 tokens: their bucket table is empty
+    Seq((0L, "short doc"), (1L, "x y"), (2L, "tiny"), (3L, "a b"),
+      (4L, "the quick brown fox jumps over"), (5L, "the quick brown fox jumps over"),
+      (6L, "lazy dog sleeps all day long"), (7L, "something else entirely here now"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$root/documents.parquet")
+    val (flushed, stateRows) = StreamingQueries.neardupFlushRun(spark, root.toString)
+    val got = flushed.as[(Long, Long, Long, Long)].collect().toSeq
+    // 4 docs x 4 bands, docs 4 and 5 share all four buckets
+    assert(stateRows == Seq(0L, 12L), s"per-phase state $stateRows")
+    assert(got == StreamingQueries.neardupPeriodicRun(spark, root.toString)._1
+      .as[(Long, Long, Long, Long)].collect().toSeq)
+    assert(got.map(r => r._1 -> r._4) == Seq(4L -> 0L, 5L -> 1L, 6L -> 0L, 7L -> 0L))
+  }
+
   test("periodic staging append is replay-fenced: a crash-replayed " +
       "micro-batch cannot double-count, before OR after a flush (r17)") {
     import graft.queries.{DedupQueries, StreamingQueries}

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.queries.StreamingQueries
+import graft.queries.{DedupQueries, StreamingQueries}
 
 /** The declared streaming rows (`stream_tumbling_e2e` /
   * `stream_session_e2e`) checked against an independent BATCH
@@ -112,6 +112,30 @@ class StreamingQueriesSpec extends SparkSpec {
     }
     val docBands = corpus.flatMap { case (id, t) =>
       bandsOf(t).map { case (b, k1, k2) => (id, b, k1, k2) } }
+    // the signature kernel's band keys == the replica, doc by doc
+    val docs = Tables(spark, sfDir, "documents")
+    val keys = DedupQueries.minhashBandKeys(docs)
+      .as[(Long, Int, Long, Long)].collect().toSeq
+    assert(keys.sorted == docBands.sorted)
+    // the one pair builder == the driver-side band-collision pairs
+    val wantPairs = docBands.groupBy(r => (r._2, r._3, r._4)).values
+      .flatMap { rows =>
+        val ids = rows.map(_._1).distinct.sorted
+        for (i <- ids; j <- ids if i < j) yield (i, j)
+      }.toSet
+    val gotPairs = DedupQueries.bandPairs(DedupQueries.minhashBandKeys(docs))
+      .as[(Long, Long)].collect().toSeq
+    assert(wantPairs.nonEmpty && gotPairs.size == wantPairs.size &&
+      gotPairs.toSet == wantPairs)
+    // edge docs: 2 tokens and null text give no rows; repeated windows
+    // sign like the same windows once each
+    val edge = Seq((1L, "two tokens"), (2L, null: String),
+      (3L, "a b c a b c a b c"), (4L, "a b c a b")).toDF("doc_id", "text")
+    val edgeKeys = DedupQueries.minhashBandKeys(edge)
+      .as[(Long, Int, Long, Long)].collect().toSeq
+      .groupBy(_._1).map { case (id, rows) => id -> rows.map(r => (r._2, r._3, r._4)).sorted }
+    assert(edgeKeys.keySet == Set(3L, 4L))
+    assert(edgeKeys(3L) == edgeKeys(4L) && edgeKeys(4L) == bandsOf("a b c a b"))
     val owners = docBands.groupBy(r => (r._2, r._3, r._4))
       .map { case (k, rows) => k -> (rows.map(_._1).min, rows.size.toLong) }
     val want = docBands.groupBy(_._1).toSeq.map { case (id, rows) =>
