@@ -1,7 +1,9 @@
 #!/bin/bash
-# Dev helper: run graft.Verify directly (no sbt startup cost).
+# Dev helper: run graft.Verify directly (no sbt startup cost) on the classes
+# of the checkout this script lives in.
 # Usage: dev/run_verify.sh [sfdir] [outdir]
 set -e
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
@@ -15,5 +17,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADDOPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT"

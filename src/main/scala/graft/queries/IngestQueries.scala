@@ -96,10 +96,11 @@ object IngestQueries {
 
   /** Read-back projection shared by the batch and streaming e2e rows —
     * same 17 scalar columns, same total order, so both pipelines are
-    * held to the IDENTICAL golden oracle.
+    * held to the IDENTICAL golden oracle. Reads the live set through the
+    * commit log, as every lake read must.
     */
   private def readBack(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(tableDir)
+    graft.sink.LakeOps.readTable(spark, tableDir)
       .select(col("id"), col("event_date"), col("event_time"), col("user_id"),
         col("category"), col("amount"), col("score"), col("ratio"), col("count"),
         col("flag"), col("payload.a").as("payload_a"), col("payload.b").as("payload_b"),

@@ -3,6 +3,7 @@ package graft.sink
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s.DefaultFormats
 import org.json4s.jackson.{JsonMethods, Serialization}
 
@@ -28,6 +29,13 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   * (`_staging_*` is an append in flight); data files live only under
   * the partition directories.
   *
+  * `schema` is the table's data schema after the commit (non-partition
+  * columns, Spark's `StructType.json`), kept in the log as Iceberg keeps
+  * it in table metadata, so readers infer nothing. Legacy rule: a record
+  * without it (json4s omits `None`, so the bytes are the older format's)
+  * leaves any fold over it schema-less; readers then infer the union
+  * from the files, and commits on top of it stay schema-less.
+  *
   * The live file set of a snapshot is the fold of operations up to it
   * ([[fold]]); readers must resolve through the log (never the
   * directory listing — files replaced by a rewrite remain on disk until
@@ -42,12 +50,21 @@ object GraftLog {
 
   final case class Record(
       snapshotId: Long, op: String, rows: Long,
-      files: Seq[String], sources: Seq[String])
+      files: Seq[String], sources: Seq[String], schema: Option[String])
 
   /** What a prefix of the log folds to: its newest snapshot id (0 for
-    * an empty prefix), the live files and the live rows.
+    * an empty prefix), the live files, the live rows and the table's
+    * data schema (`None` once a legacy record is folded in).
     */
-  final case class Live(snapshotId: Long, files: Vector[String], rows: Long)
+  final case class Live(snapshotId: Long, files: Vector[String], rows: Long,
+      schemaJson: Option[String]) {
+    lazy val schema: Option[StructType] = schemaJson.map(parseSchema)
+  }
+
+  private val EmptySchema = new StructType().json
+
+  private def parseSchema(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
 
   private implicit val formats: DefaultFormats.type = DefaultFormats
 
@@ -85,15 +102,17 @@ object GraftLog {
   /** Fold `recs` up to `upTo` (all when None) in snapshot order.
     * `rewrite`/`overwrite`/`delete` records carry the FULL live set
     * (their files and rows replace the fold); appends and unknown ops
-    * carry a delta.
+    * carry a delta. Every record carries the whole table schema, so the
+    * fold's is the last record's — or `None` if any record lacks one.
     */
   def fold(recs: Seq[Record], upTo: Option[Long] = None): Live =
     recs.iterator.filter(r => upTo.forall(r.snapshotId <= _))
-      .foldLeft(Live(0L, Vector.empty, 0L)) { (live, r) =>
+      .foldLeft(Live(0L, Vector.empty, 0L, Some(EmptySchema))) { (live, r) =>
         val id = live.snapshotId max r.snapshotId
+        val schema = live.schemaJson.flatMap(_ => r.schema)
         r.op match {
-          case "rewrite" | "overwrite" | "delete" => Live(id, r.files.toVector, r.rows)
-          case _ => Live(id, live.files ++ r.files, live.rows + r.rows)
+          case "rewrite" | "overwrite" | "delete" => Live(id, r.files.toVector, r.rows, schema)
+          case _ => Live(id, live.files ++ r.files, live.rows + r.rows, schema)
         }
       }
 
@@ -116,13 +135,24 @@ object GraftLog {
     * an unlocked read-modify-write id allocation plus a non-atomic
     * `Files.writeString`, so two writers could allocate the same id and
     * silently overwrite each other's commit, and a crash mid-write left
-    * truncated JSON that poisoned every later read).
+    * truncated JSON that poisoned every later read). The record's schema
+    * is the claimed base's widened by `dataSchema`, the written data's.
     */
   def commit(tableDir: String, op: String, rows: Long,
-      files: Seq[String], sources: Seq[String]): Record =
+      files: Seq[String], sources: Seq[String],
+      dataSchema: Option[StructType] = None): Record =
     claim(tableDir) { recs =>
-      Record(fold(recs).snapshotId + 1L, op, rows, files.sorted, sources.sorted)
+      val base = fold(recs)
+      Record(base.snapshotId + 1L, op, rows, files.sorted, sources.sorted,
+        widen(base.schema, dataSchema).map(_.json))
     }
+
+  /** ADD-COLUMN evolution: `base`'s fields in order, then the fields of
+    * `data` it lacks — or `None` (a legacy record) when either is.
+    */
+  private[sink] def widen(base: Option[StructType], data: Option[StructType]): Option[StructType] =
+    for (b <- base; d <- data)
+      yield StructType(b.fields ++ d.fields.filterNot(f => b.fieldNames.contains(f.name)))
 
   /** Commit a live-set-REPLACING record (`rewrite`/`overwrite`/
     * `delete`) VALIDATED against the base snapshot the operation
@@ -132,6 +162,9 @@ object GraftLog {
     * then its record REPLACES the fold, silently dropping the
     * concurrently-appended files from the live set (a lost update the
     * r6 two-session race test pins).
+    *
+    * `schema` is the new table schema as planned from the base; the
+    * schemas of carried appends are unioned into it.
     *
     * If commits landed past `baseId`:
     *  - concurrent APPENDS are carried into the new live set when
@@ -145,7 +178,7 @@ object GraftLog {
     */
   def commitReplacing(tableDir: String, op: String, rows: Long,
       files: Seq[String], sources: Seq[String], baseId: Long,
-      carryAppends: Boolean): Record =
+      carryAppends: Boolean, schema: Option[StructType] = None): Record =
     claim(tableDir) { recs =>
       val newer = recs.filter(_.snapshotId > baseId)
       if (newer.exists(_.op != "append"))
@@ -156,8 +189,9 @@ object GraftLog {
         throw new java.util.ConcurrentModificationException(
           s"$op on $tableDir planned from snapshot $baseId but appends " +
             s"landed after it; re-read and re-run")
+      val widened = newer.foldLeft(schema)((s, r) => widen(s, r.schema.map(parseSchema)))
       Record(fold(recs).snapshotId + 1L, op, rows + newer.map(_.rows).sum,
-        (files ++ newer.flatMap(_.files)).sorted, sources.sorted)
+        (files ++ newer.flatMap(_.files)).sorted, sources.sorted, widened.map(_.json))
     }
 
   /** The optimistic-commit loop: plan a record from a fresh read of the

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Table maintenance + snapshot reads over the commit log — the lake
   * operations an Iceberg user relies on, re-expressed over the
@@ -22,85 +23,45 @@ import org.apache.spark.sql.functions.col
   */
 object LakeOps {
 
-  /** Read live files (paths relative to `tableDir`) with ADD-COLUMN
-    * schema-evolution support, the shape every lake read here uses.
-    * basePath keeps Hive partition columns when reading explicit files.
+  /** Read live files (paths relative to `tableDir`) with the snapshot's
+    * data schema from the log — no footer read and no inference job;
+    * a file written before an ADD-COLUMN reads the column as null.
+    * basePath keeps Hive partition columns, inferred from the paths,
+    * when reading explicit files. A log holding a legacy record (no
+    * schema) falls back to Spark's own union-of-footers inference.
     *
     * A full-table DELETE (or a table with no commits) legitimately
-    * leaves zero files; parquet() with no paths cannot infer a schema,
-    * so the empty table surfaces as a 0-column empty frame
-    * (count/isEmpty work; a schema-carrying log — real Iceberg — would
-    * keep the columns).
-    *
-    * `mergeSchema=true` is the
-    * semantic contract (a snapshot's schema is the union of its files'
-    * schemas) — but Spark implements it as `mergeSchemasInParallel`, a
-    * full Spark JOB over the footers launched during ANALYSIS of every
-    * such read (plus one Hadoop-conf gzip per closure), even for a
-    * 2-file table. Profiled r18 (jstack of the flush row's driver):
-    * those analysis jobs were a visible slice of every lake scenario.
-    * The footers are KB-sized LOCAL files, so decide driver-side
-    * instead: when every live footer declares the SAME schema (every
-    * read outside the schema-evolution scenarios), a plain read —
-    * whose data schema Spark infers from one footer, driver-side, no
-    * job — is byte-identical to the merged read; only genuinely mixed
-    * footer sets pay the mergeSchema job. Iceberg proper resolves this
-    * from table metadata in O(1); this is the emulation's equivalent.
+    * leaves zero files; that empty table surfaces as a 0-column empty
+    * frame (count/isEmpty work).
     */
   private def readLive(spark: SparkSession, tableDir: String,
-      files: Seq[String]): DataFrame =
+      files: Seq[String], schema: Option[StructType]): DataFrame =
     if (files.isEmpty) spark.emptyDataFrame
     else {
-      val absFiles = files.map(f => s"$tableDir/$f")
       val base = spark.read.option("basePath", tableDir)
-      if (footersAgree(absFiles)) base.parquet(absFiles: _*)
-      else base.option("mergeSchema", "true").parquet(absFiles: _*)
+      schema.fold(base.option("mergeSchema", "true"))(base.schema)
+        .parquet(files.map(f => s"$tableDir/$f"): _*)
     }
 
-  /** True iff every file's parquet footer declares the same schema.
-    * Driver-side footer reads; any unreadable footer returns false so
-    * the caller falls back to the engine's own merged read and its
-    * error surface. Two amortizations keep this cheaper than the job
-    * it replaces: the sink's ONE shared Hadoop Configuration
-    * ([[HiveParquetWriter.footer]]; constructing one per file re-parses
-    * the XML config set — measured ~10 ms each, which made the first
-    * cut of this check a net LOSS), and a process-wide footer-schema
-    * cache — published data files are immutable and UUID-named (never
-    * rewritten in place; commits only add or drop paths), so a path's
-    * footer schema is a constant.
-    */
-  private val footerSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def footersAgree(absFiles: Seq[String]): Boolean =
-    try {
-      val schemas = absFiles.map { f =>
-        footerSchemaCache.computeIfAbsent(f,
-          HiveParquetWriter.footer(_)(_.getFileMetaData.getSchema.toString))
-      }
-      schemas.distinct.size <= 1
-    } catch { case _: Exception => false }
+  private def readLive(spark: SparkSession, tableDir: String, live: GraftLog.Live): DataFrame =
+    readLive(spark, tableDir, live.files, live.schema)
 
   /** Current table state (snapshot-isolated: ignores files on disk that
     * are not in the live set).
     */
   def readTable(spark: SparkSession, tableDir: String): DataFrame =
-    readLive(spark, tableDir, GraftLog.liveFiles(tableDir))
+    readLive(spark, tableDir, GraftLog.fold(GraftLog.records(tableDir)))
 
   /** Time travel: the table as of `snapshotId`.
     *
-    * `mergeSchema` makes ADD-COLUMN schema evolution observable the way
-    * Iceberg exposes it: the snapshot's schema is the union of its
-    * files' schemas, and rows written before the column existed read as
-    * null — while a snapshot that predates the column keeps the narrow
-    * schema (time travel travels the schema too). Iceberg resolves the
-    * schema from table metadata in O(1); this emulation pays a footer
-    * read per file instead — footers are KB-sized and read in parallel,
-    * but a real `IcebergWriter` behind the [[LakeWriter]] seam would
-    * carry the schema in the log, not the files.
+    * The snapshot's record carries the table schema as of that commit,
+    * so ADD-COLUMN evolution is observable the way Iceberg exposes it:
+    * rows written before the column existed read as null, while a
+    * snapshot that predates the column keeps the narrow schema (time
+    * travel travels the schema too).
     */
   def readSnapshot(spark: SparkSession, tableDir: String, snapshotId: Long): DataFrame =
-    readLive(spark, tableDir, GraftLog.liveFiles(tableDir, Some(snapshotId)))
+    readLive(spark, tableDir, GraftLog.fold(GraftLog.records(tableDir), Some(snapshotId)))
 
   /** Incremental append scan: rows committed AFTER snapshot
     * `fromExclusive` up to and including `toInclusive` — Iceberg's
@@ -112,17 +73,19 @@ object LakeOps {
     * rows to files, so "files added in range" stops meaning "rows added
     * in range" — refuse loudly rather than emit wrong deltas. Ranges
     * that start at or after the rewrite work again (its appends are
-    * deltas as usual).
+    * deltas as usual). The delta reads with the table schema as of
+    * `toInclusive`.
     */
   def readIncremental(spark: SparkSession, tableDir: String,
       fromExclusive: Long, toInclusive: Long): DataFrame = {
-    val recs = GraftLog.records(tableDir)
-      .filter(r => r.snapshotId > fromExclusive && r.snapshotId <= toInclusive)
+    val all = GraftLog.records(tableDir)
+    val recs = all.filter(r => r.snapshotId > fromExclusive && r.snapshotId <= toInclusive)
     require(recs.nonEmpty, s"no snapshots in ($fromExclusive, $toInclusive]")
     val bad = recs.filter(_.op != "append")
     require(bad.isEmpty, "incremental read is append-only; range contains " +
       bad.map(r => s"${r.snapshotId}:${r.op}").mkString(", "))
-    readLive(spark, tableDir, recs.flatMap(_.files))
+    readLive(spark, tableDir, recs.flatMap(_.files),
+      GraftLog.fold(all, Some(toInclusive)).schema)
   }
 
   /** Row-level CHANGELOG between two snapshots — the CDC view Iceberg
@@ -144,8 +107,8 @@ object LakeOps {
       fromSnapshot: Long, toSnapshot: Long, keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{lit, struct, when}
     val recs = GraftLog.records(tableDir)
-    val a0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(fromSnapshot)).files)
-    val b0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(toSnapshot)).files)
+    val a0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(fromSnapshot)))
+    val b0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(toSnapshot)))
     // an empty snapshot (post full-table DELETE) reads as a 0-column
     // frame — borrow the other endpoint's schema so the changelog
     // degenerates correctly (all-inserted / all-deleted) instead of
@@ -193,10 +156,11 @@ object LakeOps {
     // full-set op — compact/overwrite/delete — uses), not the target
     // snapshot's own delta: a rollback to an append-on-top-of-appends
     // restores all of them, and the record must describe what its file
-    // set holds (advisor finding r5).
+    // set holds (advisor finding r5). The schema is restored too, so a
+    // rollback over an ADD-COLUMN reads the narrow schema again.
     val target = GraftLog.fold(recs, Some(toSnapshotId))
     val rec = GraftLog.commitReplacing(tableDir, "rewrite", target.rows, target.files,
-      Seq.empty, GraftLog.fold(recs).snapshotId, carryAppends = false)
+      Seq.empty, GraftLog.fold(recs).snapshotId, carryAppends = false, target.schema)
     CommitInfo(rec.snapshotId, rec.files, target.rows)
   }
 
@@ -217,11 +181,10 @@ object LakeOps {
     // key land in one task) while keeping the rewrite fully parallel —
     // a single-task funnel here would be the scale bottleneck of the
     // whole maintenance op.
-    val df = asPathStrings(readLive(spark, tableDir, base.files), partitionCols)
-    val written = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
-    val rows = written.map(_._2).sum
-    val rec = GraftLog.commitReplacing(tableDir, "rewrite", rows,
-      written.map(_._1).sorted, Seq.empty, base.snapshotId, carryAppends = true)
+    val df = asPathStrings(readLive(spark, tableDir, base), partitionCols)
+    val (files, rows) = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
+    val rec = GraftLog.commitReplacing(tableDir, "rewrite", rows, files, Seq.empty,
+      base.snapshotId, carryAppends = true, base.schema)
     CommitInfo(rec.snapshotId, rec.files, rec.rows)
   }
 
@@ -272,25 +235,25 @@ object LakeOps {
     val merged =
       if (touchedFiles.isEmpty) up
       else {
-        // mergeSchema (via readLive): a touched partition may hold files
-        // from before an ADD-COLUMN evolution — a single-footer schema
-        // would silently drop (or crash the union on) the added column
-        val cur = asPathStrings(readLive(spark, tableDir, touchedFiles), partitionCols)
+        // the table schema (via readLive): a touched partition may hold
+        // files from before an ADD-COLUMN evolution, whose rows read the
+        // added column as null
+        val cur = asPathStrings(
+          readLive(spark, tableDir, touchedFiles, base.schema), partitionCols)
         // whole-row replacement semantics: an update row that omits an
         // evolved column writes null there (allowMissingColumns), the
         // same null a fresh insert would carry
         cur.join(up.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
           .unionByName(up, allowMissingColumns = true)
       }
-    val written = HiveParquetWriter.writeFiles(merged, partitionCols, tableDir)
-    // Record.rows = rows written in the rewrite scope (same convention
-    // as compact: writeFiles returns the exact per-staged-file row
-    // counts — read off the parquet footers — and they are summed here;
-    // carried files keep their original rows)
-    val rec = GraftLog.commitReplacing(tableDir, "overwrite", written.map(_._2).sum,
-      (carried ++ written.map(_._1)).sorted, sources, base.snapshotId,
-      carryAppends = false)
-    CommitInfo(rec.snapshotId, rec.files, written.map(_._2).sum)
+    // Record.rows = rows written in the rewrite scope, as the write job
+    // counted them (same convention as compact; carried files keep
+    // their original rows)
+    val (files, rows) = HiveParquetWriter.writeFiles(merged, partitionCols, tableDir)
+    val rec = GraftLog.commitReplacing(tableDir, "overwrite", rows, carried ++ files,
+      sources, base.snapshotId, carryAppends = false,
+      GraftLog.widen(base.schema, Some(HiveParquetWriter.dataSchema(merged, partitionCols))))
+    CommitInfo(rec.snapshotId, rec.files, rows)
   }
 
   /** Partition columns rendered back to strings: they were path-rendered
@@ -347,7 +310,7 @@ object LakeOps {
     if (base.files.isEmpty) return CommitInfo(0, Seq.empty, 0)
     val hit = coalesce(predicate, lit(false))
     def readNorm(files: Seq[String]): DataFrame =
-      asPathStrings(readLive(spark, tableDir, files), partitionCols)
+      asPathStrings(readLive(spark, tableDir, files, base.schema), partitionCols)
     val touched = touchedDirs(readNorm(base.files).filter(hit), partitionCols)
     if (touched.isEmpty) return CommitInfo(0, Seq.empty, 0)
     val (touchedFiles, carried) = splitLive(base.files, touched)
@@ -356,11 +319,9 @@ object LakeOps {
     try {
       val before = cur.count()
       val survivors = cur.filter(not(hit))
-      val written = HiveParquetWriter.writeFiles(survivors, partitionCols, tableDir)
-      val kept = written.map(_._2).sum
-      val rec = GraftLog.commitReplacing(tableDir, "delete", kept,
-        (carried ++ written.map(_._1)).sorted, Seq.empty, base.snapshotId,
-        carryAppends = false)
+      val (files, kept) = HiveParquetWriter.writeFiles(survivors, partitionCols, tableDir)
+      val rec = GraftLog.commitReplacing(tableDir, "delete", kept, carried ++ files,
+        Seq.empty, base.snapshotId, carryAppends = false, base.schema)
       CommitInfo(rec.snapshotId, rec.files, before - kept)
     } finally cur.unpersist()
   }
@@ -395,29 +356,29 @@ object LakeOps {
     * seam would record these at COMMIT time in the manifest and pay
     * zero reads here.
     */
-  def fileStats(tableDir: String, column: String): Seq[(String, Option[(Long, Long)])] = {
+  def fileStats(tableDir: String, column: String): Seq[(String, Option[(Long, Long)])] =
+    GraftLog.liveFiles(tableDir).map(f => f -> fileRange(tableDir, f, column))
+
+  private def fileRange(tableDir: String, file: String, column: String): Option[(Long, Long)] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    GraftLog.liveFiles(tableDir).map { f =>
-      HiveParquetWriter.footer(s"$tableDir/$f") { footer =>
-        val ranges = footer.getBlocks.asScala.flatMap { block =>
-          block.getColumns.asScala
-            .filter(_.getPath.toDotString == column)
-            .flatMap { c =>
-              // fail fast on a non-INT64 column — a silent
-              // ClassCastException from genericGetMin would otherwise
-              // surface deep inside the footer loop
-              val tn = c.getPrimitiveType.getPrimitiveTypeName
-              require(tn == PrimitiveTypeName.INT64,
-                s"fileStats: column '$column' is $tn, only INT64 (long) is supported")
-              val st = c.getStatistics
-              if (st == null || !st.hasNonNullValue) None
-              else Some((st.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
-                st.genericGetMax.asInstanceOf[java.lang.Long].longValue()))
-            }
-        }
-        f -> (if (ranges.isEmpty) None
-              else Some((ranges.map(_._1).min, ranges.map(_._2).max)))
+    HiveParquetWriter.footer(s"$tableDir/$file") { footer =>
+      val ranges = footer.getBlocks.asScala.flatMap { block =>
+        block.getColumns.asScala
+          .filter(_.getPath.toDotString == column)
+          .flatMap { c =>
+            // fail fast on a non-INT64 column — a silent
+            // ClassCastException from genericGetMin would otherwise
+            // surface deep inside the footer loop
+            val tn = c.getPrimitiveType.getPrimitiveTypeName
+            require(tn == PrimitiveTypeName.INT64,
+              s"fileStats: column '$column' is $tn, only INT64 (long) is supported")
+            val st = c.getStatistics
+            if (st == null || !st.hasNonNullValue) None
+            else Some((st.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
+              st.genericGetMax.asInstanceOf[java.lang.Long].longValue()))
+          }
       }
+      if (ranges.isEmpty) None else Some((ranges.map(_._1).min, ranges.map(_._2).max))
     }
   }
 
@@ -427,27 +388,25 @@ object LakeOps {
     * remains — manifest-style FILE SKIPPING, the read-path half of
     * Iceberg's min/max pruning. Purely physical: the returned frame
     * equals `readTable(...).filter(lo ≤ column ≤ hi)` by construction
-    * — INCLUDING the schema: survivors read with mergeSchema (a
-    * schema-evolved live set must not lose an added column to one
-    * arbitrary footer), and a zero-file selection returns an empty
-    * frame with the FULL-TABLE schema (derived from the live set the
-    * stats pass already enumerated), so callers need no 0-column
-    * special case. Returns (frame, scanned, live) so callers can
-    * observe the pruning ratio.
+    * — INCLUDING the schema: the survivors read with the table schema
+    * from the log (a schema-evolved live set keeps an added column
+    * even when no surviving file has it), and a zero-file selection
+    * returns an empty frame with the same schema, so callers need no
+    * 0-column special case. Returns (frame, scanned, live) so callers
+    * can observe the pruning ratio.
     */
   def readPruned(spark: SparkSession, tableDir: String, column: String,
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val stats = fileStats(tableDir, column)
-    val keep = stats.collect {
-      case (f, None) => f
-      case (f, Some((mn, mx))) if mx >= lo && mn <= hi => f
-    }
+    val live = GraftLog.fold(GraftLog.records(tableDir))
+    val keep = live.files.filter(f => fileRange(tableDir, f, column)
+      .forall { case (mn, mx) => mx >= lo && mn <= hi })
     val df =
       // full prune: an empty frame with the table schema, so the
       // physical-only contract holds for the empty case too
-      if (keep.isEmpty) readLive(spark, tableDir, stats.map(_._1))
+      if (keep.isEmpty) readLive(spark, tableDir, live)
         .filter(org.apache.spark.sql.functions.lit(false))
-      else readLive(spark, tableDir, keep).filter(col(column) >= lo && col(column) <= hi)
-    (df, keep.size, stats.size)
+      else readLive(spark, tableDir, keep, live.schema)
+        .filter(col(column) >= lo && col(column) <= hi)
+    (df, keep.size, live.files.size)
   }
 }

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** One committed append (the observable behavior of the reference's
   * `newAppend().appendFile().commit()`, `App.java:147-149` / SURVEY.md
@@ -41,21 +42,25 @@ trait LakeWriter {
   *    observable table content, O(1) commits;
   *  - null partition values render as `name=null` like the reference
   *    (`String.valueOf(null)`), normalized from Spark's
-  *    `__HIVE_DEFAULT_PARTITION__` during publish.
+  *    `__HIVE_DEFAULT_PARTITION__` during publish;
+  *  - the commit record carries the row count the write job observed
+  *    and the table's data schema, as Iceberg's metadata does: no file
+  *    is opened after the write, and readers infer nothing.
   *
-  * Write path at scale: the caller repartitions by the partition key
-  * first (one shuffle, A17), so each task writes at most a few
-  * partition directories instead of every task writing every partition
-  * — the many-small-files failure mode at 1000 executors.
+  * Write path at scale: [[HiveParquetWriter.writeFiles]] repartitions by
+  * the partition key first (one shuffle, A17), so each task writes at
+  * most a few partition directories instead of every task writing
+  * every partition — the many-small-files failure mode at 1000
+  * executors.
   */
 final class HiveParquetWriter extends LakeWriter {
 
   override def append(df: DataFrame, partitionCols: Seq[String], tableDir: String,
       sources: Seq[String] = Seq.empty): CommitInfo = {
-    val published = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
-    val rows = published.map(_._2).sum
+    val (files, rows) = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
     if (rows == 0) return CommitInfo(0, Seq.empty, 0) // Q10: empty input → no snapshot
-    val rec = GraftLog.commit(tableDir, "append", rows, published.map(_._1).sorted, sources)
+    val rec = GraftLog.commit(tableDir, "append", rows, files, sources,
+      Some(HiveParquetWriter.dataSchema(df, partitionCols)))
     CommitInfo(rec.snapshotId, rec.files, rows)
   }
 }
@@ -74,47 +79,44 @@ object HiveParquetWriter {
 
   private val SparkNullDir = "=__HIVE_DEFAULT_PARTITION__"
 
+  /** The columns a write puts in the data files (not the partition ones). */
+  private[sink] def dataSchema(df: DataFrame, partitionCols: Seq[String]): StructType =
+    StructType(df.schema.filterNot(f => partitionCols.contains(f.name)))
+
   /** Stage + publish data files under `tableDir` (no commit record).
-    * Returns (relative path, exact per-file row count) pairs — counts
-    * read from the staged parquet footers, no counting job. The
-    * `_staging_*` dir is removed whether the write succeeds or fails.
+    * Returns the published relative paths and the rows written, counted
+    * by the write job itself: an observed `count` on the frame the
+    * writer consumes — after the repartition, where AQE cannot drop the
+    * metric by replacing an empty stage. A missing metric throws: a
+    * silent 0 would skip the commit while the caller still deletes its
+    * sources. Nothing is published for 0 rows (Q10; an all-empty write
+    * may still stage a 0-row schema file). The `_staging_*` dir is
+    * removed whether the write succeeds or fails.
     */
   private[sink] def writeFiles(
-      df: DataFrame, partitionCols: Seq[String], tableDir: String): Seq[(String, Long)] = {
+      df: DataFrame, partitionCols: Seq[String], tableDir: String): (Seq[String], Long) = {
     val dir = Paths.get(tableDir)
     Files.createDirectories(dir)
     val staging = dir.resolve(s"_staging_${java.util.UUID.randomUUID()}")
     try {
-      val writer =
-        if (partitionCols.nonEmpty)
-          df.repartition(partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
-        else df.write
-      writer.parquet(staging.toString)
-
-      // Row counts come from the staged files' parquet FOOTERS — exact
-      // (a footer's block row counts are the file's row count), read
-      // driver-side without a Spark job. This replaces the former
-      // df.cache().count() pre-pass, which materialized every append
-      // twice (count + write) and paid one extra job per commit (r17
-      // optimization; a cluster deployment would collect the same counts
-      // from the write tasks' commit messages, which is exactly what
-      // Iceberg's commit protocol does).
-      val counted = Files.walk(staging).iterator().asScala
+      val counted = Observation()
+      (if (partitionCols.isEmpty) df else df.repartition(partitionCols.map(col): _*))
+        .observe(counted, count(lit(1)).as("rows"))
+        .write.partitionBy(partitionCols: _*).parquet(staging.toString)
+      val rows = counted.get.getOrElse("rows", throw new IllegalStateException(
+        s"write to $tableDir reported no row count")).asInstanceOf[Long]
+      val files = if (rows == 0) Seq.empty else Files.walk(staging).iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-        .toSeq
-        .map(p => p -> footer(p.toString)(_.getBlocks.asScala.map(_.getRowCount).sum))
-      // Q10: nothing to publish (an all-empty write may still stage a
-      // 0-row schema file — it goes with the staging dir)
-      if (counted.map(_._2).sum == 0) Seq.empty
-      else counted.map { case (p, n) =>
-        // publish: move into the table tree, normalizing Spark's
-        // null-partition dir to `name=null` (see renderDir)
-        val rel = staging.relativize(p).toString.replace(SparkNullDir, "=null")
-        val target = dir.resolve(rel)
-        Files.createDirectories(target.getParent)
-        Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-        (rel, n)
-      }
+        .toSeq.map { p =>
+          // publish: move into the table tree, normalizing Spark's
+          // null-partition dir to `name=null` (see renderDir)
+          val rel = staging.relativize(p).toString.replace(SparkNullDir, "=null")
+          val target = dir.resolve(rel)
+          Files.createDirectories(target.getParent)
+          Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
+          rel
+        }
+      (files, rows)
     } finally if (Files.exists(staging))
       Files.walk(staging).sorted(Comparator.reverseOrder[Path]())
         .iterator().asScala.foreach(Files.delete)
@@ -124,8 +126,8 @@ object HiveParquetWriter {
   // Hadoop XML config set (~10 ms) — measurable against a KB footer read
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
-  /** Apply `f` to the parquet footer of one local file — the one footer
-    * reader of the sink (row counts, schemas, column stats).
+  /** Apply `f` to the parquet footer of one local file — the sink's
+    * reader of column stats ([[LakeOps.fileStats]]).
     */
   private[sink] def footer[A](file: String)(
       f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {

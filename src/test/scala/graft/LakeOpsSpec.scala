@@ -404,6 +404,9 @@ class LakeOpsSpec extends SparkSpec {
       .select(col("id"), col("w")).as[(Long, Option[String])]
       .collect().sortBy(_._1).toSeq
       == Seq((1L, None), (2L, Some("x")), (3L, Some("y"))))
+    // a rollback over the evolution restores the narrow schema too
+    LakeOps.rollback(tdir, s1)
+    assert(LakeOps.readTable(spark, tdir).columns.toSeq == Seq("id", "v", "category"))
 
     // upsert INTO a partition holding both pre- and post-evolution
     // files must see the union schema (mergeSchema on its internal
@@ -700,10 +703,22 @@ class LakeOpsSpec extends SparkSpec {
     // in the shuffle that feeds it
     intercept[Exception](w.append(bad, Seq.empty, tdir))
     intercept[Exception](w.append(bad, Seq("p"), tdir))
+    // empty inputs succeed, count 0 rows and publish nothing (Q10)
+    for ((in, parts) <- emptyInputs) assert(w.append(in, parts, tdir).snapshotId == 0L)
     val left = Files.list(Paths.get(tdir)).iterator().asScala
       .map(_.getFileName.toString).filter(_.startsWith("_staging_")).toSeq
     assert(left.isEmpty, s"staging left behind: $left")
     assert(GraftLog.records(tdir).isEmpty)
+  }
+
+  /** Writes of no rows: an empty local Seq (partitioned and not) and a
+    * range filtered to nothing.
+    */
+  private def emptyInputs: Seq[(org.apache.spark.sql.DataFrame, Seq[String])] = {
+    import spark.implicits._
+    val none = Seq.empty[(Long, String)].toDF("id", "p")
+    Seq(none -> Seq("p"), none -> Seq.empty,
+      spark.range(10).filter(col("id") < 0).select(col("id"), lit("1").as("p")) -> Seq("p"))
   }
 
   test("readTable on a table with no commits is the 0-column empty frame") {
@@ -713,6 +728,10 @@ class LakeOpsSpec extends SparkSpec {
     Files.createDirectories(Paths.get(root, "events", "c1"))
     Files.writeString(Paths.get(root, "events", "c1", "bad.json"), "{not json\n")
     assert(Pipeline.ingest(spark, root, "c1", IngestQueries.fixtureTable, tdir).commit.isEmpty)
+    // and so does an append of no rows
+    val w = new graft.sink.HiveParquetWriter
+    for ((in, parts) <- emptyInputs) assert(w.append(in, parts, tdir).rows == 0L)
+    assert(GraftLog.records(tdir).isEmpty)
     val df = LakeOps.readTable(spark, tdir)
     assert(df.columns.isEmpty && df.count() == 0L)
   }
@@ -737,5 +756,78 @@ class LakeOpsSpec extends SparkSpec {
     // slack for descriptors other threads of this JVM open meanwhile;
     // each unclosed listing held two (800 over these 400 calls)
     assert(after - before < 50, s"open descriptors grew from $before to $after")
+  }
+
+  test("a fresh table's read runs no Spark job before its action; the write counts its rows") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tdir = Files.createTempDirectory("graft_fresh_").toString + "/t"
+    val w = new graft.sink.HiveParquetWriter
+    val rows = (1 to 40).map(i => (i.toLong, s"c${i % 4}", i * 10L))
+    val c1 = w.append(rows.take(25).toDF("id", "category", "v"), Seq("category"), tdir)
+    val c2 = w.append(rows.drop(25).toDF("id", "category", "v"), Seq("category"), tdir)
+    assert(c1.rows == 25L && c2.rows == 15L)
+    assert(GraftLog.liveFiles(tdir).size <= 32) // below Spark's parallel-listing threshold
+    // job starts by job group; a marker job in its own group flushes the
+    // asynchronous listener bus, which delivers events in order
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("fresh_read", "reads under test")
+      val cur = LakeOps.readTable(spark, tdir)
+      val old = LakeOps.readSnapshot(spark, tdir, c1.snapshotId)
+      spark.sparkContext.setJobGroup("fresh_read_end", "listener flush")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("fresh_read_end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("fresh_read_end"), "listener saw no marker job")
+      assert(groups.asScala.count(_ == "fresh_read") == 0,
+        "a read planned with a Spark job before its action")
+      spark.sparkContext.clearJobGroup()
+      assert(cur.count() == 40L && old.count() == 25L)
+      assert(cur.columns.toSeq == Seq("id", "v", "category"))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a log of schema-less records reads with the union schema; an append on top keeps it") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_legacy_")
+    val tdir = root.resolve("t").toString
+    // the older log format: parquet files committed by records that
+    // carry no schema, the second file with an added column
+    def place(df: org.apache.spark.sql.DataFrame, rel: String): String = {
+      val tmp = root.resolve(s"tmp_${rel.hashCode.abs}").toString
+      df.coalesce(1).write.parquet(tmp)
+      val part = Files.list(Paths.get(tmp)).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.createDirectories(Paths.get(tdir, rel).getParent)
+      Files.move(part, Paths.get(tdir, rel))
+      rel
+    }
+    val s1 = GraftLog.commit(tdir, "append", 1L,
+      Seq(place(Seq((1L, 10L)).toDF("id", "v"), "category=a/f1.parquet")), Seq.empty)
+    GraftLog.commit(tdir, "append", 1L,
+      Seq(place(Seq((2L, 20L, "x")).toDF("id", "v", "w"), "category=b/f2.parquet")), Seq.empty)
+    assert(GraftLog.records(tdir).forall(_.schema.isEmpty))
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Option[String], String)] =
+      df.select(col("id"), col("v"), col("w"), col("category"))
+        .as[(Long, Long, Option[String], String)].collect().sortBy(_._1).toSeq
+    assert(rowsOf(LakeOps.readTable(spark, tdir)) == Seq((1L, 10L, None, "a"), (2L, 20L, Some("x"), "b")))
+    assert(LakeOps.readSnapshot(spark, tdir, s1.snapshotId).columns.toSeq == Seq("id", "v", "category"))
+    // an append on a legacy base stays schema-less and reads correctly
+    val c = (new graft.sink.HiveParquetWriter)
+      .append(Seq((3L, "a", 30L)).toDF("id", "category", "v"), Seq("category"), tdir)
+    assert(c.rows == 1L && GraftLog.records(tdir).last.schema.isEmpty)
+    assert(rowsOf(LakeOps.readTable(spark, tdir)) ==
+      Seq((1L, 10L, None, "a"), (2L, 20L, Some("x"), "b"), (3L, 30L, None, "a")))
   }
 }
