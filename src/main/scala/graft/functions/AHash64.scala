@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** 64-bit average hash (aHash) of a binary payload — the cheapest
   * perceptual fingerprint of image dedup pipelines: bit i is set iff
@@ -12,7 +10,7 @@ import org.apache.spark.sql.types._
   * Hamming distance, so the SimHash band-join machinery finds
   * near-duplicate media without decoding it (and the real decoder,
   * [[graft.multimodal.Multimodal.StubCodec]]'s seam, would feed decoded
-  * pixels to the same expression).
+  * pixels to the same kernel).
   *
   * The mean compare is EXACT integer arithmetic — bit i = b(i mod n)·n
   * > Σb (never a double mean) — so any engine reproduces the hash
@@ -25,34 +23,10 @@ import org.apache.spark.sql.types._
   * downsample means the bit count never depends on input size). Empty
   * payload → 0L (callers filter empties before pairing).
   *
-  * Catalyst expression with codegen for the same reason as
-  * [[SimHash64]]: the hash runs inside WholeStageCodegen as a map-only
-  * projection — no row explosion, no UDF boundary.
+  * A [[Kernel]] for the same reason as [[SimHash64]]: the hash runs
+  * inside WholeStageCodegen as a map-only projection — no row
+  * explosion, no UDF boundary.
   */
-case class AHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ahash64 expects binary, got $t")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    AHash64.hash(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.AHash64.hash($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): AHash64 =
-    copy(child = newChild)
-}
-
 object AHash64 {
 
   /** Called from generated code — public, allocation-free. */
@@ -73,5 +47,5 @@ object AHash64 {
 
   /** Column-level entry point: `aHash64($"payload")`. */
   def aHash64(c: Column): Column =
-    GraftBridge.column(AHash64(GraftBridge.expression(c)))
+    Kernel(this, "hash", LongType, Seq(BinaryType))(c)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One BPE merge applied to a token sequence — the APPLY half of a
@@ -18,39 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * same round (scan resumes after the consumed pair).
   *
   * `t1`/`t2` are per-round model constants (the argmax pair the driver
-  * just fetched), baked in like [[Shingles]]' width, so the scan is a
-  * branch-predictable token-equality loop inside WholeStageCodegen.
+  * just fetched), passed as string literals like [[Shingles]]' width,
+  * so the [[Kernel]] scan is a branch-predictable token-equality loop
+  * inside WholeStageCodegen.
   * q_bpe_train runs this once per round over the word-frequency table —
   * vocabulary-sized, the corpus compression that makes BPE training
   * feasible at 100 TB.
   */
-case class BpeApply(child: Expression, t1: String, t2: String)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"bpe_apply expects array<string>, got $t")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    BpeApply.make(v.asInstanceOf[ArrayData],
-      UTF8String.fromString(t1), UTF8String.fromString(t2))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val u1 = ctx.addReferenceObj("bpeT1", UTF8String.fromString(t1))
-    val u2 = ctx.addReferenceObj("bpeT2", UTF8String.fromString(t2))
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeApply.make($c, $u1, $u2);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeApply =
-    copy(child = newChild)
-}
-
 object BpeApply {
 
   /** Called from generated code. The declared contract is split()
@@ -82,5 +54,6 @@ object BpeApply {
 
   /** Column-level entry point: `bpeApply($"toks", "a", "b")`. */
   def bpeApply(c: Column, t1: String, t2: String): Column =
-    GraftBridge.column(BpeApply(GraftBridge.expression(c), t1, t2))
+    Kernel(this, "make", ArrayType(StringType, containsNull = false),
+      Seq(ArrayType(StringType), StringType, StringType))(c, lit(t1), lit(t2))
 }

@@ -1,21 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 import graft.multimodal.Multimodal
 
 /** Codegen'd byte-distribution signals over a binary payload — the
-  * native-expression replacements for the last two interpreted per-row
+  * codegen'd kernel replacements for the last two interpreted per-row
   * Scala UDFs on a declared query's hot path (q_mm_entropy /
   * q_mm_byte_stats). The arithmetic lives in [[Multimodal.byteEntropyE6]]
   * and [[Multimodal.byteStats]] (exact-integer, oracle-portable —
   * their scaladoc carries the domain proofs and the DuckDB recursive-CTE
-  * twin); these expressions only change HOW Spark invokes it: a static
+  * twin); these [[Kernel]]s only change HOW Spark invokes it: a static
   * call emitted inside whole-stage codegen instead of a Scala-lambda
   * UDF's boxing + encoder round-trip per row. Payload-proportional work
   * amortized the lambda better than the old bloom probe did, but the
@@ -34,56 +31,17 @@ object ByteDist {
     InternalRow(n, distinct, modal, modalCount, simpson)
   }
 
-  case class ByteEntropyE6Expr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
+  /** Shannon byte entropy in exact-integer e6 units (fixed-point log₂). */
+  def byteEntropyE6(bin: Column): Column =
+    Kernel(Multimodal, "byteEntropyE6", LongType, Seq(BinaryType))(bin)
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"byte_entropy_e6 expects binary, got $t")
-    }
-
-    override protected def nullSafeEval(v: Any): Any =
-      Multimodal.byteEntropyE6(v.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.multimodal.Multimodal.byteEntropyE6($c);")
-
-    override protected def withNewChildInternal(newChild: Expression): ByteEntropyE6Expr =
-      copy(child = newChild)
-  }
-
-  case class ByteStatsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
+  /** (n_bytes, distinct_bytes, modal_byte, modal_count, simpson_e6). */
+  def byteStats(bin: Column): Column =
+    Kernel(this, "statsRow", StructType(Seq(
       StructField("n_bytes", LongType, nullable = false),
       StructField("distinct_bytes", LongType, nullable = false),
       StructField("modal_byte", LongType, nullable = false),
       StructField("modal_count", LongType, nullable = false),
-      StructField("simpson_e6", LongType, nullable = false)))
-    override def nullable: Boolean = child.nullable
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"byte_stats expects binary, got $t")
-    }
-
-    override protected def nullSafeEval(v: Any): Any =
-      statsRow(v.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.ByteDist.statsRow($c);")
-
-    override protected def withNewChildInternal(newChild: Expression): ByteStatsExpr =
-      copy(child = newChild)
-  }
-
-  /** Shannon byte entropy in exact-integer e6 units (fixed-point log₂). */
-  def byteEntropyE6(bin: Column): Column =
-    GraftBridge.column(ByteEntropyE6Expr(GraftBridge.expression(bin)))
-
-  /** (n_bytes, distinct_bytes, modal_byte, modal_count, simpson_e6). */
-  def byteStats(bin: Column): Column =
-    GraftBridge.column(ByteStatsExpr(GraftBridge.expression(bin)))
+      StructField("simpson_e6", LongType, nullable = false))),
+      Seq(BinaryType))(bin)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All distinct strings reachable from `child` by deleting at most
@@ -28,34 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * terms. Deletions operate on code points so the key space matches
   * the code-point semantics of `levenshtein` on both engines.
   *
-  * Codegen'd for the same reason as [[Shingles]]: the equivalent
-  * higher-order-function chain is interpreted, and this runs inside
-  * the vocabulary scan's stage.
+  * A codegen'd [[Kernel]] for the same reason as [[Shingles]]: the
+  * equivalent higher-order-function chain is interpreted, and this runs
+  * inside the vocabulary scan's stage.
   */
-case class DeletionVariants(child: Expression, maxDel: Int)
-    extends UnaryExpression {
-  require(maxDel >= 0 && maxDel <= 2, s"maxDel must be 0..2, got $maxDel")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"deletion_variants expects string, got $t")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    DeletionVariants.make(v.asInstanceOf[UTF8String], maxDel)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.DeletionVariants.make($c, $maxDel);")
-
-  override protected def withNewChildInternal(newChild: Expression): DeletionVariants =
-    copy(child = newChild)
-}
-
 object DeletionVariants {
 
   /** Called from generated code. The word itself is always a variant
@@ -95,6 +69,9 @@ object DeletionVariants {
   }
 
   /** Column-level entry point: `deletionVariants($"w", 2)`. */
-  def deletionVariants(c: Column, maxDel: Int): Column =
-    GraftBridge.column(DeletionVariants(GraftBridge.expression(c), maxDel))
+  def deletionVariants(c: Column, maxDel: Int): Column = {
+    require(maxDel >= 0 && maxDel <= 2, s"maxDel must be 0..2, got $maxDel")
+    Kernel(this, "make", ArrayType(StringType, containsNull = false),
+      Seq(StringType, IntegerType))(c, lit(maxDel))
+  }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, IntegralDivide, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.IntegralDivide
+import org.apache.spark.sql.types.LongType
+
+import graft.multimodal.Multimodal
 
 /** Exact integer division helpers for oracle-checked ratio metrics.
   *
@@ -48,37 +48,17 @@ object ExactMath {
   def ceilDiv(a: Column, b: Column): Column =
     divTrunc(a + b - lit(1L), b)
 
-  /** Fixed-point log₂ with 20 fractional bits as a codegen'd scalar —
-    * the column form of [[graft.multimodal.Multimodal.log2e20]] (Q30
-    * square-and-shift, pure 64-bit integer ops, NO libm), which is what
-    * makes log-ratio scores ORACLE-PORTABLE: any engine running the
-    * same recurrence (the q_mm_entropy / q_dsir oracles build it in a
-    * DuckDB recursive CTE) produces bit-identical values. Domain
-    * 1 ≤ v < 2³³ is enforced loudly (the r12 BpeApply lesson: a silent
-    * clamp hides a contract violation); callers document their count
-    * headroom the way byteEntropyE6 does. Null in → null out.
+  /** floor(2²⁰·log₂(v)) for bigint 1 ≤ v < 2³³, exact-integer: fixed-
+    * point log₂ with 20 fractional bits as a codegen'd [[Kernel]] of
+    * [[graft.multimodal.Multimodal.log2e20]] (Q30 square-and-shift,
+    * pure 64-bit integer ops, NO libm), which is what makes log-ratio
+    * scores ORACLE-PORTABLE: any engine running the same recurrence (the
+    * q_mm_entropy / q_dsir oracles build it in a DuckDB recursive CTE)
+    * produces bit-identical values. Domain 1 ≤ v < 2³³ is enforced
+    * loudly (the r12 BpeApply lesson: a silent clamp hides a contract
+    * violation); callers document their count headroom the way
+    * byteEntropyE6 does. Null in → null out.
     */
-  case class Log2E20Expr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case LongType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"log2_e20 expects bigint, got $t")
-    }
-
-    override protected def nullSafeEval(v: Any): Any =
-      graft.multimodal.Multimodal.log2e20(v.asInstanceOf[Long])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.multimodal.Multimodal.log2e20($c);")
-
-    override protected def withNewChildInternal(newChild: Expression): Log2E20Expr =
-      copy(child = newChild)
-  }
-
-  /** floor(2²⁰·log₂(v)) for bigint 1 ≤ v < 2³³, exact-integer. */
   def log2e20(v: Column): Column =
-    GraftBridge.column(Log2E20Expr(GraftBridge.expression(v)))
+    Kernel(Multimodal, "log2e20", LongType, Seq(LongType))(v)
 }

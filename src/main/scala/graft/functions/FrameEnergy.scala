@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Per-frame byte-energy stats of a binary payload — the frame-level
@@ -14,8 +12,8 @@ import org.apache.spark.sql.types._
   * into fixed `frameSize`-byte frames (last frame partial) and each
   * frame's unsigned byte sum is folded into (n_frames, sum_e, max_e,
   * min_e) in ONE fused pass — no per-frame array materializes, the
-  * loop is codegen'd, and all outputs are exact integers, so the
-  * DuckDB oracle (hex-parse reconstruction) matches bit-for-bit.
+  * loop is a codegen'd [[Kernel]], and all outputs are exact integers,
+  * so the DuckDB oracle (hex-parse reconstruction) matches bit-for-bit.
   * Empty payload → (0, 0, 0, 0).
   *
   * North-star scope (the reference has no binary surface; cf.
@@ -51,32 +49,6 @@ object FrameEnergy {
     InternalRow(frames.toLong, sum, mx, mn)
   }
 
-  case class FrameEnergyExpr(child: Expression, frameSize: Int) extends UnaryExpression {
-    require(frameSize > 0, "frameSize must be positive")
-
-    override def dataType: DataType = StructType(Seq(
-      StructField("n_frames", LongType, nullable = false),
-      StructField("sum_e", LongType, nullable = false),
-      StructField("max_e", LongType, nullable = false),
-      StructField("min_e", LongType, nullable = false)))
-    override def nullable: Boolean = child.nullable
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"frame_energy expects binary, got $t")
-    }
-
-    override protected def nullSafeEval(v: Any): Any =
-      frameStats(v.asInstanceOf[Array[Byte]], frameSize)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.FrameEnergy.frameStats($c, $frameSize);")
-
-    override protected def withNewChildInternal(newChild: Expression): FrameEnergyExpr =
-      copy(child = newChild)
-  }
-
   /** Per-frame energies as an array — the run-analysis form ([[q_mm
     * _silence]]-style gaps-and-islands needs frame ROWS, which the
     * fused stats fold deliberately never materializes). Same frame
@@ -100,33 +72,21 @@ object FrameEnergy {
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
 
-  case class FrameEnergiesExpr(child: Expression, frameSize: Int) extends UnaryExpression {
+  /** (n_frames, sum_e, max_e, min_e) struct over `frameSize`-byte frames. */
+  def frameEnergy(bin: Column, frameSize: Int): Column = {
     require(frameSize > 0, "frameSize must be positive")
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"frame_energies expects binary, got $t")
-    }
-
-    override protected def nullSafeEval(v: Any): Any =
-      frameEnergiesArr(v.asInstanceOf[Array[Byte]], frameSize)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.FrameEnergy.frameEnergiesArr($c, $frameSize);")
-
-    override protected def withNewChildInternal(newChild: Expression): FrameEnergiesExpr =
-      copy(child = newChild)
+    Kernel(this, "frameStats", StructType(Seq(
+      StructField("n_frames", LongType, nullable = false),
+      StructField("sum_e", LongType, nullable = false),
+      StructField("max_e", LongType, nullable = false),
+      StructField("min_e", LongType, nullable = false))),
+      Seq(BinaryType, IntegerType))(bin, lit(frameSize))
   }
 
-  /** (n_frames, sum_e, max_e, min_e) struct over `frameSize`-byte frames. */
-  def frameEnergy(bin: Column, frameSize: Int): Column =
-    GraftBridge.column(FrameEnergyExpr(GraftBridge.expression(bin), frameSize))
-
   /** array<long> of per-frame energies over `frameSize`-byte frames. */
-  def frameEnergies(bin: Column, frameSize: Int): Column =
-    GraftBridge.column(FrameEnergiesExpr(GraftBridge.expression(bin), frameSize))
+  def frameEnergies(bin: Column, frameSize: Int): Column = {
+    require(frameSize > 0, "frameSize must be positive")
+    Kernel(this, "frameEnergiesArr", ArrayType(LongType, containsNull = false),
+      Seq(BinaryType, IntegerType))(bin, lit(frameSize))
+  }
 }

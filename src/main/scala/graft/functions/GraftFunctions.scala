@@ -1,15 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** SQL registration of the engine's custom codegen'd expressions, so a
-  * pure-SQL user (`spark.sql(...)`) reaches the same primitives the
-  * DataFrame API does — the library surface without any Scala imports:
+/** SQL registration of the engine's codegen'd kernels, so a pure-SQL
+  * user (`spark.sql(...)`) reaches the same primitives the DataFrame
+  * API does — the library surface without any Scala imports:
   *
   * {{{
   * SELECT graft_cosine(a.embedding, b.embedding)      -- fused cosine
@@ -17,6 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * SELECT graft_fnv64(token)                          -- FNV-1a-64 of a string
   * SELECT graft_ahash64(payload)                      -- 64-bit average hash
   * SELECT graft_java_hash(user_id)                    -- A15 bucket hash
+  * SELECT graft_vec_norm2(embedding)                  -- Σx² finite-vector check
   * SELECT graft_lsh_code(embedding, 8, 64)            -- sign-LSH code
   * SELECT graft_shingles(split(text, ' '), 3)         -- distinct 3-grams
   * SELECT graft_quant_i8(embedding)                   -- int8 quant stats
@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * SELECT graft_normalize_text(text)                  -- canonicalize (r12)
   * SELECT graft_bpe_apply(toks, 'a', 'b')             -- one BPE merge (r12)
   * SELECT graft_log2e20(n)                            -- exact fixed-point log2 (r13)
- * SELECT graft_unigram_viterbi(w, ps, ss)            -- unigram Viterbi seg (r14)
+  * SELECT graft_unigram_viterbi(w, ps, ss)            -- unigram Viterbi seg (r14)
   * SELECT graft_wp_merge(toks, 'a', '##b', 'ab')      -- one WordPiece merge (r14)
   * SELECT graft_wp_match(w, pieces)                   -- WordPiece longest-match (r14)
   * SELECT graft_md5_u64(x)                            -- first 8 md5 bytes as long (r15)
@@ -38,56 +38,67 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - [[graft.GraftExtensions]] via
   *    `spark.sql.extensions=graft.GraftExtensions` at session build —
   *    the deployment path, which also survives `newSession()`.
-  * Static arguments (plane counts, shingle width, frame size) must be
-  * integer literals — they parameterize generated code, exactly like
-  * the DataFrame API's Scala arguments.
+  * Static arguments (plane counts, shingle width, frame size, merge
+  * tokens) must be literals — they parameterize generated code, exactly
+  * like the DataFrame API's Scala arguments.
   */
 object GraftFunctions {
 
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
+  private def intLit(c: Column, what: String): Int =
+    GraftBridge.expression(c) match {
+      case Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"$what must be an integer literal, got $other")
+    }
 
-  private def strLit(e: Expression, what: String): String = e match {
-    case Literal(v: UTF8String, StringType) => v.toString
-    case other => throw new IllegalArgumentException(
-      s"$what must be a string literal, got $other")
-  }
+  private def strLit(c: Column, what: String): String =
+    GraftBridge.expression(c) match {
+      case Literal(v: UTF8String, StringType) => v.toString
+      case other => throw new IllegalArgumentException(
+        s"$what must be a string literal, got $other")
+    }
 
-  /** (name, expression builder) — the single source for both paths. */
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_cosine" -> (es => VectorOps.CosineSim(es(0), es(1))),
-    "graft_simhash64" -> (es => SimHash64(es.head)),
-    "graft_fnv64" -> (es => Fnv64(es.head)),
-    "graft_ahash64" -> (es => AHash64(es.head)),
-    "graft_java_hash" -> (es => JavaHash(es.head)),
-    "graft_quant_i8" -> (es => VectorOps.QuantI8Stats(es.head)),
-    "graft_vec_norm2" -> (es => VectorOps.VecNorm2(es.head)),
-    "graft_shingles" -> (es =>
-      Shingles(es.head, intLit(es(1), "shingle width"))),
-    "graft_frame_energy" -> (es =>
-      FrameEnergy.FrameEnergyExpr(es.head, intLit(es(1), "frame size"))),
-    "graft_frame_energies" -> (es =>
-      FrameEnergy.FrameEnergiesExpr(es.head, intLit(es(1), "frame size"))),
-    "graft_lsh_code" -> (es =>
-      VectorOps.LshCode(es.head,
-        VectorOps.hashPlanes(intLit(es(1), "plane count"), intLit(es(2), "dim")))),
-    "graft_normalize_text" -> (es => NormalizeText(es.head)),
-    "graft_bpe_apply" -> (es =>
-      BpeApply(es.head, strLit(es(1), "merge pair left"),
-        strLit(es(2), "merge pair right"))),
-    "graft_log2e20" -> (es => ExactMath.Log2E20Expr(es.head)),
-    "graft_unigram_viterbi" -> (es => UnigramViterbi(es(0), es(1), es(2))),
-    "graft_wp_merge" -> (es =>
-      WordPieceOps.WordPieceMergeApply(es.head, strLit(es(1), "merge pair left"),
-        strLit(es(2), "merge pair right"), strLit(es(3), "merged token"))),
-    "graft_wp_match" -> (es => WordPieceOps.WordPieceMatch(es(0), es(1))),
-    "graft_md5_u64" -> (es => Md5Ops.Md5U64(es.head)),
-    "graft_md5_ws_u64" -> (es => Md5Ops.Md5WsU64(es.head)),
-    "graft_shingle_md5_u64" -> (es =>
-      Md5Ops.ShingleMd5U64(es.head, intLit(es(1), "shingle width"))))
+  /** (name, expression builder) — the single source for both paths.
+    * Each builder calls the function's Column entry point, so SQL and
+    * DataFrame callers get the same expression and the same argument
+    * checks. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq[(String, Seq[Column] => Column)](
+      "graft_cosine" -> (cs => VectorOps.cosine(cs(0), cs(1))),
+      "graft_simhash64" -> (cs => SimHash64.simHash64(cs.head)),
+      "graft_fnv64" -> (cs => Fnv64.fnv64(cs.head)),
+      "graft_ahash64" -> (cs => AHash64.aHash64(cs.head)),
+      "graft_java_hash" -> (cs => JavaHash.javaHash(cs.head)),
+      "graft_quant_i8" -> (cs => VectorOps.quantI8Stats(cs.head)),
+      "graft_vec_norm2" -> (cs => VectorOps.vecNorm2(cs.head)),
+      "graft_shingles" -> (cs =>
+        Shingles.shingles(cs.head, intLit(cs(1), "shingle width"))),
+      "graft_frame_energy" -> (cs =>
+        FrameEnergy.frameEnergy(cs.head, intLit(cs(1), "frame size"))),
+      "graft_frame_energies" -> (cs =>
+        FrameEnergy.frameEnergies(cs.head, intLit(cs(1), "frame size"))),
+      "graft_lsh_code" -> (cs =>
+        VectorOps.lshCode(cs.head, VectorOps.hashPlanes(
+          intLit(cs(1), "plane count"), intLit(cs(2), "dim")))),
+      "graft_normalize_text" -> (cs => NormalizeText.normalizeText(cs.head)),
+      "graft_bpe_apply" -> (cs =>
+        BpeApply.bpeApply(cs.head, strLit(cs(1), "merge pair left"),
+          strLit(cs(2), "merge pair right"))),
+      "graft_log2e20" -> (cs => ExactMath.log2e20(cs.head)),
+      "graft_unigram_viterbi" -> (cs =>
+        UnigramViterbi.unigramViterbi(cs(0), cs(1), cs(2))),
+      "graft_wp_merge" -> (cs =>
+        WordPieceOps.wpMerge(cs.head, strLit(cs(1), "merge pair left"),
+          strLit(cs(2), "merge pair right"), strLit(cs(3), "merged token"))),
+      "graft_wp_match" -> (cs => WordPieceOps.wpMatch(cs(0), cs(1))),
+      "graft_md5_u64" -> (cs => Md5Ops.md5U64(cs.head)),
+      "graft_md5_ws_u64" -> (cs => Md5Ops.md5WsU64(cs.head)),
+      "graft_shingle_md5_u64" -> (cs =>
+        Md5Ops.shingleMd5U64s(cs.head, intLit(cs(1), "shingle width")))
+    ).map { case (name, f) =>
+      name -> ((es: Seq[Expression]) =>
+        GraftBridge.converted(f(es.map(GraftBridge.column))))
+    }
 
   private def info(name: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftFunctions.type].getName, name)

@@ -25,7 +25,9 @@ import org.apache.spark.sql.types._
   *
   * Codegen'd so bucketed repartition/groupBy stays inside
   * WholeStageCodegen at scale; a Scala UDF here would break the codegen
-  * span around every partitioned write.
+  * span around every partitioned write. Hand-written rather than a
+  * [[Kernel]]: DATE and INT both reach a static method as `int`, so
+  * only the input type can choose `LocalDate.hashCode`.
   */
 case class JavaHash(child: Expression) extends UnaryExpression {
   override def dataType: DataType = IntegerType

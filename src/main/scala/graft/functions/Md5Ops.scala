@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.shiftrightunsigned
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.{lit, shiftrightunsigned}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Allocation-free md5 PREFIX hashing (r15, r14 verdict #4).
@@ -18,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * chain allocates a 32-char hex UTF8String, a substring, and a conv
   * parse PER ROW; on the explode-heavy rows (60M shingle windows at
   * gen-sf10) the churn showed up as 88–210 s GC pauses (PERF_NOTES
-  * r14). These expressions compute the SAME VALUE from the raw digest
+  * r14). These [[Kernel]]s compute the SAME VALUE from the raw digest
   * bytes: the first 8 md5 bytes big-endian are a signed long `u`, and
   * the N-hex-digit prefix is exactly `u >>> (64 − 4·N)` for N ≤ 15 —
   * so every call site keeps its bit-identical oracle and only the
@@ -75,7 +72,7 @@ object Md5Ops {
     * token array, the first 8 md5 bytes of the space-joined window,
     * WITHOUT building the window string. `distinct = false` keeps
     * every window with its multiplicity (positions align with
-    * `Shingles(distinct = false)`); `distinct = true` keeps each u64
+    * [[Shingles.shinglesAll]]); `distinct = true` keeps each u64
     * once, by first occurrence — equal to deduping the shingle STRINGS
     * exactly when md5-u64 identity is the downstream identity anyway
     * (it is, everywhere this is used). Windows containing a null token
@@ -117,63 +114,13 @@ object Md5Ops {
       else { val t = new Array[Any](outN); System.arraycopy(out, 0, t, 0, outN); t })
   }
 
-  case class Md5U64(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"md5_u64 expects string, got $t")
-    }
-    override protected def nullSafeEval(v: Any): Any =
-      Md5Ops.u64(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Md5Ops.u64($c);")
-    override protected def withNewChildInternal(newChild: Expression): Md5U64 =
-      copy(child = newChild)
-  }
-
-  case class Md5WsU64(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = child.nullable
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"md5_ws_u64 expects array<string>, got $t")
-    }
-    override protected def nullSafeEval(v: Any): Any =
-      Md5Ops.u64Ws(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Md5Ops.u64Ws($c);")
-    override protected def withNewChildInternal(newChild: Expression): Md5WsU64 =
-      copy(child = newChild)
-  }
-
-  case class ShingleMd5U64(child: Expression, width: Int,
-      distinct: Boolean = false) extends UnaryExpression {
-    require(width >= 1, s"shingle width must be >= 1, got $width")
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"shingle_md5_u64 expects array<string>, got $t")
-    }
-    override protected def nullSafeEval(v: Any): Any =
-      Md5Ops.shingleU64s(v.asInstanceOf[ArrayData], width, distinct)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Md5Ops.shingleU64s($c, $width, $distinct);")
-    override protected def withNewChildInternal(newChild: Expression): ShingleMd5U64 =
-      copy(child = newChild)
-  }
-
   /** Column entry points. `md5Prefix(c, n)` ≡ the engine's historical
     * `conv(substring(md5(c), 1, n), 16, 10).cast("long")` for
     * 1 ≤ n ≤ 15 — same value, no hex-string round-trip. */
   def md5U64(c: Column): Column =
-    GraftBridge.column(Md5U64(GraftBridge.expression(c)))
+    Kernel(this, "u64", LongType, Seq(StringType))(c)
+  def md5WsU64(c: Column): Column =
+    Kernel(this, "u64Ws", LongType, Seq(ArrayType(StringType)))(c)
   def md5Prefix(c: Column, hexDigits: Int): Column = {
     require(hexDigits >= 1 && hexDigits <= 15,
       s"md5Prefix supports 1..15 hex digits, got $hexDigits")
@@ -182,10 +129,12 @@ object Md5Ops {
   def md5WsPrefix(c: Column, hexDigits: Int): Column = {
     require(hexDigits >= 1 && hexDigits <= 15,
       s"md5WsPrefix supports 1..15 hex digits, got $hexDigits")
-    shiftrightunsigned(
-      GraftBridge.column(Md5WsU64(GraftBridge.expression(c))),
-      64 - 4 * hexDigits)
+    shiftrightunsigned(md5WsU64(c), 64 - 4 * hexDigits)
   }
-  def shingleMd5U64s(c: Column, width: Int, distinct: Boolean = false): Column =
-    GraftBridge.column(ShingleMd5U64(GraftBridge.expression(c), width, distinct))
+  def shingleMd5U64s(c: Column, width: Int, distinct: Boolean = false): Column = {
+    require(width >= 1, s"shingle width must be >= 1, got $width")
+    Kernel(this, "shingleU64s", ArrayType(LongType, containsNull = false),
+      Seq(ArrayType(StringType), IntegerType, BooleanType))(
+      c, lit(width), lit(distinct))
+  }
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** MinHash(8) signature of one document: the 8 mins of the affine
   * permutation family g_i(h) = (a_i·h + b_i) mod p over the 32-bit md5
@@ -13,8 +11,8 @@ import org.apache.spark.sql.types._
   * [[Md5Ops.shingleMd5U64s]] returns). Null for an empty array, so a
   * doc too short to shingle yields no signature.
   *
-  * The one signature kernel of the near-dup family. It is a Catalyst
-  * expression with one fused loop because the two DataFrame forms it
+  * The one signature kernel of the near-dup family. It is a [[Kernel]]
+  * with one fused loop because the two DataFrame forms it
   * replaces each paid for the signature twice over: a groupBy over
   * exploded (doc, window) rows shuffles every window, and eight
   * `array_min(transform(...))` folds are higher-order functions, which
@@ -23,23 +21,6 @@ import org.apache.spark.sql.types._
   * ignores duplicates, so all windows and distinct windows give the
   * same signature.
   */
-case class MinHashSig(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"minhash_sig expects array<bigint>, got $t")
-  }
-  override protected def nullSafeEval(v: Any): Any =
-    MinHashSig.sig(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.MinHashSig.sig($c);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
 object MinHashSig {
 
   /** p = 2^31−1 (prime); a_i < 2^30 so a_i·h < 2^62 fits a signed
@@ -75,5 +56,6 @@ object MinHashSig {
 
   /** Column entry point: `minHashSig(shingleMd5U64s(tokens, 3))`. */
   def minHashSig(c: Column): Column =
-    GraftBridge.column(MinHashSig(GraftBridge.expression(c)))
+    Kernel(this, "sig", ArrayType(LongType, containsNull = false),
+      Seq(ArrayType(LongType)), returnNullable = true)(c)
 }

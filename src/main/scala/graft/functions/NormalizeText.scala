@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text canonicalization before shingling/hashing — the CCNet/Gopher
@@ -36,38 +33,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `translate(s, 'A..Z', 'a..z')`, NOT `lower(s)`, because DuckDB's
   * lower() silently Unicode-case-folds and would drift from this
   * byte pass on any non-ASCII corpus (caught r15 by a planted
-  * unicode fixture). Implemented as ONE codegen'd byte
-  * pass: the regex chain allocates three intermediate strings and
+  * unicode fixture). Implemented as ONE byte pass, a codegen'd
+  * [[Kernel]]: the regex chain allocates three intermediate strings and
   * re-scans the document four times; normalization runs once per
   * document per corpus scan at 100 TB and must stay inside
   * WholeStageCodegen with the split/shingle stage it feeds.
   */
-case class NormalizeText(child: Expression, unicode: Boolean = false)
-    extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"normalize_text expects string, got $t")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    if (unicode) NormalizeText.makeUnicode(v.asInstanceOf[UTF8String])
-    else NormalizeText.make(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (unicode) "makeUnicode" else "make"
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeText.$fn($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
-}
-
 object NormalizeText {
 
   private def isPunct(c: Byte): Boolean =
@@ -187,9 +158,9 @@ object NormalizeText {
 
   /** Column-level entry point: `normalizeText($"text")`. */
   def normalizeText(c: Column): Column =
-    GraftBridge.column(NormalizeText(GraftBridge.expression(c)))
+    Kernel(this, "make", StringType, Seq(StringType))(c)
 
   /** Unicode-mode entry point: `normalizeTextUnicode($"text")`. */
   def normalizeTextUnicode(c: Column): Column =
-    GraftBridge.column(NormalizeText(GraftBridge.expression(c), unicode = true))
+    Kernel(this, "makeUnicode", StringType, Seq(StringType))(c)
 }

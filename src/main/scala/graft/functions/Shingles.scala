@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `width`-token shingles of a token array, space-joined — the unit of
@@ -20,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Semantically identical to
   * `[array_distinct](transform(sequence(1, size(t)-w+1),
   *    i -> concat_ws(' ', slice(t, i, w))))`
-  * but implemented as a codegen'd Catalyst expression because that
+  * but implemented as a codegen'd [[Kernel]] because that
   * higher-order-function chain is INTERPRETED: measured 5.0 s for a
   * 260k-shingle pass at sf0.1 (per-element lambda dispatch plus the
   * JIT never warming the megamorphic eval path) vs a plain bytes loop
@@ -30,30 +28,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Fewer than `width` tokens → empty array (a later `explode` drops
   * the document, matching the HOF form's `otherwise(array())`).
   */
-case class Shingles(child: Expression, width: Int, distinct: Boolean = true)
-    extends UnaryExpression {
-  require(width >= 1, s"shingle width must be >= 1, got $width")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"shingles expects array<string>, got $t")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    Shingles.make(v.asInstanceOf[ArrayData], width, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Shingles.make($c, $width, $distinct);")
-
-  override protected def withNewChildInternal(newChild: Expression): Shingles =
-    copy(child = newChild)
-}
-
 object Shingles {
   private val Space = UTF8String.fromString(" ")
 
@@ -87,11 +61,16 @@ object Shingles {
     new GenericArrayData(arr2)
   }
 
+  private def kernel(c: Column, width: Int, distinct: Boolean): Column = {
+    require(width >= 1, s"shingle width must be >= 1, got $width")
+    Kernel(this, "make", ArrayType(StringType, containsNull = false),
+      Seq(ArrayType(StringType), IntegerType, BooleanType))(
+      c, lit(width), lit(distinct))
+  }
+
   /** Column-level entry point: `shingles($"tokens", 3)` (distinct). */
-  def shingles(c: Column, width: Int): Column =
-    GraftBridge.column(Shingles(GraftBridge.expression(c), width))
+  def shingles(c: Column, width: Int): Column = kernel(c, width, distinct = true)
 
   /** All windows with multiplicity: `shinglesAll($"tokens", 2)`. */
-  def shinglesAll(c: Column, width: Int): Column =
-    GraftBridge.column(Shingles(GraftBridge.expression(c), width, distinct = false))
+  def shinglesAll(c: Column, width: Int): Column = kernel(c, width, distinct = false)
 }

@@ -1,11 +1,24 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+/** FNV-1a-64 of one STRING's UTF-8 bytes — the per-token hash
+  * [[SimHash64]] folds internally, exposed as its own codegen'd
+  * [[Kernel]] for the WEIGHTED SimHash path (Manku et al. WWW'07 §3:
+  * per-feature weights): weighting requires joining each token to its
+  * corpus df before voting, so the vote runs over exploded
+  * (doc, token, weight) rows rather than inside the array fold — the
+  * token hash must therefore be computable row-wise. Same constants,
+  * same bytes, bit-identical to the hash SimHash64 votes with.
+  */
+object Fnv64 {
+  /** Column-level entry point: `fnv64($"token")`. */
+  def fnv64(c: Column): Column =
+    Kernel(SimHash64, "fnv1a64", LongType, Seq(StringType))(c)
+}
 
 /** 64-bit SimHash of a token array (Charikar 2002, "Similarity
   * estimation techniques from rounding algorithms") — the classic
@@ -15,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Token hash is FNV-1a 64 over UTF-8 bytes (public-domain constants) —
   * deterministic across JVMs, no dependence on `Object.hashCode`.
   *
-  * Implemented as a Catalyst expression so the whole dedup pipeline
+  * Implemented as a codegen'd [[Kernel]] so the whole dedup pipeline
   * (tokenize → simhash → band → join) stays inside WholeStageCodegen:
   * one pass per document, no per-token row explosion — at 100 TB that
   * is the difference between a map-only stage and a 100× shuffle blowup
@@ -24,69 +37,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * The reference has no near-dup surface (SURVEY.md §2 "absent" list);
   * this is north-star scope.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sim_hash64 expects array<string>, got $t")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    SimHash64.hash(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash64.hash($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** FNV-1a-64 of one STRING's UTF-8 bytes — the per-token hash
-  * [[SimHash64]] folds internally, exposed as its own codegen'd
-  * expression for the WEIGHTED SimHash path (Manku et al. WWW'07 §3:
-  * per-feature weights): weighting requires joining each token to its
-  * corpus df before voting, so the vote runs over exploded
-  * (doc, token, weight) rows rather than inside the array fold — the
-  * token hash must therefore be computable row-wise. Same constants,
-  * same bytes, bit-identical to the hash SimHash64 votes with.
-  */
-case class Fnv64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"fnv64 expects string, got $t")
-    }
-
-  override protected def nullSafeEval(v: Any): Any =
-    SimHash64.fnv1a64(v.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash64.fnv1a64($c.getBytes());")
-
-  override protected def withNewChildInternal(newChild: Expression): Fnv64 =
-    copy(child = newChild)
-}
-
-object Fnv64 {
-  /** Column-level entry point: `fnv64($"token")`. */
-  def fnv64(c: Column): Column =
-    GraftBridge.column(Fnv64(GraftBridge.expression(c)))
-}
-
 object SimHash64 {
   private final val FnvOffset = 0xcbf29ce484222325L
   private final val FnvPrime = 0x100000001b3L
@@ -102,6 +52,9 @@ object SimHash64 {
     }
     h
   }
+
+  /** FNV-1a 64 over a string's UTF-8 bytes; called from generated code. */
+  def fnv1a64(s: UTF8String): Long = fnv1a64(s.getBytes)
 
   /** Called from generated code — must stay public + JVM-static-ish. */
   def hash(arr: ArrayData): Long = {
@@ -147,5 +100,5 @@ object SimHash64 {
 
   /** Column-level entry point: `simHash64($"tokens")`. */
   def simHash64(c: Column): Column =
-    GraftBridge.column(SimHash64(GraftBridge.expression(c)))
+    Kernel(this, "hash", LongType, Seq(ArrayType(StringType)))(c)
 }

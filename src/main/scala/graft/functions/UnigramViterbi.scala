@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Viterbi segmentation of one word under a unigram LM (Kudo 2018,
@@ -18,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Inputs are two ALIGNED arrays — the candidate pieces of THIS word
   * (its distinct substrings, ≤ 16·4 entries) and their scores
-  * (log2e20(count) − log2e20(total), always negative) — so the kernel
-  * is self-contained per row: no shared state, safe anywhere in a
-  * plan. DP over end positions j = 1..|w|:
+  * (log2e20(count) − log2e20(total), always negative) — so the
+  * [[Kernel]] is self-contained per row: no shared state, safe
+  * anywhere in a plan. DP over end positions j = 1..|w|:
   * dp[j] = max over k = 1..min(4, j) of dp[j−k] + score(w[j−k..j]),
   * candidates missing from the vocabulary are skipped; ties pick the
   * SMALLEST k (strict `>` replacement while k ascends) — the single
@@ -32,33 +29,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * trainer's seed vocabulary); an unreachable position throws rather
   * than degrading silently.
   */
-case class UnigramViterbi(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean =
-    first.nullable || second.nullable || third.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, ArrayType(StringType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"unigram_viterbi expects (string, array<string>, array<long>), got $t")
-    }
-
-  override protected def nullSafeEval(w: Any, ps: Any, ss: Any): Any =
-    UnigramViterbi.make(w.asInstanceOf[UTF8String],
-      ps.asInstanceOf[ArrayData], ss.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (w, ps, ss) =>
-      s"${ev.value} = graft.functions.UnigramViterbi.make($w, $ps, $ss);")
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): UnigramViterbi = copy(first = f, second = s, third = t)
-}
-
 object UnigramViterbi {
 
   /** Called from generated code. Words are tiny (≤ 16 chars by the
@@ -116,6 +86,7 @@ object UnigramViterbi {
   }
 
   def unigramViterbi(word: Column, pieces: Column, scores: Column): Column =
-    GraftBridge.column(UnigramViterbi(GraftBridge.expression(word),
-      GraftBridge.expression(pieces), GraftBridge.expression(scores)))
+    Kernel(this, "make", ArrayType(StringType, containsNull = false),
+      Seq(StringType, ArrayType(StringType), ArrayType(LongType)))(
+      word, pieces, scores)
 }

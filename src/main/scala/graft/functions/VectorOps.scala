@@ -19,6 +19,11 @@ import org.apache.spark.sql.types._
   * sf0.1). At 100 TB the verify join evaluates cosine on billions of
   * candidate pairs; it must stay inside WholeStageCodegen.
   *
+  * They stay hand-written rather than a [[Kernel]] because the array's
+  * element type (float or double) picks the method, and `ArrayData`
+  * does not carry it; [[NearestCentroids]] also captures a driver-built
+  * matrix. The float-only int8 stats are a [[Kernel]].
+  *
   * Fold order is left-to-right sequential in both the interpreted and
   * generated paths, so results are bit-identical and deterministic.
   */
@@ -138,32 +143,8 @@ object VectorOps {
     org.apache.spark.sql.catalyst.InternalRow(sum, l1, nnz)
   }
 
-  /** int8-quantization stats expression — see [[quantI8StatsF]]. */
-  case class QuantI8Stats(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("sum_q", LongType, nullable = false),
-      StructField("l1_q", LongType, nullable = false),
-      StructField("nnz", LongType, nullable = false)))
-    override def nullable: Boolean = child.nullable
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      elemType(child.dataType) match {
-        case Some(FloatType) => TypeCheckResult.TypeCheckSuccess
-        case t => TypeCheckResult.TypeCheckFailure(s"quant_i8 expects array<float>, got $t")
-      }
-
-    override protected def nullSafeEval(v: Any): Any =
-      quantI8StatsF(v.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.VectorOps.quantI8StatsF($c);")
-
-    override protected def withNewChildInternal(newChild: Expression): QuantI8Stats =
-      copy(child = newChild)
-  }
-
-  /** Cosine similarity expression; null on zero-norm input. */
+  /** Cosine similarity expression; null on zero-norm input. Hand-written:
+    * the element type picks `cosineF`/`cosineD`. */
   case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
     override def dataType: DataType = DoubleType
     override def nullable: Boolean = true
@@ -200,6 +181,7 @@ object VectorOps {
 
   /** Σx² (double; see [[norm2F]]) — the scan-side finite-vector
     * predicate `vec_norm2(v) < 'Infinity'` and a general norm builder.
+    * Hand-written: the element type picks `norm2F`/`norm2D`.
     */
   case class VecNorm2(child: Expression) extends UnaryExpression {
     override def dataType: DataType = DoubleType
@@ -228,7 +210,8 @@ object VectorOps {
       copy(child = newChild)
   }
 
-  /** Sign-bit LSH code expression; `planes` values must be ±1. */
+  /** Sign-bit LSH code expression; `planes` values must be ±1.
+    * Hand-written: the element type picks `lshCodeF`/`lshCodeD`. */
   case class LshCode(child: Expression, planes: Seq[Seq[Int]]) extends UnaryExpression {
     override def dataType: DataType = LongType
     override def nullable: Boolean = child.nullable
@@ -295,7 +278,8 @@ object VectorOps {
   /** `m` nearest-centroid indices (IVF coarse quantization) — the
     * per-vector assign/probe step of an inverted-file ANN index, fused
     * into one codegen'd loop (k × dim FMAs per row, no explode of the
-    * corpus × centroids pairs).
+    * corpus × centroids pairs). Hand-written: it captures the
+    * driver-built centroid matrix as a codegen reference.
     */
   case class NearestCentroids(child: Expression, centroids: Seq[Seq[Double]], m: Int)
       extends UnaryExpression {
@@ -327,7 +311,11 @@ object VectorOps {
 
   /** int8-quantization stats struct (sum_q, l1_q, nnz). */
   def quantI8Stats(v: Column): Column =
-    GraftBridge.column(QuantI8Stats(GraftBridge.expression(v)))
+    Kernel(this, "quantI8StatsF", StructType(Seq(
+      StructField("sum_q", LongType, nullable = false),
+      StructField("l1_q", LongType, nullable = false),
+      StructField("nnz", LongType, nullable = false))),
+      Seq(ArrayType(FloatType)))(v)
 
   /** Cosine similarity; null/zero-norm safe (returns null). */
   def cosine(a: Column, b: Column): Column =

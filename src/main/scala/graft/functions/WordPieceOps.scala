@@ -2,13 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The two codegen'd kernels of the WordPiece tokenizer family
+/** The codegen'd kernels of the WordPiece tokenizer family
   * (Schuster & Nakajima 2012; the BERT tokenizer) — the third
   * tokenizer family next to BPE ([[BpeApply]]) and unigram-LM
   * ([[UnigramViterbi]]).
@@ -19,9 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    tokens carry the `##` continuation prefix (merging `a` + `##b`
   *    yields `ab`, `##a` + `##b` yields `##ab`) — so the merge-apply
   *    needs the merged token as an explicit constant
-  *    ([[WordPieceMergeApply]]; [[BpeApply]] hardcodes t1 ++ t2);
+  *    ([[mergeApply]]; [[BpeApply]] hardcodes t1 ++ t2);
   *  - encoding is greedy LONGEST-MATCH-FIRST against the shipped
-  *    vocabulary ([[WordPieceMatch]]), not a replay of the merges —
+  *    vocabulary ([[matchWord]]), not a replay of the merges —
   *    the segmentation BERT's runtime actually produces, which can
   *    legitimately differ from the training segmentation of the same
   *    word.
@@ -41,38 +42,8 @@ object WordPieceOps {
     * exactly [[BpeApply]]'s: `merged` ≠ `t1` (t2 minus `##` is
     * non-empty), so the scan resuming after a consumed pair can never
     * re-match the token it just emitted.
-    */
-  case class WordPieceMergeApply(child: Expression, t1: String, t2: String,
-      merged: String) extends UnaryExpression {
-
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = child.nullable
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-        case t => TypeCheckResult.TypeCheckFailure(
-          s"wp_merge expects array<string>, got $t")
-      }
-
-    override protected def nullSafeEval(v: Any): Any =
-      WordPieceOps.mergeApply(v.asInstanceOf[ArrayData],
-        UTF8String.fromString(t1), UTF8String.fromString(t2),
-        UTF8String.fromString(merged))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val u1 = ctx.addReferenceObj("wpT1", UTF8String.fromString(t1))
-      val u2 = ctx.addReferenceObj("wpT2", UTF8String.fromString(t2))
-      val um = ctx.addReferenceObj("wpMerged", UTF8String.fromString(merged))
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.WordPieceOps.mergeApply($c, $u1, $u2, $um);")
-    }
-
-    override protected def withNewChildInternal(newChild: Expression)
-        : WordPieceMergeApply = copy(child = newChild)
-  }
-
-  /** Called from generated code. Same null-element contract as
+    *
+    * Called from generated code. Same null-element contract as
     * [[BpeApply.make]]: split() output only, throw loudly. */
   def mergeApply(arr: ArrayData, t1: UTF8String, t2: UTF8String,
       merged: UTF8String): ArrayData = {
@@ -96,6 +67,9 @@ object WordPieceOps {
     new GenericArrayData(out.toArray)
   }
 
+  private val UnkArray: ArrayData =
+    new GenericArrayData(Array[Any](UTF8String.fromString(Unk)))
+
   /** Greedy longest-match-first WordPiece encode of one word (BERT's
     * `WordpieceTokenizer`): starting at position 0, take the LONGEST
     * vocabulary piece matching at the cursor — a bare piece at
@@ -109,38 +83,8 @@ object WordPieceOps {
     * (the [[UnigramViterbi]] aligned-array pattern) — so the kernel is
     * self-contained per row. Word lengths are whitespace-token sized;
     * the O(|w|²) probe loop is branch-predictable and allocation-free
-    * until the output build.
+    * until the output build. Called from generated code.
     */
-  case class WordPieceMatch(left: Expression, right: Expression)
-      extends BinaryExpression {
-
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = left.nullable || right.nullable
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (StringType, ArrayType(StringType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case t => TypeCheckResult.TypeCheckFailure(
-          s"wp_match expects (string, array<string>), got $t")
-      }
-
-    override protected def nullSafeEval(w: Any, ps: Any): Any =
-      WordPieceOps.matchWord(w.asInstanceOf[UTF8String],
-        ps.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (w, ps) =>
-        s"${ev.value} = graft.functions.WordPieceOps.matchWord($w, $ps);")
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression)
-        : WordPieceMatch = copy(left = l, right = r)
-  }
-
-  private val UnkArray: ArrayData =
-    new GenericArrayData(Array[Any](UTF8String.fromString(Unk)))
-
-  /** Called from generated code. */
   def matchWord(word: UTF8String, pieces: ArrayData): ArrayData = {
     val np = pieces.numElements()
     val set = new java.util.HashSet[String](np * 2)
@@ -186,15 +130,16 @@ object WordPieceOps {
     new GenericArrayData(out.toArray)
   }
 
-  /** [[WordPieceMatch]] with the vocabulary as a CONSTANT: the shipped
+  /** [[matchWord]] with the vocabulary as a CONSTANT: the shipped
     * piece set is charset-bounded (initial alphabet + the merge-table
     * pieces), never corpus-sized, so the longest-match kernel can probe
     * ONE shared hash set instead of a per-word candidate array — which
     * removes the candidate-substring explode, its distinct, the vocab
     * equi-join and the per-word collect_list from the encode plan
     * (r18). The set is built once per executor (lazy, transient);
-    * results are identical to [[WordPieceMatch]] because a piece
+    * results are identical to [[matchWord]] because a piece
     * matching at a cursor of w is found in either representation.
+    * Hand-written: it captures the driver-built vocabulary set.
     */
   case class WordPieceMatchVocab(child: Expression, vocab: Seq[String])
       extends UnaryExpression {
@@ -239,11 +184,13 @@ object WordPieceOps {
 
   /** Column-level entry points. */
   def wpMerge(c: Column, t1: String, t2: String, merged: String): Column =
-    GraftBridge.column(WordPieceMergeApply(GraftBridge.expression(c), t1, t2, merged))
+    Kernel(this, "mergeApply", ArrayType(StringType, containsNull = false),
+      Seq(ArrayType(StringType), StringType, StringType, StringType))(
+      c, lit(t1), lit(t2), lit(merged))
 
   def wpMatch(w: Column, pieces: Column): Column =
-    GraftBridge.column(WordPieceMatch(
-      GraftBridge.expression(w), GraftBridge.expression(pieces)))
+    Kernel(this, "matchWord", ArrayType(StringType, containsNull = false),
+      Seq(StringType, ArrayType(StringType)))(w, pieces)
 
   def wpMatchVocab(w: Column, vocab: Seq[String]): Column =
     GraftBridge.column(WordPieceMatchVocab(GraftBridge.expression(w), vocab))

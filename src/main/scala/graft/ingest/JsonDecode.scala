@@ -92,20 +92,4 @@ object JsonDecode {
           case c => c.toString
         }): _*),
       schema)
-
-  /** Decode an in-memory JSON-string column (same semantics, used by
-    * the streaming path and tests).
-    */
-  def decodeColumn(df: DataFrame, jsonCol: String, schema: GStruct): DataFrame = {
-    // PERMISSIVE (the only from_json mode besides FAILFAST — Spark
-    // rejects DROPMALFORMED here): a malformed line parses to an
-    // all-null struct, filtered below.
-    val parsed = df.select(
-      from_json(col(jsonCol), readSchema(schema)).as("r"))
-      // from_json cannot drop rows; a malformed line yields an all-null
-      // struct — filter it to reproduce the file-read Q7 semantics.
-      .filter(col("r").isNotNull)
-      .select(col("r.*"))
-    decodeRaw(parsed, schema)
-  }
 }

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+// Exact long division (Catalyst IntegralDivide, never double `/`):
+// every caller's operands are non-negative, so truncation is the floor.
+import graft.functions.ExactMath.{ceilDiv, divTrunc}
 import graft.functions.SimHash64.simHash64
 
 /** Batch 6 ★ — near-duplicate detection over `documents`: n-gram
@@ -153,20 +156,6 @@ object DedupQueries {
       |  FROM pp0),
       |pown AS (SELECT h, MIN(ok) AS mo FROM pch GROUP BY 1)""".stripMargin
 
-  /** Exact integer floor/ceil division on non-negative long columns.
-    * `Column./` is TRUE (double) division: `(n*t + 9999) / 10000` then
-    * `.cast("int")` truncates ~ceil-0.0001, which shortens the PPJoin
-    * prefix by one element right at the threshold (a 1-shingle doc got
-    * prefix length 0 and silently never joined — ADVICE r1, high).
-    * Delegates to Catalyst IntegralDivide (exact over the full long
-    * range — the earlier pmod-subtraction trick was exact only below
-    * 2^53; see graft.functions.ExactMath).
-    */
-  private def floorDiv(a: Column, b: Column): Column =
-    graft.functions.ExactMath.divTrunc(a, b) // all callers non-negative
-  private def ceilDiv(a: Column, b: Column): Column =
-    graft.functions.ExactMath.ceilDiv(a, b)
-
   /** doc_id + distinct 3-token shingle *text*, exploded. Codegen'd
     * [[graft.functions.Shingles]] — the interpreted HOF form
     * (`transform(sequence...)` + `slice` + `concat_ws`) measured 5.0 s
@@ -301,7 +290,7 @@ object DedupQueries {
         size(array_intersect(col("hs1"), col("hs2"))).cast("long").as("common"),
         col("n1"), col("n2"))
       .select(col("d1"), col("d2"),
-        floorDiv(col("common") * 10000L, col("n1") + col("n2") - col("common"))
+        divTrunc(col("common") * 10000L, col("n1") + col("n2") - col("common"))
           .as("jac_e4"))
       .filter(col("jac_e4") >= minJacE4)
   }
@@ -887,7 +876,7 @@ object DedupQueries {
         nTotal.join(nHit, Seq("doc_id"), "left")
           .select(col("doc_id"), col("n_grams"),
             coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-          .withColumn("frac_e4", floorDiv(col("n_hit") * 10000L, col("n_grams")))
+          .withColumn("frac_e4", divTrunc(col("n_hit") * 10000L, col("n_grams")))
           .orderBy("doc_id")
       },
       Some("""WITH t13 AS (
@@ -962,7 +951,7 @@ object DedupQueries {
             size(array_intersect(col("hs1"), col("hs2"))).cast("long").as("common"),
             col("n1"), col("n2"))
           .select(col("d1"), col("d2"),
-            floorDiv(col("common") * 10000L, col("n1") + col("n2") - col("common"))
+            divTrunc(col("common") * 10000L, col("n1") + col("n2") - col("common"))
               .as("jac_e4"))
           .filter(col("jac_e4") >= 6000L)
           .orderBy("d1", "d2")
@@ -1013,11 +1002,11 @@ object DedupQueries {
         val truth = jacPairTable(s, dir)
         val cand = bandPairs(minhashBandKeys(Tables(s, dir, "documents")))
         truth.join(cand.withColumn("hit", lit(1L)), Seq("d1", "d2"), "left")
-          .groupBy(floorDiv(col("jac_e4"), lit(1000L)).as("jac_band"))
+          .groupBy(divTrunc(col("jac_e4"), lit(1000L)).as("jac_band"))
           .agg(count(lit(1)).as("n_true"),
             sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
           .select(col("jac_band"), col("n_true"), col("n_hit"),
-            floorDiv(col("n_hit") * 20000L + col("n_true"), col("n_true") * 2L)
+            divTrunc(col("n_hit") * 20000L + col("n_true"), col("n_true") * 2L)
               .as("recall_e4"))
           .orderBy("jac_band")
       },
@@ -1205,7 +1194,7 @@ object DedupQueries {
     // Oracle parity: BOTH engines count by the md5-60 shingle identity
     // (long vs 15-hex prefix — order/equality-isomorphic), and DuckDB
     // dedups on the raw shingle string BEFORE hashing exactly as the
-    // codegen'd Shingles(distinct=true) does, so even a hash collision
+    // codegen'd Shingles.shingles (distinct) does, so even a hash collision
     // produces identical counts in both engines.
     QueryDef(
       "q_substring_dedup",
@@ -1226,7 +1215,7 @@ object DedupQueries {
           .select(col("doc_id"),
             coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
             coalesce(col("n_dup"), lit(0L)).as("n_dup"),
-            floorDiv(coalesce(col("n_dup"), lit(0L)) * 10000L,
+            divTrunc(coalesce(col("n_dup"), lit(0L)) * 10000L,
               greatest(coalesce(col("n_shingles"), lit(0L)), lit(1L)))
               .as("dup_frac_e4"))
           .orderBy("doc_id")
@@ -1279,7 +1268,7 @@ object DedupQueries {
     // Oracle parity: both engines count by the md5-60 identity (long
     // vs 15-hex prefix — equality-isomorphic) and DuckDB dedups the
     // raw shingle STRING before hashing, exactly as the codegen'd
-    // Shingles(distinct=true) does — identical counts even under a
+    // Shingles.shingles (distinct) does — identical counts even under a
     // 60-bit collision (the q_substring_dedup collision rule).
     QueryDef(
       "q_substring_cross",
@@ -1301,7 +1290,7 @@ object DedupQueries {
           .select(col("doc_id"),
             coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
             coalesce(col("n_cross"), lit(0L)).as("n_cross"),
-            floorDiv(coalesce(col("n_cross"), lit(0L)) * 10000L,
+            divTrunc(coalesce(col("n_cross"), lit(0L)) * 10000L,
               greatest(coalesce(col("n_shingles"), lit(0L)), lit(1L)))
               .as("cross_frac_e4"),
             coalesce(col("owners_max"), lit(0L)).as("owners_max"))
@@ -1422,7 +1411,7 @@ object DedupQueries {
           .select(col("doc_id"), col("n_tokens"),
             coalesce(col("n_pruned"), lit(0L)).as("n_pruned"),
             (col("n_tokens") - coalesce(col("n_pruned"), lit(0L))).as("n_kept"),
-            floorDiv(coalesce(col("n_pruned"), lit(0L)) * 10000L,
+            divTrunc(coalesce(col("n_pruned"), lit(0L)) * 10000L,
               greatest(col("n_tokens"), lit(1L))).as("pruned_frac_e4"))
           .orderBy("doc_id")
       },
@@ -1501,7 +1490,7 @@ object DedupQueries {
             greatest(col("n_grams") - 3L, lit(0L)).as("n_windows"),
             coalesce(col("n_selected"), lit(0L)).as("n_selected"),
             when(col("n_grams") > 3L,
-              floorDiv(coalesce(col("n_selected"), lit(0L)) * 10000L,
+              divTrunc(coalesce(col("n_selected"), lit(0L)) * 10000L,
                 col("n_grams") - 3L)).otherwise(lit(0L)).as("density_e4"))
           .orderBy("doc_id")
       },
@@ -1557,7 +1546,7 @@ object DedupQueries {
           .select(col("doc_id"),
             coalesce(col("n_fp"), lit(0L)).as("n_fp"),
             coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-            floorDiv(coalesce(col("n_shared"), lit(0L)) * 10000L,
+            divTrunc(coalesce(col("n_shared"), lit(0L)) * 10000L,
               greatest(coalesce(col("n_fp"), lit(0L)), lit(1L)))
               .as("shared_frac_e4"))
           .orderBy("doc_id")
@@ -1634,7 +1623,7 @@ object DedupQueries {
             .agg(sum(col("a") * col("b")).as("inter"),
               sum("a").as("na"), sum("b").as("nb"))
             .select(col("doc_id"),
-              floorDiv(col("inter") * 10000L,
+              divTrunc(col("inter") * 10000L,
                 greatest(col("na") + col("nb") - col("inter"), lit(1L)))
                 .as(name))
         val raw = jacOf(shset(va, 1L, 0L), shset(vb, 0L, 1L), "jac_raw_e4")
@@ -1837,7 +1826,7 @@ object DedupQueries {
             "src_b")
           .select(col("src_a"), col("src_b"), col("n_shared"), col("n_a"),
             col("n_b"),
-            floorDiv(col("n_shared") * 1000000L, least(col("n_a"), col("n_b")))
+            divTrunc(col("n_shared") * 1000000L, least(col("n_a"), col("n_b")))
               .as("containment_e6"))
           .orderBy("src_a", "src_b")
       },
@@ -2081,7 +2070,7 @@ object DedupQueries {
               sum("n_toks").as("n_tokens"),
               sum(col("keep") * col("n_toks")).as("n_tokens_kept"))
             .withColumn("kept_frac_e4",
-              floorDiv(col("n_tokens_kept") * 10000L,
+              divTrunc(col("n_tokens_kept") * 10000L,
                 greatest(col("n_tokens"), lit(1L))))
             .orderBy("doc_id")
         } finally paras.unpersist(blocking = false)
@@ -2214,10 +2203,10 @@ object DedupQueries {
             sum(when(col("doc_id") >= 20, 1L).otherwise(0L)).as("n_train"),
             sum(coalesce(col("is_contam"), lit(0L))).as("n_contam"))
           .select(col("source"), col("n_docs"), col("n_tokens"),
-            floorDiv(col("qc_keep") * 10000L, col("n_docs")).as("keep_e4"),
-            floorDiv(col("n_dup") * 10000L, col("n_docs")).as("dup_e4"),
-            floorDiv(col("n_head") * 10000L, col("n_docs")).as("head_e4"),
-            floorDiv(col("n_contam") * 10000L,
+            divTrunc(col("qc_keep") * 10000L, col("n_docs")).as("keep_e4"),
+            divTrunc(col("n_dup") * 10000L, col("n_docs")).as("dup_e4"),
+            divTrunc(col("n_head") * 10000L, col("n_docs")).as("head_e4"),
+            divTrunc(col("n_contam") * 10000L,
               greatest(col("n_train"), lit(1L))).as("contam_e4"))
           .orderBy("source")
       },

@@ -966,7 +966,7 @@ object SimilarityQueries {
     // q_embed_quant ★ — symmetric int8 quantization stats per vector
     // (the storage play: float32 embeddings quantized 4× smaller for
     // the at-rest corpus, with |error| ≤ max|x|/254 per element). One
-    // fused codegen'd pass per row (QuantI8Stats), map-only, integer
+    // fused codegen'd pass per row (VectorOps.quantI8Stats), map-only, integer
     // outputs. ORACLE-CHECKED: both engines compute bit-identical
     // doubles (same IEEE ops, order-independent max) and the corpus
     // margin from every .5 rounding boundary is ≥ 3.1e-6 (measured).

@@ -1,5 +1,9 @@
 package graft.queries
 
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.Md5Ops
+
 /** Deterministic planted NATURAL-TEXT fixtures unioned into the
   * learned/rule-based text rows (r15 verdict #4): the shipped corpus's
   * text is synthetic (all-English tokens under non-English lang
@@ -113,13 +117,11 @@ object TextFixture {
   // all-negative one keeps nothing, and a 21-doc mixing ramp sweeps
   // the score (and the predicted probability) through its range.
 
-  private def h60(seed: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(seed.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16)
-  }
-  private def qcDimOf(t: String): Int = (h60(t) % 256L).toInt // h60 ≥ 0
-  private def qcWeightOf(d: Int): Long = h60("qw" + d) % 200001L - 100000L
+  // md5Prefix(x, 15) on the driver is the same kernel: u64 >>> 4 (≥ 0)
+  private def qcDimOf(t: String): Int =
+    ((Md5Ops.u64(UTF8String.fromString(t)) >>> 4) % 256L).toInt
+  private def qcWeightOf(d: Int): Long =
+    (Md5Ops.u64(UTF8String.fromString("qw" + d)) >>> 4) % 200001L - 100000L
 
   /** 8 tokens with strongly POSITIVE weight and 8 strongly NEGATIVE,
     * scanned deterministically from the `qcw<i>` candidate family.

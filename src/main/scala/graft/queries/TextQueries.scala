@@ -2,8 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
+import graft.functions.ExactMath.divTrunc
+import graft.functions.Md5Ops
 
 /** Batch 5 ★ — text analysis over the `documents` table: token
   * statistics, quality scoring, language-marker scoring, and
@@ -35,7 +38,6 @@ object TextQueries {
     * caller has multiple consumers (the PERF_NOTES race rule).
     */
   def dfCutWeights(docs: DataFrame): DataFrame = {
-    import graft.functions.ExactMath
     val tf = docs.select(col("doc_id"), explode(toks).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df_ = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -53,9 +55,9 @@ object TextQueries {
     // unchanged.
     val wgt = tf.join(df_, "term").crossJoin(broadcast(n))
       .filter(col("df") <= greatest(lit(2L),
-        least(ExactMath.divTrunc(col("n_docs"), lit(10L)), lit(100L))))
+        least(divTrunc(col("n_docs"), lit(10L)), lit(100L))))
       .select(col("doc_id"), col("term"),
-        (col("tf") * ExactMath.divTrunc(col("n_docs") * 100L, col("df"))).as("w"))
+        (col("tf") * divTrunc(col("n_docs") * 100L, col("df"))).as("w"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     wgt.count()
     wgt
@@ -82,12 +84,7 @@ object TextQueries {
     * long division (ExactMath), never double (per-doc numerators can't
     * reach 2^53 today, but the exact form costs nothing). */
   private def ratioE4(num: Column, den: Column): Column =
-    graft.functions.ExactMath.divTrunc(num * lit(20000L) + den, den * lit(2L))
-
-  /** Exact integer division on non-negative longs (≡ DuckDB `//` in
-    * that range), via Catalyst IntegralDivide — exact full long range. */
-  private def floorDivL(a: Column, b: Column): Column =
-    graft.functions.ExactMath.divTrunc(a, b)
+    divTrunc(num * lit(20000L) + den, den * lit(2L))
 
   /** k-th smallest value of the weighted multiset described by a
     * `(z: long, c: long)` histogram frame, WITHOUT any global window:
@@ -108,7 +105,7 @@ object TextQueries {
     while (hi - lo + 1L > maxB) {
       val w = (hi - lo) / maxB + 1L // bucket width: ⌈(hi-lo+1)/maxB⌉
       val counts = hist.filter(col("z").between(lo, hi))
-        .groupBy(floorDivL(col("z") - lit(lo), lit(w)).as("b"))
+        .groupBy(divTrunc(col("z") - lit(lo), lit(w)).as("b"))
         .agg(sum("c").as("cb"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       var i = 0
@@ -137,21 +134,17 @@ object TextQueries {
   // rebuild the identical model from indices alone, and the APPLY is
   // exact integer end-to-end).
 
-  /** 60-bit md5-derived value for a seed string — driver-side twin of
-    * the oracle's ('0x' || substring(md5(seed), 1, 15))::BIGINT. */
-  private def h60(seed: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(seed.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16)
-  }
-
   /** e6-unit weight per hashed feature dim: md5("qw"+d) folded into
-    * [-100000, 100000] (i.e. [-0.1, 0.1]). */
+    * [-100000, 100000] (i.e. [-0.1, 0.1]). The 60-bit md5 prefix is the
+    * md5Prefix kernel run on the driver (`u64 >>> 4`), the twin of the
+    * oracle's ('0x' || substring(md5(seed), 1, 15))::BIGINT. */
   private[graft] lazy val qcWeights: IndexedSeq[Long] =
-    (0 until 256).map(d => h60("qw" + d) % 200001L - 100000L)
+    (0 until 256).map(d =>
+      (Md5Ops.u64(UTF8String.fromString("qw" + d)) >>> 4) % 200001L - 100000L)
 
   /** e6-unit bias, same derivation family. */
-  private[graft] lazy val qcBias: Long = h60("qwb") % 200001L - 100000L
+  private[graft] lazy val qcBias: Long =
+    (Md5Ops.u64(UTF8String.fromString("qwb")) >>> 4) % 200001L - 100000L
 
   /** Feature dim of a token — q_feature_hash's exact scheme. */
   private def qcDim(t: Column): Column =
@@ -915,7 +908,7 @@ object TextQueries {
     * LIKELIHOOD GAIN count(t1 t2) / (count(t1) · count(t2)) — the
     * WordPiece objective, vs BPE's raw pair count — applied greedily
     * left-to-right by the codegen'd
-    * [[graft.functions.WordPieceOps.WordPieceMergeApply]] (merged
+    * [[graft.functions.WordPieceOps.wpMerge]] (merged
     * token = t1 ++ t2 minus t2's `##`).
     *
     * The score is the IEEE-754 double n / (na · nb): the operands are
@@ -1034,7 +1027,7 @@ object TextQueries {
   /** Per-word longest-match encode frame (w, n_pieces, unk, diverged)
     * against the at-rest [[wordPieceModel]] vocabulary — greedy
     * longest-match-first, BERT's actual runtime algorithm
-    * ([[graft.functions.WordPieceOps.WordPieceMatch]]), which is NOT a
+    * ([[graft.functions.WordPieceOps.wpMatch]]), which is NOT a
     * replay of the merges: `diverged` marks trained words whose
     * longest-match segmentation differs from their training
     * segmentation (a real, observable property of WordPiece).
@@ -1229,14 +1222,14 @@ object TextQueries {
       val occ = bg.join(bgc, "bg")
         .join(pfx, substring_index(col("bg"), " ", 1) === col("p"))
         .select(col("doc_id"),
-          floorDivL(col("cbg") * 10000L, col("cp")).as("p_e4"))
+          divTrunc(col("cbg") * 10000L, col("cp")).as("p_e4"))
       val agg = occ.groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"), sum("p_e4").as("sum_e4"))
       docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
           when(coalesce(col("n_bigrams"), lit(0L)) === 0L, lit(0L))
-            .otherwise(floorDivL(col("sum_e4"), col("n_bigrams")))
+            .otherwise(divTrunc(col("sum_e4"), col("n_bigrams")))
             .as("lm_score_e4"))
     }
     // only needed while the table is being written; if it already
@@ -1399,12 +1392,12 @@ object TextQueries {
         count(lit(1)).as("n_distinct_bg"))
     tokStats.join(bg, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_tokens"),
-        floorDivL(col("n_distinct") * 10000L, col("n_tokens"))
+        divTrunc(col("n_distinct") * 10000L, col("n_tokens"))
           .as("uniq_token_e4"),
-        floorDivL(coalesce(col("max_bg"), lit(0L)) * 10000L,
+        divTrunc(coalesce(col("max_bg"), lit(0L)) * 10000L,
           greatest(coalesce(col("n_bigrams"), lit(0L)), lit(1L)))
           .as("top_bigram_e4"),
-        floorDivL(
+        divTrunc(
           (coalesce(col("n_bigrams"), lit(0L)) - coalesce(col("n_distinct_bg"), lit(0L))) * 10000L,
           greatest(coalesce(col("n_bigrams"), lit(0L)), lit(1L)))
           .as("dup_bigram_e4"))
@@ -1448,8 +1441,8 @@ object TextQueries {
     val weights = tfq.join(df_, "term").join(dl, "doc_id")
       .crossJoin(broadcast(nd)).crossJoin(broadcast(tt))
       .select(col("doc_id"), col("term"),
-        floorDivL(
-          floorDivL(col("tf") * 22L * col("t_tokens") * 10000L,
+        divTrunc(
+          divTrunc(col("tf") * 22L * col("t_tokens") * 10000L,
             col("tf") * 10L * col("t_tokens") + lit(3L) * col("t_tokens")
               + lit(9L) * col("dl") * col("n_docs")) * col("n_docs"),
           col("df")).as("w"))
@@ -1989,7 +1982,7 @@ object TextQueries {
           .withColumn("doc_len", sum("tf").over(wDoc))
           .crossJoin(broadcast(n))
           .select(col("doc_id"), col("term"),
-            floorDivL(col("tf") * 10000L * col("n_docs"),
+            divTrunc(col("tf") * 10000L * col("n_docs"),
               col("df") * col("doc_len")).as("score_e4"))
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= 3)
@@ -2155,7 +2148,7 @@ object TextQueries {
           .join(pfx, substring_index(col("bg"), " ", 1) === col("p"), "left")
           .select(col("split"),
             when(col("cbg").isNull, 0L)
-              .otherwise(floorDivL(col("cbg") * 10000L, col("cp"))).as("p_e4"),
+              .otherwise(divTrunc(col("cbg") * 10000L, col("cp"))).as("p_e4"),
             when(col("cbg").isNull, 1L).otherwise(0L).as("unseen"))
         val sc = occ.groupBy("split")
           .agg(count(lit(1)).as("n_bigrams"), sum("unseen").as("n_unseen"),
@@ -2173,9 +2166,9 @@ object TextQueries {
             coalesce(col("sum_e4"), lit(0L)).as("sum_e4"))
           .select(col("split"), col("n_docs"), col("n_bigrams"),
             col("n_unseen"),
-            floorDivL(col("n_unseen") * 10000L,
+            divTrunc(col("n_unseen") * 10000L,
               greatest(col("n_bigrams"), lit(1L))).as("oov_e4"),
-            floorDivL(col("sum_e4"),
+            divTrunc(col("sum_e4"),
               greatest(col("n_bigrams"), lit(1L))).as("score_e4"))
           .orderBy("split")
       },
@@ -2303,23 +2296,23 @@ object TextQueries {
           .agg(count(lit(1)).as("n_docs"), sum("lm_score_e4").as("sum_e4"))
         val tot = perSrc.agg(sum("sum_e4").as("ts"), sum("n_docs").as("tn"))
         val w = perSrc.crossJoin(broadcast(tot))
-          .withColumn("m_e4", floorDivL(col("sum_e4"), col("n_docs")))
+          .withColumn("m_e4", divTrunc(col("sum_e4"), col("n_docs")))
           .withColumn("excess_e4",
-            floorDivL(col("ts"), col("tn")) - col("m_e4"))
+            divTrunc(col("ts"), col("tn")) - col("m_e4"))
           .withColumn("w0", lit(1000000L))
           .withColumn("f",
             greatest(lit(1000000L) + col("excess_e4") * 100L, lit(1L)))
-          .withColumn("w1", floorDivL(col("w0") * col("f"), lit(1000000L)))
-          .withColumn("w2", floorDivL(col("w1") * col("f"), lit(1000000L)))
-          .withColumn("w3", floorDivL(col("w2") * col("f"), lit(1000000L)))
+          .withColumn("w1", divTrunc(col("w0") * col("f"), lit(1000000L)))
+          .withColumn("w2", divTrunc(col("w1") * col("f"), lit(1000000L)))
+          .withColumn("w3", divTrunc(col("w2") * col("f"), lit(1000000L)))
         val sums = w.agg(sum("w0").as("t0"), sum("w1").as("t1"),
           sum("w2").as("t2"), sum("w3").as("t3"))
         w.crossJoin(broadcast(sums))
           .select(col("source"), col("n_docs"), col("m_e4"), col("excess_e4"),
-            floorDivL(col("w0") * 1000000L, col("t0")).as("s0_e6"),
-            floorDivL(col("w1") * 1000000L, col("t1")).as("s1_e6"),
-            floorDivL(col("w2") * 1000000L, col("t2")).as("s2_e6"),
-            floorDivL(col("w3") * 1000000L, col("t3")).as("s3_e6"))
+            divTrunc(col("w0") * 1000000L, col("t0")).as("s0_e6"),
+            divTrunc(col("w1") * 1000000L, col("t1")).as("s1_e6"),
+            divTrunc(col("w2") * 1000000L, col("t2")).as("s2_e6"),
+            divTrunc(col("w3") * 1000000L, col("t3")).as("s3_e6"))
           .orderBy("source")
       },
       Some(s"""WITH $NgramLmSql,
@@ -2558,7 +2551,7 @@ object TextQueries {
             sum("n_chars").as("n_chars"),
             sum("n_sub").as("n_bpe"))
           .select(col("doc_id"), col("n_words"), col("n_chars"), col("n_bpe"),
-            floorDivL(col("n_chars") * 10000L, greatest(col("n_bpe"), lit(1L)))
+            divTrunc(col("n_chars") * 10000L, greatest(col("n_bpe"), lit(1L)))
               .as("compression_e4"))
           .orderBy("doc_id"),
       Some(s"""${bpeRoundsSql(finalApply = true)},
@@ -2599,8 +2592,8 @@ object TextQueries {
             sum("n_sub").as("n_bpe"),
             sum("fallback").as("n_fallback"))
           .select(col("lang"), col("n_words"), col("n_bpe"), col("n_fallback"),
-            floorDivL(col("n_bpe") * 10000L, col("n_words")).as("fertility_e4"),
-            floorDivL(col("n_chars") * 10000L, greatest(col("n_bpe"), lit(1L)))
+            divTrunc(col("n_bpe") * 10000L, col("n_words")).as("fertility_e4"),
+            divTrunc(col("n_chars") * 10000L, greatest(col("n_bpe"), lit(1L)))
               .as("chars_per_sub_e4"))
           .orderBy("lang"),
       Some(s"""${bpeRoundsSql(finalApply = true)},
@@ -2703,7 +2696,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_words"), sum("n_sub").as("n_pieces"),
             sum("fallback").as("n_fallback"))
           .withColumn("fertility_e4",
-            floorDivL(col("n_pieces") * 10000L, col("n_words")))
+            divTrunc(col("n_pieces") * 10000L, col("n_words")))
           .orderBy("doc_id")
       },
       Some(s"""WITH RECURSIVE $UnigramRoundsSql,
@@ -2783,7 +2776,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_words"), sum("n_pieces").as("n_pieces"),
             sum("unk").as("n_unk"), sum("diverged").as("n_diverged"))
           .withColumn("fertility_e4",
-            floorDivL(col("n_pieces") * 10000L, col("n_words")))
+            divTrunc(col("n_pieces") * 10000L, col("n_words")))
           .orderBy("doc_id"),
       Some(s"""WITH RECURSIVE ${wpRoundsSql(finalApply = true)},
               |$WpEncodePerWordSql,
@@ -2833,11 +2826,11 @@ object TextQueries {
           .agg(sum("n_pieces").as("wp_pieces"), sum("unk").as("wp_unk"))
         bpe.join(uni, "lang").join(wp, "lang")
           .select(col("lang"), col("n_words"),
-            floorDivL(col("bpe_pieces") * 10000L, col("n_words"))
+            divTrunc(col("bpe_pieces") * 10000L, col("n_words"))
               .as("bpe_fert_e4"),
-            floorDivL(col("uni_pieces") * 10000L, col("n_words"))
+            divTrunc(col("uni_pieces") * 10000L, col("n_words"))
               .as("uni_fert_e4"),
-            floorDivL(col("wp_pieces") * 10000L, col("n_words"))
+            divTrunc(col("wp_pieces") * 10000L, col("n_words"))
               .as("wp_fert_e4"),
             col("wp_unk"))
           .orderBy("lang")
@@ -2924,7 +2917,7 @@ object TextQueries {
           .select(col("source"), col("doc_id"),
             size(toks).cast("long").as("n_tokens"), qcScoreE6.as("z"))
           .withColumn("cum", sum("n_tokens").over(w))
-          .withColumn("budget", floorDivL(sum("n_tokens").over(sw), lit(4L)))
+          .withColumn("budget", divTrunc(sum("n_tokens").over(sw), lit(4L)))
           .withColumn("keep", when(col("cum") <= col("budget"), 1L).otherwise(0L))
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"), sum("keep").as("n_kept"),
@@ -2973,7 +2966,7 @@ object TextQueries {
             sum(when(col("z") >= 0, 1L).otherwise(0L)).as("n_keep"),
             sum("z").as("score_sum_e6"))
           .select(col("source"), col("n_docs"), col("n_keep"),
-            floorDivL(col("n_keep") * 10000L, col("n_docs")).as("keep_rate_e4"),
+            divTrunc(col("n_keep") * 10000L, col("n_docs")).as("keep_rate_e4"),
             col("score_sum_e6"))
           .orderBy("source"),
       Some(s"""WITH $QcScoreFixtureSql
@@ -3175,8 +3168,8 @@ object TextQueries {
             sum("y").as("npos"))
           .select(col("source"), col("decile").cast("long").as("decile"),
             col("n_docs"), col("z_min"), col("z_max"),
-            floorDivL(col("sp"), col("n_docs")).as("mean_pred_e6"),
-            floorDivL(col("npos") * 1000000L, col("n_docs")).as("obs_pos_e6"))
+            divTrunc(col("sp"), col("n_docs")).as("mean_pred_e6"),
+            divTrunc(col("npos") * 1000000L, col("n_docs")).as("obs_pos_e6"))
           .withColumn("gap_e6", col("mean_pred_e6") - col("obs_pos_e6"))
           .orderBy("source", "decile")
       },
@@ -3263,9 +3256,9 @@ object TextQueries {
           .select(col("source"), lit(n).as("n_cal_pos"),
             lit(tau).as("tau_e6"), col("n_dep"), col("n_dep_pos"),
             col("n_kept"), col("kept_pos"),
-            floorDivL(col("kept_pos") * 10000L,
+            divTrunc(col("kept_pos") * 10000L,
               greatest(col("n_dep_pos"), lit(1L))).as("recall_e4"),
-            floorDivL(col("n_kept") * 10000L, col("n_dep"))
+            divTrunc(col("n_kept") * 10000L, col("n_dep"))
               .as("keep_rate_e4"))
           .orderBy("source")
       },
@@ -3391,10 +3384,10 @@ object TextQueries {
         t.join(p, Seq("lang"), "left")
           .select(col("lang"), col("n_true"),
             coalesce(col("n_pred"), lit(0L)).as("n_pred"), col("n_correct"),
-            floorDivL(col("n_correct") * 10000L,
+            divTrunc(col("n_correct") * 10000L,
               greatest(coalesce(col("n_pred"), lit(0L)), lit(1L)))
               .as("precision_e4"),
-            floorDivL(col("n_correct") * 10000L, col("n_true"))
+            divTrunc(col("n_correct") * 10000L, col("n_true"))
               .as("recall_e4"))
           .orderBy("lang")
       },
@@ -3509,7 +3502,7 @@ object TextQueries {
           .agg(aggs.head, aggs.tail: _*)
           .select(col("source") +: col("n_docs") +:
             fails.map(c => col(s"n_$c")) :+ col("n_pass") :+
-            floorDivL(col("n_pass") * 10000L, col("n_docs"))
+            divTrunc(col("n_pass") * 10000L, col("n_docs"))
               .as("pass_rate_e4"): _*)
           .orderBy("source")
       },
@@ -3601,7 +3594,7 @@ object TextQueries {
           .join(uc.select(col("w").as("w2"), col("cw").as("c2")), "w2")
           .crossJoin(broadcast(nb))
           .select(col("w1"), col("w2"), col("cab"),
-            floorDivL(col("cab") * col("nb") * 1000000L,
+            divTrunc(col("cab") * col("nb") * 1000000L,
               col("c1") * col("c2")).as("score_e6"))
           .orderBy(col("score_e6").desc, col("w1"), col("w2"))
           .limit(50)
@@ -3820,7 +3813,7 @@ object TextQueries {
             sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L))
               .as("n_novel"))
           .select(col("doc_id"), col("n_bigrams"), col("n_novel"),
-            floorDivL(col("n_novel") * 10000L, col("n_bigrams")).as("novelty_e4"))
+            divTrunc(col("n_novel") * 10000L, col("n_bigrams")).as("novelty_e4"))
           .orderBy("doc_id")
       },
       Some("""WITH bg AS (

@@ -12,4 +12,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** [[expression]] with every Column node inside converted now. A
+    * Dataset converts them when it plans the Column; a SQL function
+    * builder has no Dataset, so it needs this form. */
+  def converted(c: Column): Expression =
+    classic.ColumnNodeToExpressionConverter(c.node)
 }

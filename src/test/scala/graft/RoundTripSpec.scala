@@ -77,7 +77,6 @@ class RoundTripSpec extends SparkSpec {
   }
 
   test("TIME/TIMESTAMP coerce inside struct, array-of-struct, and map values") {
-    import spark.implicits._
     import graft.types._
     import graft.ingest.JsonDecode
     val schema = GStruct(Seq(
@@ -92,7 +91,9 @@ class RoundTripSpec extends SparkSpec {
         """"arr":[{"t":"10:00:00.250","ts":1700000000},{"t":null,"ts":null}],""" +
         """"m":{"k":"2024-01-01T00:00:00Z"}}""",
       """{"id":2}""") // null containers must stay null, not structs-of-null
-    val df = JsonDecode.decodeColumn(rows.toDF("j"), "j", schema)
+    val file = Files.createTempDirectory("nested-time").resolve("rows.json")
+    Files.write(file, rows.mkString("\n").getBytes("UTF-8"))
+    val df = JsonDecode.read(spark, schema, Seq(file.toString))
     val got = df.select(
       col("id"),
       col("s.t"), unix_seconds(col("s.ts")).as("sts"), col("s.x"),

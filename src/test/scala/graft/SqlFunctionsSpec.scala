@@ -632,7 +632,7 @@ class SqlFunctionsSpec extends SparkSpec {
   test("Md5Ops: prefix/ws/shingle u64s are bit-identical to the " +
       "conv(substring(md5)) chains they replace (r15)") {
     import spark.implicits._
-    import graft.functions.Md5Ops
+    import graft.functions.{Md5Ops, Shingles}
     val strs = Seq("", "a", "hello world", "ünïcode ☃ text",
       "x" * 300, "a b", " leading", "trailing ")
     // md5Prefix(c, n) == conv(substring(md5(c), 1, n), 16, 10) for
@@ -667,9 +667,8 @@ class SqlFunctionsSpec extends SparkSpec {
       val got = toksDf.select(
         transform(Md5Ops.shingleMd5U64s(col("ts"), 3, dist),
           u => shiftrightunsigned(u, 4))).as[Seq[Long]].collect().toSeq
-      val base = org.apache.spark.sql.GraftBridge.column(
-        graft.functions.Shingles(
-          org.apache.spark.sql.GraftBridge.expression(col("ts")), 3, dist))
+      val base =
+        if (dist) Shingles.shingles(col("ts"), 3) else Shingles.shinglesAll(col("ts"), 3)
       val want = toksDf.select(
         transform(base,
           x => conv(substring(md5(x), 1, 15), 16, 10).cast("long")))
