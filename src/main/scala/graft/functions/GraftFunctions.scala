@@ -61,43 +61,47 @@ object GraftFunctions {
   /** (name, expression builder) — the single source for both paths.
     * Each builder calls the function's Column entry point, so SQL and
     * DataFrame callers get the same expression and the same argument
-    * checks. */
+    * checks; the shared wrapper first checks the argument count, so a
+    * call with too many or too few arguments fails naming the function. */
   val builders: Seq[(String, Seq[Expression] => Expression)] =
-    Seq[(String, Seq[Column] => Column)](
-      "graft_cosine" -> (cs => VectorOps.cosine(cs(0), cs(1))),
-      "graft_simhash64" -> (cs => SimHash64.simHash64(cs.head)),
-      "graft_fnv64" -> (cs => Fnv64.fnv64(cs.head)),
-      "graft_ahash64" -> (cs => AHash64.aHash64(cs.head)),
-      "graft_java_hash" -> (cs => JavaHash.javaHash(cs.head)),
-      "graft_quant_i8" -> (cs => VectorOps.quantI8Stats(cs.head)),
-      "graft_vec_norm2" -> (cs => VectorOps.vecNorm2(cs.head)),
-      "graft_shingles" -> (cs =>
+    Seq[(String, Int, Seq[Column] => Column)](
+      ("graft_cosine", 2, cs => VectorOps.cosine(cs(0), cs(1))),
+      ("graft_simhash64", 1, cs => SimHash64.simHash64(cs.head)),
+      ("graft_fnv64", 1, cs => Fnv64.fnv64(cs.head)),
+      ("graft_ahash64", 1, cs => AHash64.aHash64(cs.head)),
+      ("graft_java_hash", 1, cs => JavaHash.javaHash(cs.head)),
+      ("graft_quant_i8", 1, cs => VectorOps.quantI8Stats(cs.head)),
+      ("graft_vec_norm2", 1, cs => VectorOps.vecNorm2(cs.head)),
+      ("graft_shingles", 2, cs =>
         Shingles.shingles(cs.head, intLit(cs(1), "shingle width"))),
-      "graft_frame_energy" -> (cs =>
+      ("graft_frame_energy", 2, cs =>
         FrameEnergy.frameEnergy(cs.head, intLit(cs(1), "frame size"))),
-      "graft_frame_energies" -> (cs =>
+      ("graft_frame_energies", 2, cs =>
         FrameEnergy.frameEnergies(cs.head, intLit(cs(1), "frame size"))),
-      "graft_lsh_code" -> (cs =>
+      ("graft_lsh_code", 3, cs =>
         VectorOps.lshCode(cs.head, VectorOps.hashPlanes(
           intLit(cs(1), "plane count"), intLit(cs(2), "dim")))),
-      "graft_normalize_text" -> (cs => NormalizeText.normalizeText(cs.head)),
-      "graft_bpe_apply" -> (cs =>
+      ("graft_normalize_text", 1, cs => NormalizeText.normalizeText(cs.head)),
+      ("graft_bpe_apply", 3, cs =>
         BpeApply.bpeApply(cs.head, strLit(cs(1), "merge pair left"),
           strLit(cs(2), "merge pair right"))),
-      "graft_log2e20" -> (cs => ExactMath.log2e20(cs.head)),
-      "graft_unigram_viterbi" -> (cs =>
+      ("graft_log2e20", 1, cs => ExactMath.log2e20(cs.head)),
+      ("graft_unigram_viterbi", 3, cs =>
         UnigramViterbi.unigramViterbi(cs(0), cs(1), cs(2))),
-      "graft_wp_merge" -> (cs =>
+      ("graft_wp_merge", 4, cs =>
         WordPieceOps.wpMerge(cs.head, strLit(cs(1), "merge pair left"),
           strLit(cs(2), "merge pair right"), strLit(cs(3), "merged token"))),
-      "graft_wp_match" -> (cs => WordPieceOps.wpMatch(cs(0), cs(1))),
-      "graft_md5_u64" -> (cs => Md5Ops.md5U64(cs.head)),
-      "graft_md5_ws_u64" -> (cs => Md5Ops.md5WsU64(cs.head)),
-      "graft_shingle_md5_u64" -> (cs =>
+      ("graft_wp_match", 2, cs => WordPieceOps.wpMatch(cs(0), cs(1))),
+      ("graft_md5_u64", 1, cs => Md5Ops.md5U64(cs.head)),
+      ("graft_md5_ws_u64", 1, cs => Md5Ops.md5WsU64(cs.head)),
+      ("graft_shingle_md5_u64", 2, cs =>
         Md5Ops.shingleMd5U64s(cs.head, intLit(cs(1), "shingle width")))
-    ).map { case (name, f) =>
-      name -> ((es: Seq[Expression]) =>
-        GraftBridge.converted(f(es.map(GraftBridge.column))))
+    ).map { case (name, arity, f) =>
+      name -> ((es: Seq[Expression]) => {
+        if (es.size != arity) throw new IllegalArgumentException(
+          s"$name takes $arity argument(s), got ${es.size}")
+        GraftBridge.converted(f(es.map(GraftBridge.column)))
+      })
     }
 
   private def info(name: String): ExpressionInfo =

@@ -88,7 +88,7 @@ object Pipeline {
     * source value, `month` → `yyyy-MM` recovered from the Q2 ordinal
     * (`year = m/12`, `month = m%12+1`, `App.java:122-127`), everything
     * else the raw transform value. Null → `null` (the reference's
-    * `String.valueOf`), normalized by the sink.
+    * `String.valueOf`), rendered by the sink's writer.
     */
   def pathColumn(table: TableDef, p: PartitionFieldSpec): Column = p.transform match {
     case "day" => date_format(col(p.source).cast("date"), "yyyy-MM-dd")

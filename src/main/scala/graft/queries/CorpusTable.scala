@@ -54,7 +54,7 @@ object CorpusTable {
     */
   private[queries] lazy val processTableDir: String = {
     val d = java.nio.file.Files.createTempDirectory("graft_corpus_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(d)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => LocalFs.deleteTree(d)))
     d.toString
   }
 
@@ -101,14 +101,14 @@ object CorpusTable {
                 val aside = Paths.get(s"$path.stale-${java.util.UUID.randomUUID()}")
                 try Files.move(path, aside, StandardCopyOption.ATOMIC_MOVE)
                 catch { case _: java.nio.file.FileSystemException => () }
-                deleteRecursively(aside)
+                LocalFs.deleteTree(aside)
               }
             }
           }
           if (!installed && !Files.exists(path.resolve("_SUCCESS")))
             throw new IllegalStateException(
               s"CorpusTable: could not install $path after $attempts attempts")
-        } finally if (!installed) deleteRecursively(tmp)
+        } finally if (!installed) LocalFs.deleteTree(tmp)
       }
       // refresh the TTL clock on every use so active corpora never expire
       try Files.setLastModifiedTime(path,
@@ -144,18 +144,8 @@ object CorpusTable {
           name.contains(".tmp-") || name.contains(".stale-")
         if ((isBuildLeftover && age > 3600L * 1000L) ||
             (!isBuildLeftover && age > ttlMs))
-          deleteRecursively(p)
+          LocalFs.deleteTree(p)
       }
     } finally stream.close()
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p))
-      Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala
-        .foreach(q => try Files.deleteIfExists(q) catch { case _: Exception => () })
   }
 }

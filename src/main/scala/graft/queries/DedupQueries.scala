@@ -603,7 +603,7 @@ object DedupQueries {
       connectedComponents(s, jacPairTable(s, dir).select(col("d1"), col("d2")),
         persistReg = Some(persisted))
     }
-    persisted.foreach(_.unpersist())
+    persisted.foreach(Ckpt.free) // local checkpoints: unpersist() frees nothing
     out
   }
 
@@ -2403,14 +2403,7 @@ object DedupQueries {
             (4L, "4_parity", nMerged, mism))
             .toDF("step", "op", "n_rows", "n_aux")
             .orderBy("step")
-        } finally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(tmpRoot)
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .iterator().asScala.foreach(p =>
-              try java.nio.file.Files.deleteIfExists(p)
-              catch { case _: Exception => () })
-        }
+        } finally LocalFs.deleteTree(tmpRoot)
       },
       Some(s"""WITH $ShSql,
              |$JacSql,

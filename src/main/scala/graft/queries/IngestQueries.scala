@@ -82,18 +82,6 @@ object IngestQueries {
   }
 
 
-  /** Recursive temp-tree delete shared by the e2e queries (each builds
-    * a throwaway lake per run and must not fill /tmp across repeated
-    * Bench/Time/Verify runs).
-    */
-  private def deleteTree(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(root)
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .iterator().asScala.foreach(p =>
-        try Files.deleteIfExists(p) catch { case _: Exception => () })
-  }
-
   /** Read-back projection shared by the batch and streaming e2e rows —
     * same 17 scalar columns, same total order, so both pipelines are
     * held to the IDENTICAL golden oracle. Reads the live set through the
@@ -123,7 +111,7 @@ object IngestQueries {
     val rows = result.collect()
     val out = spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), result.schema)
-    deleteTree(rootPath)
+    LocalFs.deleteTree(rootPath)
     out
   }
 
@@ -212,7 +200,7 @@ object IngestQueries {
     // rewrite makes them unreachable from the kept 2 snapshots).
     // Every number in the output is COMPUTED from the lake state, not
     // restated: the query fails the oracle if snapshot isolation,
-    // rewrite semantics, basePath partition recovery, or expiry
+    // rewrite semantics, partition values read from the paths, or expiry
     // reachability drift. (Same trust argument as ingest_e2e: constant
     // fixture input ⇒ fixed expected output, DuckDB can't run the
     // pipeline itself.)
@@ -247,7 +235,7 @@ object IngestQueries {
         GraftLog.liveFiles(tableDir, None).size.toLong, fin.getLong(1), expired)
       // every observation is a collected scalar by now — delete the
       // temp lake so repeated Bench/Time runs don't fill /tmp
-      deleteTree(tmpRoot)
+      LocalFs.deleteTree(tmpRoot)
       Seq(r1, r2, r3, r4, r5)
         .toDF("step", "op", "n_rows", "n_files", "sum_v", "n_expired")
         .orderBy("step")
@@ -310,7 +298,7 @@ object IngestQueries {
       // history preserved: the delete snapshot reads the same AFTER the
       // rollback commit landed on top of it
       val r6 = snapRow(6, "s3_after_rollback", s3)
-      deleteTree(tmpRoot)
+      LocalFs.deleteTree(tmpRoot)
       Seq(r1, r2, r3, r4, r5, r6)
         .toDF("step", "op", "n_rows", "n_files", "sum_v")
         .orderBy("step")
@@ -366,7 +354,7 @@ object IngestQueries {
         .intersect(GraftLog.liveFiles(tableDir, Some(s2))).size.toLong
       val r2 = obs(2, "overwrite", s2, shared)
       val r3 = obs(3, "time_travel", s1, shared)
-      deleteTree(tmpRoot)
+      LocalFs.deleteTree(tmpRoot)
       Seq(r1, r2, r3)
         .toDF("step", "op", "n_rows", "n_files", "sum_v", "n_shared")
         .orderBy("step")
@@ -431,7 +419,7 @@ object IngestQueries {
       val sharedNoop = GraftLog.liveFiles(tableDir, Some(d.snapshotId))
         .intersect(GraftLog.liveFiles(tableDir, None)).size.toLong
       val r4 = obs(4, s"noop_snaps_$nSnaps", d.snapshotId, noop.rows, sharedNoop)
-      deleteTree(tmpRoot)
+      LocalFs.deleteTree(tmpRoot)
       Seq(r1, r2, r3, r4)
         .toDF("step", "op", "n_rows", "n_files", "sum_v", "n_deleted", "n_shared")
         .orderBy("step")
@@ -493,7 +481,7 @@ object IngestQueries {
       val s5 = w.append(Seq((7L, "c2", 70L))
         .toDF("id", "category", "v"), Seq("category"), tableDir).snapshotId
       val r4 = inc(4, "inc_post_compact", s4, s5)
-      deleteTree(tmpRoot)
+      LocalFs.deleteTree(tmpRoot)
       Seq(r1, r2, r3, r4)
         .toDF("step", "op", "n_rows", "n_files", "sum_v", "refused")
         .orderBy("step")
@@ -539,7 +527,7 @@ object IngestQueries {
         .select(col("id"), col("change"),
           col("_before.v").as("v_before"), col("_after.v").as("v_after"))
         .as[(Long, String, Option[Long], Option[Long])].collect().toSeq.sortBy(_._1)
-      deleteTree(tmpRoot)
+      LocalFs.deleteTree(tmpRoot)
       out.toDF("id", "change", "v_before", "v_after").orderBy("id")
     },
       Some("""SELECT CAST(id AS BIGINT) AS id, change,
@@ -604,7 +592,7 @@ object IngestQueries {
       val r3 = obs(3, "filter_new_col",
         LakeOps.readTable(s, tableDir).filter(col("score") >= 90L))
       val r4 = obs(4, "time_travel_narrow", LakeOps.readSnapshot(s, tableDir, s1))
-      deleteTree(tmpRoot)
+      LocalFs.deleteTree(tmpRoot)
       Seq(r1, r2, r3, r4)
         .toDF("step", "op", "n_rows", "cols", "sum_v", "sum_score", "n_score_null")
         .orderBy("step")
@@ -671,7 +659,7 @@ object IngestQueries {
       val r4 = scan(4, "straddle", 55L, 75L)
       LakeOps.compact(s, tableDir)
       val r5 = scan(5, "post_compact", 40L, 60L)
-      deleteTree(tmpRoot)
+      LocalFs.deleteTree(tmpRoot)
       Seq(r1, r2, r3, r4, r5)
         .toDF("step", "op", "n_live", "n_scanned", "n_rows", "sum_v")
         .orderBy("step")

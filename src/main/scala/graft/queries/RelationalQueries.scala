@@ -411,11 +411,7 @@ object RelationalQueries {
         } finally {
           s.sql(s"DROP TABLE IF EXISTS bj_li_$tag")
           s.sql(s"DROP TABLE IF EXISTS bj_o_$tag")
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(whPath)
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .iterator().asScala.foreach(p =>
-              try java.nio.file.Files.deleteIfExists(p) catch { case _: Exception => () })
+          LocalFs.deleteTree(whPath)
         }
       },
       Some("""SELECT o_orderstatus, COUNT(*) AS n_items,

@@ -359,7 +359,7 @@ object StreamingQueries {
       val outDir = s"$verdictStore/flush"
       verdict.write.mode("overwrite").parquet(outDir)
       (s.read.parquet(outDir), stateRows.toSeq)
-    } finally deleteTree(tmpRoot)
+    } finally LocalFs.deleteTree(tmpRoot)
   }
 
   /** PERIODIC in-run lake-index flush (r15 verdict #2) — the production
@@ -462,7 +462,7 @@ object StreamingQueries {
       verdict.write.mode("overwrite").parquet(outDir)
       import scala.jdk.CollectionConverters._
       (s.read.parquet(outDir), ledger.iterator().asScala.toSeq, peakState)
-    } finally deleteTree(tmpRoot)
+    } finally LocalFs.deleteTree(tmpRoot)
   }
 
   /** One micro-batch's staging append for [[neardupPeriodicRun]],
@@ -492,19 +492,21 @@ object StreamingQueries {
     * staging. The staged batches' fence keys ride as the merge
     * commit's `sources`, migrating them into the index ledger so a
     * post-flush replay of any drained batch stays fenced
-    * ([[stagePeriodicDelta]]). Returns (index now has data, staged
-    * delta rows flushed).
+    * ([[stagePeriodicDelta]]). Staging is read through its commit log:
+    * a file published by an append that crashed before its commit is
+    * not part of the table, and its batch (fenced by no key) replays.
+    * Returns (index now has data, staged delta rows flushed).
     */
   private[graft] def flushStagedDeltas(s: SparkSession, stagingDir: String,
       tableDir: String, indexHasData: Boolean): (Boolean, Long) = {
-    import graft.sink.GraftLog
+    import graft.sink.{GraftLog, LakeOps}
     val stagedKeys = GraftLog.committedSources(stagingDir).toSeq.sorted
-    val staged = s.read.parquet(stagingDir)
+    val staged = LakeOps.readTable(s, stagingDir)
     val nStaged = staged.count()
     val delta = staged.groupBy("band", "k1", "k2")
       .agg(min("owner").as("owner"), sum("n_docs").as("n_docs"))
     val hasData = mergeIntoIndex(s, tableDir, delta, indexHasData, stagedKeys)
-    deleteTree(java.nio.file.Paths.get(stagingDir)) // flushed → gone
+    LocalFs.deleteTree(java.nio.file.Paths.get(stagingDir)) // flushed → gone
     (hasData, nStaged)
   }
 
@@ -558,15 +560,6 @@ object StreamingQueries {
     if (indexHasData) atRestIndex(s, tableDir)
     else bandBuckets(DedupQueries.minhashBandKeys(docs))
 
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(q =>
-          try { java.nio.file.Files.deleteIfExists(q); () }
-          catch { case _: Exception => () })
-  }
 
   /** Session-scoped at-rest store for streaming rows' declared outputs
     * (the lake location a deployment would write verdicts to); swept by
@@ -575,15 +568,7 @@ object StreamingQueries {
     */
   private lazy val verdictStore: String = {
     val p = java.nio.file.Files.createTempDirectory("graft_ndverdict_")
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      try java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(q =>
-          try { java.nio.file.Files.deleteIfExists(q); () }
-          catch { case _: Exception => () })
-      catch { case _: Exception => () }
-    }))
+    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => LocalFs.deleteTree(p)))
     p.toString
   }
 

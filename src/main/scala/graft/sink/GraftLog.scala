@@ -29,12 +29,16 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   * (`_staging_*` is an append in flight); data files live only under
   * the partition directories.
   *
-  * `schema` is the table's data schema after the commit (non-partition
-  * columns, Spark's `StructType.json`), kept in the log as Iceberg keeps
-  * it in table metadata, so readers infer nothing. Legacy rule: a record
-  * without it (json4s omits `None`, so the bytes are the older format's)
-  * leaves any fold over it schema-less; readers then infer the union
-  * from the files, and commits on top of it stay schema-less.
+  * `schema` is the table schema after the commit (Spark's
+  * `StructType.json`): the data columns, then the partition columns as
+  * strings, the form their directory names hold. It is kept in the log
+  * as Iceberg keeps it in table metadata, so readers infer nothing.
+  * Legacy rules: a schema without the partition columns (the older
+  * data-only format) leaves Spark to infer them from the paths until an
+  * append widens it; a record without any schema (json4s omits `None`,
+  * so the bytes are the oldest format's) leaves any fold over it
+  * schema-less, readers then infer the union from the files, and
+  * commits on top of it stay schema-less.
   *
   * The live file set of a snapshot is the fold of operations up to it
   * ([[fold]]); readers must resolve through the log (never the
@@ -53,8 +57,8 @@ object GraftLog {
       files: Seq[String], sources: Seq[String], schema: Option[String])
 
   /** What a prefix of the log folds to: its newest snapshot id (0 for
-    * an empty prefix), the live files, the live rows and the table's
-    * data schema (`None` once a legacy record is folded in).
+    * an empty prefix), the live files, the live rows and the table
+    * schema (`None` once a schema-less record is folded in).
     */
   final case class Live(snapshotId: Long, files: Vector[String], rows: Long,
       schemaJson: Option[String]) {
@@ -136,7 +140,7 @@ object GraftLog {
     * `Files.writeString`, so two writers could allocate the same id and
     * silently overwrite each other's commit, and a crash mid-write left
     * truncated JSON that poisoned every later read). The record's schema
-    * is the claimed base's widened by `dataSchema`, the written data's.
+    * is the claimed base's widened by `dataSchema`, the written table's.
     */
   def commit(tableDir: String, op: String, rows: Long,
       files: Seq[String], sources: Seq[String],
@@ -148,7 +152,8 @@ object GraftLog {
     }
 
   /** ADD-COLUMN evolution: `base`'s fields in order, then the fields of
-    * `data` it lacks — or `None` (a legacy record) when either is.
+    * `data` it lacks (so a data-only base gains the partition columns)
+    * — or `None` (a schema-less record) when either is.
     */
   private[sink] def widen(base: Option[StructType], data: Option[StructType]): Option[StructType] =
     for (b <- base; d <- data)

@@ -3,7 +3,7 @@ package graft.sink
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -24,19 +24,22 @@ import org.apache.spark.sql.types.StructType
 object LakeOps {
 
   /** Read live files (paths relative to `tableDir`) with the snapshot's
-    * data schema from the log — no footer read and no inference job;
-    * a file written before an ADD-COLUMN reads the column as null.
-    * basePath keeps Hive partition columns, inferred from the paths,
-    * when reading explicit files. A log holding a legacy record (no
-    * schema) falls back to Spark's own union-of-footers inference.
+    * table schema from the log — no footer read and no inference job;
+    * a file written before an ADD-COLUMN reads the column as null, and
+    * a partition column reads as the directory string it was written
+    * as (basePath keeps the partition columns when reading explicit
+    * files; Spark infers only one the schema lacks, as in the older
+    * data-only format). A log holding a schema-less record falls back
+    * to Spark's own union-of-footers inference.
     *
-    * A full-table DELETE (or a table with no commits) legitimately
-    * leaves zero files; that empty table surfaces as a 0-column empty
-    * frame (count/isEmpty work).
+    * No live files (a full-table DELETE, or a table with no commits)
+    * read as an empty frame of the schema; a table with no commits has
+    * the empty schema, so it reads as the 0-column frame.
     */
   private def readLive(spark: SparkSession, tableDir: String,
       files: Seq[String], schema: Option[StructType]): DataFrame =
-    if (files.isEmpty) spark.emptyDataFrame
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.List.of[Row](), schema.getOrElse(new StructType()))
     else {
       val base = spark.read.option("basePath", tableDir)
       schema.fold(base.option("mergeSchema", "true"))(base.schema)
@@ -109,20 +112,14 @@ object LakeOps {
     val recs = GraftLog.records(tableDir)
     val a0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(fromSnapshot)))
     val b0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(toSnapshot)))
-    // an empty snapshot (post full-table DELETE) reads as a 0-column
-    // frame — borrow the other endpoint's schema so the changelog
-    // degenerates correctly (all-inserted / all-deleted) instead of
-    // tripping the schema-change guard (review fix r5); both empty →
-    // the empty changelog, same 0-column convention as readSnapshot
+    // an endpoint before the first commit reads as the 0-column frame
+    // — borrow the other endpoint's schema so the changelog degenerates
+    // correctly (all-inserted) instead of tripping the schema-change
+    // guard (review fix r5); both empty → the empty changelog, same
+    // 0-column convention as readSnapshot
     if (a0.columns.isEmpty && b0.columns.isEmpty) return spark.emptyDataFrame
-    val a = if (a0.columns.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        b0.schema)
-    else a0
-    val b = if (b0.columns.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        a0.schema)
-    else b0
+    val a = if (a0.columns.isEmpty) readLive(spark, tableDir, Nil, Some(b0.schema)) else a0
+    val b = if (b0.columns.isEmpty) readLive(spark, tableDir, Nil, Some(a0.schema)) else b0
     val nonKey = a.columns.filterNot(keyCols.contains).toSeq
     require(nonKey.sorted == b.columns.filterNot(keyCols.contains).toSeq.sorted,
       "diffSnapshots across a schema change: align columns first")
@@ -181,8 +178,8 @@ object LakeOps {
     // key land in one task) while keeping the rewrite fully parallel —
     // a single-task funnel here would be the scale bottleneck of the
     // whole maintenance op.
-    val df = asPathStrings(readLive(spark, tableDir, base), partitionCols)
-    val (files, rows) = HiveParquetWriter.writeFiles(df, partitionCols, tableDir)
+    val (files, rows) =
+      HiveParquetWriter.writeFiles(readLive(spark, tableDir, base), partitionCols, tableDir)
     val rec = GraftLog.commitReplacing(tableDir, "rewrite", rows, files, Seq.empty,
       base.snapshotId, carryAppends = true, base.schema)
     CommitInfo(rec.snapshotId, rec.files, rec.rows)
@@ -200,9 +197,9 @@ object LakeOps {
     * pre-merge rows (snapshot isolation across content changes, not
     * just compaction).
     *
-    * Contract: `updates` has the table's schema with partition columns
-    * materialized as strings rendered exactly as the write path renders
-    * the directory (the [[LakeWriter.append]] contract); `keyCols` are
+    * Contract: `updates` has the table's columns, partition columns
+    * included (of any type: they are rendered to their directory
+    * strings as the write path renders them); `keyCols` are
     * unique within `updates`; and the key → partition mapping is STABLE
     * — an update must carry the key's existing partition value (true by
     * construction when the partition is a transform of the key, the
@@ -223,7 +220,7 @@ object LakeOps {
   def upsert(spark: SparkSession, tableDir: String, updates: DataFrame,
       keyCols: Seq[String], partitionCols: Seq[String],
       sources: Seq[String] = Seq.empty): CommitInfo = {
-    val up = asPathStrings(updates, partitionCols)
+    val up = HiveParquetWriter.render(updates, partitionCols)
     val touched = touchedDirs(up, partitionCols)
     if (touched.isEmpty) return CommitInfo(0, Seq.empty, 0)
     // content-dependent rewrite: plan against a fixed base snapshot and
@@ -237,8 +234,9 @@ object LakeOps {
       else {
         // the table schema (via readLive): a touched partition may hold
         // files from before an ADD-COLUMN evolution, whose rows read the
-        // added column as null
-        val cur = asPathStrings(
+        // added column as null; rendered, because a data-only log leaves
+        // Spark to infer the partition columns, and the union needs one type
+        val cur = HiveParquetWriter.render(
           readLive(spark, tableDir, touchedFiles, base.schema), partitionCols)
         // whole-row replacement semantics: an update row that omits an
         // evolved column writes null there (allowMissingColumns), the
@@ -256,13 +254,6 @@ object LakeOps {
     CommitInfo(rec.snapshotId, rec.files, rows)
   }
 
-  /** Partition columns rendered back to strings: they were path-rendered
-    * on write, and partition inference may have re-typed them, so the
-    * rewrite's joins, unions and write see one schema.
-    */
-  private def asPathStrings(df: DataFrame, partitionCols: Seq[String]): DataFrame =
-    partitionCols.foldLeft(df)((d, c) => d.withColumn(c, d(c).cast("string")))
-
   /** Relative partition directories the rows of `df` land in, rendered
     * exactly as the write path names them — a raw-value prefix would
     * never match an escaped directory and the stale row would silently
@@ -272,7 +263,7 @@ object LakeOps {
   private def touchedDirs(df: DataFrame, partitionCols: Seq[String]): Set[String] =
     df.select(partitionCols.map(col): _*).distinct().collect().map { r =>
       partitionCols.indices
-        .map(i => HiveParquetWriter.renderDir(partitionCols(i), r.get(i))).mkString("/")
+        .map(i => HiveParquetWriter.renderDir(partitionCols(i), r.get(i).toString)).mkString("/")
     }.toSet
 
   /** Split live files into (under a touched directory, carried over). */
@@ -309,12 +300,11 @@ object LakeOps {
     val base = GraftLog.fold(GraftLog.records(tableDir))
     if (base.files.isEmpty) return CommitInfo(0, Seq.empty, 0)
     val hit = coalesce(predicate, lit(false))
-    def readNorm(files: Seq[String]): DataFrame =
-      asPathStrings(readLive(spark, tableDir, files, base.schema), partitionCols)
-    val touched = touchedDirs(readNorm(base.files).filter(hit), partitionCols)
+    val touched = touchedDirs(
+      readLive(spark, tableDir, base.files, base.schema).filter(hit), partitionCols)
     if (touched.isEmpty) return CommitInfo(0, Seq.empty, 0)
     val (touchedFiles, carried) = splitLive(base.files, touched)
-    val cur = readNorm(touchedFiles)
+    val cur = readLive(spark, tableDir, touchedFiles, base.schema)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val before = cur.count()
@@ -391,22 +381,16 @@ object LakeOps {
     * — INCLUDING the schema: the survivors read with the table schema
     * from the log (a schema-evolved live set keeps an added column
     * even when no surviving file has it), and a zero-file selection
-    * returns an empty frame with the same schema, so callers need no
-    * 0-column special case. Returns (frame, scanned, live) so callers
-    * can observe the pruning ratio.
+    * reads as an empty frame of the same schema without planning a
+    * scan. Returns (frame, scanned, live) so callers can observe the
+    * pruning ratio.
     */
   def readPruned(spark: SparkSession, tableDir: String, column: String,
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val live = GraftLog.fold(GraftLog.records(tableDir))
     val keep = live.files.filter(f => fileRange(tableDir, f, column)
       .forall { case (mn, mx) => mx >= lo && mn <= hi })
-    val df =
-      // full prune: an empty frame with the table schema, so the
-      // physical-only contract holds for the empty case too
-      if (keep.isEmpty) readLive(spark, tableDir, live)
-        .filter(org.apache.spark.sql.functions.lit(false))
-      else readLive(spark, tableDir, keep, live.schema)
-        .filter(col(column) >= lo && col(column) <= hi)
-    (df, keep.size, live.files.size)
+    (readLive(spark, tableDir, keep, live.schema).filter(col(column) >= lo && col(column) <= hi),
+      keep.size, live.files.size)
   }
 }

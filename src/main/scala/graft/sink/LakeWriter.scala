@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** One committed append (the observable behavior of the reference's
   * `newAppend().appendFile().commit()`, `App.java:147-149` / SURVEY.md
@@ -40,12 +40,13 @@ trait LakeWriter {
   *  - one atomic-rename commit per append batch — deliberately better
   *    than the reference's snapshot-per-(file × partition) (Q6): same
   *    observable table content, O(1) commits;
-  *  - null partition values render as `name=null` like the reference
-  *    (`String.valueOf(null)`), normalized from Spark's
-  *    `__HIVE_DEFAULT_PARTITION__` during publish;
+  *  - a partition value has one form, its directory string
+  *    ([[HiveParquetWriter.render]]): null and `""` render as `null`
+  *    like the reference (`String.valueOf(null)`);
   *  - the commit record carries the row count the write job observed
-  *    and the table's data schema, as Iceberg's metadata does: no file
-  *    is opened after the write, and readers infer nothing.
+  *    and the table schema, partition columns as strings, as Iceberg's
+  *    metadata does: no file is opened after the write, and readers
+  *    infer nothing.
   *
   * Write path at scale: [[HiveParquetWriter.writeFiles]] repartitions by
   * the partition key first (one shuffle, A17), so each task writes at
@@ -67,21 +68,29 @@ final class HiveParquetWriter extends LakeWriter {
 
 object HiveParquetWriter {
 
-  /** Directory name of one partition value, matching the write path
-    * exactly: Spark's partitionBy escapes special characters (/, =, %,
-    * …) via escapePathName, and [[writeFiles]] renames Spark's null dir
-    * to the reference's `name=null` (`String.valueOf(null)`).
+  /** The partition columns as the directory strings they name: cast to
+    * string, and null or `""` become `null` (the reference's
+    * `String.valueOf(null)`). Spark then names the directory itself and
+    * never writes its own null directory.
     */
-  private[sink] def renderDir(colName: String, v: Any): String =
-    if (v == null) s"$colName=null"
-    else s"$colName=" + org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.escapePathName(v.toString)
+  private[sink] def render(df: DataFrame, partitionCols: Seq[String]): DataFrame =
+    df.withColumns(partitionCols.map { c =>
+      val v = df(c).cast("string")
+      c -> when(v.isNull || v === "", lit("null")).otherwise(v)
+    }.toMap)
 
-  private val SparkNullDir = "=__HIVE_DEFAULT_PARTITION__"
+  /** Directory name of one rendered partition value, matching the write
+    * path exactly: Spark's partitionBy escapes special characters (/, =,
+    * %, …) via escapePathName.
+    */
+  private[sink] def renderDir(colName: String, v: String): String =
+    s"$colName=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
 
-  /** The columns a write puts in the data files (not the partition ones). */
+  /** The table schema a write records: data columns in frame order, then
+    * the partition columns as strings (the order Spark reads them in). */
   private[sink] def dataSchema(df: DataFrame, partitionCols: Seq[String]): StructType =
-    StructType(df.schema.filterNot(f => partitionCols.contains(f.name)))
+    StructType(df.schema.filterNot(f => partitionCols.contains(f.name)) ++
+      partitionCols.map(StructField(_, StringType)))
 
   /** Stage + publish data files under `tableDir` (no commit record).
     * Returns the published relative paths and the rows written, counted
@@ -100,7 +109,8 @@ object HiveParquetWriter {
     val staging = dir.resolve(s"_staging_${java.util.UUID.randomUUID()}")
     try {
       val counted = Observation()
-      (if (partitionCols.isEmpty) df else df.repartition(partitionCols.map(col): _*))
+      val rendered = render(df, partitionCols)
+      (if (partitionCols.isEmpty) rendered else rendered.repartition(partitionCols.map(col): _*))
         .observe(counted, count(lit(1)).as("rows"))
         .write.partitionBy(partitionCols: _*).parquet(staging.toString)
       val rows = counted.get.getOrElse("rows", throw new IllegalStateException(
@@ -108,9 +118,7 @@ object HiveParquetWriter {
       val files = if (rows == 0) Seq.empty else Files.walk(staging).iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
         .toSeq.map { p =>
-          // publish: move into the table tree, normalizing Spark's
-          // null-partition dir to `name=null` (see renderDir)
-          val rel = staging.relativize(p).toString.replace(SparkNullDir, "=null")
+          val rel = staging.relativize(p).toString // publish into the table tree
           val target = dir.resolve(rel)
           Files.createDirectories(target.getParent)
           Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)

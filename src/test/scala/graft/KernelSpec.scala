@@ -126,6 +126,14 @@ class KernelSpec extends SparkSpec {
     }
   }
 
+  test("a call with too many or too few arguments fails naming the function and its count") {
+    for ((name, args) <- calls; bad <- Seq(args :+ "id", args.init)) {
+      val e = intercept[Exception](rows(call(name, bad)))
+      assert(messages(e).contains(s"$name takes ${args.size} argument(s), got ${bad.size}"),
+        s"${call(name, bad)}: ${messages(e)}")
+    }
+  }
+
   test("width, maxDel and frame size are still checked") {
     for (bad <- Seq("graft_shingles(toks, 0)", "graft_shingle_md5_u64(toks, 0)"))
       assert(messages(intercept[Exception](rows(bad)))

@@ -830,4 +830,90 @@ class LakeOpsSpec extends SparkSpec {
     assert(rowsOf(LakeOps.readTable(spark, tdir)) ==
       Seq((1L, 10L, None, "a"), (2L, 20L, Some("x"), "b"), (3L, 30L, None, "a")))
   }
+
+  test("partition values read as their directory strings: the log types them, compact keeps them, upsert finds them") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.StringType
+    val tdir = Files.createTempDirectory("graft_pv_").toString + "/t"
+    val w = new graft.sink.HiveParquetWriter
+    def zips(df: org.apache.spark.sql.DataFrame): Set[String] = df.select("zip").as[String].collect().toSet
+    w.append(Seq((1L, "007", 10L), (2L, "010", 20L)).toDF("id", "zip", "v"), Seq("zip"), tdir)
+    val t1 = LakeOps.readTable(spark, tdir)
+    assert(t1.schema("zip").dataType == StringType && zips(t1) == Set("007", "010"))
+    // null and "" render as the reference's `zip=null` directory, and
+    // the column's type does not depend on which directories are live
+    w.append(Seq((3L, None, 30L), (4L, Some(""), 40L)).toDF("id", "zip", "v"), Seq("zip"), tdir)
+    assert(GraftLog.liveFiles(tdir).map(_.takeWhile(_ != '/')).toSet ==
+      Set("zip=007", "zip=010", "zip=null"))
+    assert(!Files.walk(Paths.get(tdir)).iterator().asScala
+      .exists(_.toString.contains("__HIVE_DEFAULT_PARTITION__")))
+    val t2 = LakeOps.readTable(spark, tdir)
+    assert(t2.schema("zip").dataType == StringType && zips(t2) == Set("007", "010", "null"))
+    assert(LakeOps.readSnapshot(spark, tdir, 1L).schema("zip").dataType == StringType)
+    // compact rewrites into the same directories
+    val c = LakeOps.compact(spark, tdir)
+    assert(c.files.map(_.takeWhile(_ != '/')).toSet == Set("zip=007", "zip=010", "zip=null"))
+    // so an upsert after it finds the key's file and replaces its row
+    LakeOps.upsert(spark, tdir, Seq((1L, "007", 11L)).toDF("id", "zip", "v"), Seq("id"), Seq("zip"))
+    assert(LakeOps.readTable(spark, tdir).filter(col("id") === 1L)
+      .select("zip", "v").as[(String, Long)].collect().toSeq == Seq(("007", 11L)))
+    // a table after a full-table DELETE keeps its columns
+    LakeOps.delete(spark, tdir, lit(true), Seq("zip"))
+    val wiped = LakeOps.readTable(spark, tdir)
+    assert(wiped.columns.toSeq == Seq("id", "v", "zip") && wiped.count() == 0L)
+  }
+
+  /** Commits Spark-written parquet files under partition paths of
+    * `tdir` with `schema` (None: the schema-less format). */
+  private def commitPlaced(tdir: String, schema: Option[org.apache.spark.sql.types.StructType],
+      files: (org.apache.spark.sql.DataFrame, String)*): Unit = {
+    val tmp = Files.createTempDirectory("graft_place_")
+    files.zipWithIndex.foreach { case ((df, rel), i) =>
+      df.coalesce(1).write.parquet(tmp.resolve(s"$i").toString)
+      val part = Files.list(tmp.resolve(s"$i")).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.createDirectories(Paths.get(tdir, rel).getParent)
+      Files.move(part, Paths.get(tdir, rel))
+      GraftLog.commit(tdir, "append", df.count(), Seq(rel), Seq.empty, schema)
+    }
+  }
+
+  test("the older log formats read as they always did: Spark infers the partition columns they lack") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("graft_oldfmt_").toString
+    val a = Seq((1L, 10L)).toDF("id", "v") -> "zip=007/a.parquet"
+    val b = Seq((2L, 20L)).toDF("id", "v") -> "zip=010/b.parquet"
+    val dataOnly = StructType(Seq(StructField("id", LongType, false), StructField("v", LongType, false)))
+    for ((name, schema) <- Seq("data_only" -> Some(dataOnly), "schema_less" -> None)) {
+      val tdir = s"$root/$name"
+      commitPlaced(tdir, schema, a, b)
+      assert(GraftLog.records(tdir).map(_.schema) == Seq.fill(2)(schema.map(_.json)))
+      for (df <- Seq(LakeOps.readTable(spark, tdir), LakeOps.readSnapshot(spark, tdir, 2L))) {
+        assert(df.schema.map(f => f.name -> f.dataType) ==
+          Seq("id" -> LongType, "v" -> LongType, "zip" -> IntegerType), name)
+        assert(df.as[(Long, Long, Int)].collect().sortBy(_._1).toSeq ==
+          Seq((1L, 10L, 7), (2L, 20L, 10)), name)
+      }
+      // an upsert carrying a value that is not an int still merges
+      LakeOps.upsert(spark, tdir, Seq((1L, "007", 11L), (3L, "abc", 30L)).toDF("id", "zip", "v"),
+        Seq("id"), Seq("zip"))
+      assert(LakeOps.readTable(spark, tdir).select("id", "v", "zip").as[(Long, Long, String)]
+        .collect().sortBy(_._1).toSeq == Seq((1L, 11L, "007"), (2L, 20L, "010"), (3L, 30L, "abc")), name)
+    }
+  }
+
+  test("an append on a data-only log adds the partition columns, so old tables converge") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val tdir = Files.createTempDirectory("graft_converge_").toString + "/t"
+    commitPlaced(tdir, Some(StructType(Seq(StructField("id", LongType), StructField("v", LongType)))),
+      Seq((1L, 10L)).toDF("id", "v") -> "zip=007/a.parquet")
+    (new graft.sink.HiveParquetWriter)
+      .append(Seq((2L, "010", 20L)).toDF("id", "zip", "v"), Seq("zip"), tdir)
+    val df = LakeOps.readTable(spark, tdir)
+    assert(df.schema("zip").dataType == StringType)
+    assert(df.select("id", "zip").as[(Long, String)].collect().sortBy(_._1).toSeq ==
+      Seq((1L, "007"), (2L, "010")))
+  }
 }

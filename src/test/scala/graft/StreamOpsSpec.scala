@@ -439,6 +439,30 @@ class StreamOpsSpec extends SparkSpec {
     }
   }
 
+  test("the periodic flush reads staging through its log: a published " +
+      "file no commit names is not flushed") {
+    import graft.queries.{DedupQueries, StreamingQueries}
+    import graft.sink.{GraftLog, LakeOps}
+    val root = java.nio.file.Files.createTempDirectory("graft_orphan_")
+    try {
+      val tableDir = s"$root/warehouse/neardupindex"
+      val stagingDir = s"$root/warehouse/ndstaging"
+      val keys = DedupQueries.minhashBandKeys(spark.read.parquet(s"$sfDir/documents.parquet"))
+      val staged = StreamingQueries.stagePeriodicDelta(keys, stagingDir, tableDir,
+        s"stream:$root/ckpt:0")
+      assert(staged > 0L)
+      // what a crash between publish and commit leaves: a data file in
+      // the staging table that no record names
+      val f = java.nio.file.Paths.get(stagingDir, GraftLog.liveFiles(stagingDir).head)
+      java.nio.file.Files.copy(f, f.resolveSibling(s"orphan-${f.getFileName}"))
+      val (hasData, nStaged) = StreamingQueries.flushStagedDeltas(
+        spark, stagingDir, tableDir, indexHasData = false)
+      assert(hasData && nStaged == staged, s"flushed $nStaged staged rows, committed $staged")
+      val nDocs = LakeOps.readTable(spark, tableDir).agg(sum("n_docs")).head().getLong(0)
+      assert(nDocs == keys.count(), "n_docs counted an uncommitted file")
+    } finally graft.queries.LocalFs.deleteTree(root)
+  }
+
   test("born-late drop: a pre-epoch event time is below Spark's INITIAL " +
       "watermark (epoch 0) and never enters a watermarked operator (r17)") {
     // The class the pre-epoch nasty fixture exposed: the event-time
