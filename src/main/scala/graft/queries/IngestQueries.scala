@@ -287,8 +287,7 @@ object IngestQueries {
         Seq((2L, "c1", 21L), (4L, "c2", 40L)).toDF("id", "category", "v"),
         keyCols = Seq("id"), partitionCols = Seq("category")).snapshotId
       val r2 = snapRow(2, "upsert", s2)
-      val s3 = LakeOps.delete(s, tableDir, col("category") === "c2",
-        Seq("category")).snapshotId
+      val s3 = LakeOps.delete(s, tableDir, col("category") === "c2").snapshotId
       val r3 = snapRow(3, "delete", s3)
       val s4 = LakeOps.rollback(tableDir, s1).snapshotId
       val r4 = snapRow(4, "rollback_to_s1", s4)
@@ -407,14 +406,12 @@ object IngestQueries {
           (4L, "c2", None: Option[Long]), (5L, "c3", Some(50L)))
           .toDF("id", "category", "v"), Seq("category"), tableDir).snapshotId
       val r1 = obs(1, "append", s1, 0L, 0L)
-      val d = LakeOps.delete(s, tableDir,
-        col("v") >= 45L || col("id") === 2L, partitionCols = Seq("category"))
+      val d = LakeOps.delete(s, tableDir, col("v") >= 45L || col("id") === 2L)
       val shared = GraftLog.liveFiles(tableDir, Some(s1))
         .intersect(GraftLog.liveFiles(tableDir, Some(d.snapshotId))).size.toLong
       val r2 = obs(2, "delete", d.snapshotId, d.rows, shared)
       val r3 = obs(3, "time_travel", s1, 0L, shared)
-      val noop = LakeOps.delete(s, tableDir, col("id") === 999L,
-        partitionCols = Seq("category"))
+      val noop = LakeOps.delete(s, tableDir, col("id") === 999L)
       val nSnaps = GraftLog.records(tableDir).size.toLong
       val sharedNoop = GraftLog.liveFiles(tableDir, Some(d.snapshotId))
         .intersect(GraftLog.liveFiles(tableDir, None)).size.toLong
@@ -522,7 +519,7 @@ object IngestQueries {
         Seq((2L, "c1", 21L), (5L, "c3", 50L)).toDF("id", "category", "v"),
         Seq("id"), Seq("category"))
       LakeOps.compact(s, tableDir) // rewrite inside the range: must be invisible
-      val s4 = LakeOps.delete(s, tableDir, col("id") === 3L, Seq("category")).snapshotId
+      val s4 = LakeOps.delete(s, tableDir, col("id") === 3L).snapshotId
       val out = LakeOps.diffSnapshots(s, tableDir, s1, s4, Seq("id"))
         .select(col("id"), col("change"),
           col("_before.v").as("v_before"), col("_after.v").as("v_after"))

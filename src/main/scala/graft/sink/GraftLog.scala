@@ -3,6 +3,7 @@ package graft.sink
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s.DefaultFormats
 import org.json4s.jackson.{JsonMethods, Serialization}
@@ -34,11 +35,20 @@ import org.json4s.jackson.{JsonMethods, Serialization}
   * strings, the form their directory names hold. It is kept in the log
   * as Iceberg keeps it in table metadata, so readers infer nothing.
   * Legacy rules: a schema without the partition columns (the older
-  * data-only format) leaves Spark to infer them from the paths until an
-  * append widens it; a record without any schema (json4s omits `None`,
-  * so the bytes are the oldest format's) leaves any fold over it
-  * schema-less, readers then infer the union from the files, and
-  * commits on top of it stay schema-less.
+  * data-only format) is read with them added as strings, until a write
+  * widens it; a record without any schema (json4s omits `None`, so the
+  * bytes are the oldest format's) leaves any fold over it schema-less,
+  * readers then infer the data columns from the files and add the
+  * partition columns as strings, and commits on top of it stay
+  * schema-less.
+  *
+  * The layout is the log's too, as Iceberg's partition spec is the
+  * table's: a file's partition directory is its relative path without
+  * the file name (`""` at the table root), and the table's partition
+  * columns are the unescaped names of those directories' levels
+  * ([[Live.partitionCols]]). A directory name is only ever built by
+  * Spark's `getPartitionPathString` ([[partitionPath]]), which escapes
+  * the name and the value.
   *
   * The live file set of a snapshot is the fold of operations up to it
   * ([[fold]]); readers must resolve through the log (never the
@@ -59,11 +69,30 @@ object GraftLog {
   /** What a prefix of the log folds to: its newest snapshot id (0 for
     * an empty prefix), the live files, the live rows and the table
     * schema (`None` once a schema-less record is folded in).
+    * `partitionCols` is the table's layout, read off the live files.
     */
   final case class Live(snapshotId: Long, files: Vector[String], rows: Long,
       schemaJson: Option[String]) {
     lazy val schema: Option[StructType] = schemaJson.map(parseSchema)
+    lazy val partitionCols: Seq[String] = GraftLog.partitionCols(files)
   }
+
+  /** A file's partition directory: its relative path without the file
+    * name (`""` at the table root). */
+  def partitionDir(file: String): String = file.take(file.lastIndexOf('/') max 0)
+
+  /** The partition columns `files` lie under, in directory order: the
+    * unescaped name of each `name=value` level. A directory level is
+    * only ever named by [[partitionPath]], which escapes `=` in a name,
+    * so the first `=` ends it. */
+  def partitionCols(files: Seq[String]): Seq[String] =
+    files.flatMap(f => partitionDir(f).split('/').filter(_.nonEmpty)
+      .map(level => ExternalCatalogUtils.unescapePathName(level.takeWhile(_ != '=')))).distinct
+
+  /** The partition directory of one row's rendered partition values, as
+    * Spark's writer names it: name and value both escaped. */
+  def partitionPath(cols: Seq[String], values: Seq[String]): String =
+    cols.zip(values).map { case (c, v) => ExternalCatalogUtils.getPartitionPathString(c, v) }.mkString("/")
 
   private val EmptySchema = new StructType().json
 

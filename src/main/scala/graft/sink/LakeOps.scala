@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Table maintenance + snapshot reads over the commit log — the lake
   * operations an Iceberg user relies on, re-expressed over the
@@ -18,33 +18,38 @@ import org.apache.spark.sql.types.StructType
   *    partition directory (the antidote to the reference's
   *    file-per-(input × partition) fragmentation, Q6) as a `rewrite`
   *    snapshot — readers at older snapshots still see the old files;
+  *  - `delete` and `upsert` rewrite only the partition directories
+  *    they touch; all three go through one copy-on-write step
+  *    ([[rewrite]]), which writes under the table's own layout
+  *    ([[GraftLog.Live.partitionCols]]);
   *  - `expireSnapshots` deletes data files unreachable from the kept
   *    snapshots (the GC half of Iceberg's `expire_snapshots`).
   */
 object LakeOps {
 
   /** Read live files (paths relative to `tableDir`) with the snapshot's
-    * table schema from the log — no footer read and no inference job;
-    * a file written before an ADD-COLUMN reads the column as null, and
-    * a partition column reads as the directory string it was written
-    * as (basePath keeps the partition columns when reading explicit
-    * files; Spark infers only one the schema lacks, as in the older
-    * data-only format). A log holding a schema-less record falls back
-    * to Spark's own union-of-footers inference.
+    * table schema from the log — no footer read and no inference job; a
+    * file written before an ADD-COLUMN reads the column as null. Every
+    * partition column the files' directories name reads as its directory
+    * string: the current format's schema holds it, and the older ones
+    * gain it — a data-only schema at its end, a schema-less log after
+    * the data columns Spark infers from the footers (`mergeSchema`).
+    * Spark infers no partition column type.
     *
     * No live files (a full-table DELETE, or a table with no commits)
     * read as an empty frame of the schema; a table with no commits has
     * the empty schema, so it reads as the 0-column frame.
     */
   private def readLive(spark: SparkSession, tableDir: String,
-      files: Seq[String], schema: Option[StructType]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(java.util.List.of[Row](), schema.getOrElse(new StructType()))
-    else {
-      val base = spark.read.option("basePath", tableDir)
-      schema.fold(base.option("mergeSchema", "true"))(base.schema)
-        .parquet(files.map(f => s"$tableDir/$f"): _*)
-    }
+      files: Seq[String], schema: Option[StructType]): DataFrame = {
+    val paths = files.map(f => s"$tableDir/$f")
+    val logged = schema.getOrElse(if (files.isEmpty) new StructType()
+      else spark.read.option("mergeSchema", "true").parquet(paths: _*).schema)
+    val table = StructType(logged ++ GraftLog.partitionCols(files)
+      .filterNot(logged.fieldNames.contains).map(StructField(_, StringType)))
+    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), table)
+    else spark.read.option("basePath", tableDir).schema(table).parquet(paths: _*)
+  }
 
   private def readLive(spark: SparkSession, tableDir: String, live: GraftLog.Live): DataFrame =
     readLive(spark, tableDir, live.files, live.schema)
@@ -108,7 +113,7 @@ object LakeOps {
     */
   def diffSnapshots(spark: SparkSession, tableDir: String,
       fromSnapshot: Long, toSnapshot: Long, keyCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{lit, struct, when}
+    import org.apache.spark.sql.functions.{struct, when}
     val recs = GraftLog.records(tableDir)
     val a0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(fromSnapshot)))
     val b0 = readLive(spark, tableDir, GraftLog.fold(recs, Some(toSnapshot)))
@@ -163,166 +168,130 @@ object LakeOps {
 
   /** Bin-pack the live set: one file per partition directory, committed
     * as a `rewrite` snapshot. Same rows, fewer files; old snapshots
-    * remain readable until expiry.
+    * remain readable until expiry. Concurrent appends are carried into
+    * the rewrite (it is content-neutral); a table with no live file is
+    * left as it is.
     */
   def compact(spark: SparkSession, tableDir: String): CommitInfo = {
-    // plan against a FIXED base snapshot; commitReplacing validates the
-    // log hasn't moved past it (concurrent appends are carried over —
-    // sound for a content-neutral rewrite; a concurrent replacing
-    // commit aborts with ConcurrentModificationException for re-run)
     val base = GraftLog.fold(GraftLog.records(tableDir))
-    val partitionCols = base.files
-      .flatMap(_.split("/").dropRight(1).map(_.takeWhile(_ != '='))).distinct
-    // No coalesce(1): writeFiles repartitions on the partition key, which
-    // already yields one file per partition directory (all rows of a
-    // key land in one task) while keeping the rewrite fully parallel —
-    // a single-task funnel here would be the scale bottleneck of the
-    // whole maintenance op.
-    val (files, rows) =
-      HiveParquetWriter.writeFiles(readLive(spark, tableDir, base), partitionCols, tableDir)
-    val rec = GraftLog.commitReplacing(tableDir, "rewrite", rows, files, Seq.empty,
-      base.snapshotId, carryAppends = true, base.schema)
+    if (base.files.isEmpty) return NoOp
+    val (rec, _) = rewrite(spark, tableDir, base, "rewrite", None, base.partitionCols)(identity)
     CommitInfo(rec.snapshotId, rec.files, rec.rows)
   }
 
   /** Copy-on-write MERGE (the observable semantics of Iceberg's
     * `MERGE INTO ... WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN
     * INSERT`): every key of `updates` replaces the table's existing row
-    * with that key, and unmatched keys are inserted. The rewrite scope
-    * is the TOUCHED PARTITIONS only — files of partitions no update
-    * row lands in carry over into the new snapshot byte-identical
-    * (verified by relative path in LakeOpsSpec), which is what keeps a
-    * point update on a 100 TB table from rewriting 100 TB. Committed as
-    * an `overwrite` snapshot; readers at older snapshots still see the
-    * pre-merge rows (snapshot isolation across content changes, not
-    * just compaction).
+    * with that key, and unmatched keys are inserted. Only the partition
+    * directories the update rows land in are rewritten; every other
+    * file carries into the new `overwrite` snapshot byte-identical.
     *
     * Contract: `updates` has the table's columns, partition columns
     * included (of any type: they are rendered to their directory
-    * strings as the write path renders them); `keyCols` are
-    * unique within `updates`; and the key → partition mapping is STABLE
-    * — an update must carry the key's existing partition value (true by
-    * construction when the partition is a transform of the key, the
-    * reference's own layout, Q2-Q4). A partition-moving update would
-    * leave the old row alive in the untouched partition — matching keys
-    * GLOBALLY would mean scanning every partition per merge, which is
-    * exactly what partition-scoped rewrite exists to avoid; Iceberg's
-    * copy-on-write MERGE leans on the same pruning when the match
-    * predicate covers the partition key. The touched-partition list is
-    * collected
-    * to the driver — it is bounded by the partitions the update batch
-    * touches (a point-update workload touches few), never by table
-    * size. A delete composes as: upsert the survivors of the touched
-    * keys' partitions, or run a full `rewrite` for bulk erasure.
-    * Returns the no-op `CommitInfo(0, Seq.empty, 0)` for an empty
-    * update batch (the Q10 rule: no empty snapshots).
+    * strings as the write path renders them); `keyCols` are unique
+    * within `updates`; and the key → partition mapping is stable (an
+    * update carries the key's existing partition value, true when the
+    * partition is a transform of the key, the reference's layout). A
+    * partition-moving update would leave the old row alive in its
+    * untouched partition. `partitionCols` lays out a table with no live
+    * file; on any other table it must be the table's own layout, or the
+    * upsert is refused before anything is written. An update batch with
+    * no rows is the no-op `CommitInfo(0, Seq.empty, 0)` (Q10: no empty
+    * snapshots). Returns the rows written in the rewritten directories.
     */
   def upsert(spark: SparkSession, tableDir: String, updates: DataFrame,
       keyCols: Seq[String], partitionCols: Seq[String],
       sources: Seq[String] = Seq.empty): CommitInfo = {
+    val base = GraftLog.fold(GraftLog.records(tableDir))
+    require(base.files.isEmpty || partitionCols == base.partitionCols,
+      s"upsert partitioned by ${partitionCols.mkString("(", ", ", ")")} into $tableDir, " +
+        s"which is partitioned by ${base.partitionCols.mkString("(", ", ", ")")}")
     val up = HiveParquetWriter.render(updates, partitionCols)
     val touched = touchedDirs(up, partitionCols)
-    if (touched.isEmpty) return CommitInfo(0, Seq.empty, 0)
-    // content-dependent rewrite: plan against a fixed base snapshot and
-    // let commitReplacing ABORT (ConcurrentModificationException) if any
-    // commit lands meanwhile — a carried-over concurrent append could
-    // contain a merge key this upsert already decided about
-    val base = GraftLog.fold(GraftLog.records(tableDir))
-    val (touchedFiles, carried) = splitLive(base.files, touched)
-    val merged =
-      if (touchedFiles.isEmpty) up
-      else {
-        // the table schema (via readLive): a touched partition may hold
-        // files from before an ADD-COLUMN evolution, whose rows read the
-        // added column as null; rendered, because a data-only log leaves
-        // Spark to infer the partition columns, and the union needs one type
-        val cur = HiveParquetWriter.render(
-          readLive(spark, tableDir, touchedFiles, base.schema), partitionCols)
-        // whole-row replacement semantics: an update row that omits an
-        // evolved column writes null there (allowMissingColumns), the
-        // same null a fresh insert would carry
-        cur.join(up.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-          .unionByName(up, allowMissingColumns = true)
-      }
-    // Record.rows = rows written in the rewrite scope, as the write job
-    // counted them (same convention as compact; carried files keep
-    // their original rows)
-    val (files, rows) = HiveParquetWriter.writeFiles(merged, partitionCols, tableDir)
-    val rec = GraftLog.commitReplacing(tableDir, "overwrite", rows, carried ++ files,
-      sources, base.snapshotId, carryAppends = false,
-      GraftLog.widen(base.schema, Some(HiveParquetWriter.dataSchema(merged, partitionCols))))
+    if (touched.isEmpty) return NoOp
+    // whole-row replacement: an update row that omits an evolved column
+    // writes null there (allowMissingColumns), as a fresh insert would
+    val (rec, rows) = rewrite(spark, tableDir, base, "overwrite", Some(touched.keySet),
+      partitionCols, sources) { cur =>
+      if (cur.columns.isEmpty) up // a table with no column yet holds no row to replace
+      else cur.join(up.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+        .unionByName(up, allowMissingColumns = true)
+    }
     CommitInfo(rec.snapshotId, rec.files, rows)
   }
 
-  /** Relative partition directories the rows of `df` land in, rendered
-    * exactly as the write path names them — a raw-value prefix would
-    * never match an escaped directory and the stale row would silently
-    * survive a merge. Collected to the driver: bounded by the
-    * partitions touched, never by table size.
-    */
-  private def touchedDirs(df: DataFrame, partitionCols: Seq[String]): Set[String] =
-    df.select(partitionCols.map(col): _*).distinct().collect().map { r =>
-      partitionCols.indices
-        .map(i => HiveParquetWriter.renderDir(partitionCols(i), r.get(i).toString)).mkString("/")
-    }.toSet
-
-  /** Split live files into (under a touched directory, carried over). */
-  private def splitLive(live: Seq[String], touched: Set[String]): (Seq[String], Seq[String]) =
-    live.partition(f => touched.exists(p => f.startsWith(p + "/")))
-
   /** Copy-on-write DELETE (the observable semantics of Iceberg's
-    * `DELETE FROM t WHERE p` in copy-on-write mode — the GDPR/forget
-    * primitive of a lake table): rows where `predicate` evaluates TRUE
-    * are removed; NULL predicate rows survive (SQL DELETE semantics).
-    *
-    * The rewrite scope is the partitions that actually CONTAIN a
-    * matching row: one predicate-filtered scan finds them (an Iceberg
-    * catalog prunes the same scan with file stats before reading), the
-    * touched-partition list collected to the driver is bounded by the
-    * matched partitions (a point-delete touches one), and every file of
-    * an untouched partition carries into the new snapshot
-    * byte-identical — a targeted delete on a 100 TB table rewrites only
-    * the partitions it hits. Committed as a `delete` snapshot; readers
-    * at older snapshots still see the pre-delete rows, which is what
-    * makes expireSnapshots the actual point of erasure for compliance
-    * (documented Iceberg behavior: COW delete + snapshot expiry).
+    * `DELETE FROM t WHERE p` in copy-on-write mode): rows where
+    * `predicate` is TRUE are removed; rows where it is NULL survive (SQL
+    * DELETE semantics). One scan of the live rows finds the partition
+    * directories holding a match and counts the matches in each; only
+    * those directories are rewritten, and every other file carries into
+    * the new `delete` snapshot byte-identical. Readers at older snapshots
+    * still see the deleted rows until [[expireSnapshots]].
     *
     * Returns `CommitInfo(snapshotId, files, rowsDeleted)`; a predicate
-    * matching nothing is a no-op `CommitInfo(0, Seq.empty, 0)` (the Q10
-    * rule: no empty snapshots).
+    * matching nothing is the no-op `CommitInfo(0, Seq.empty, 0)`.
     */
   def delete(spark: SparkSession, tableDir: String,
-      predicate: org.apache.spark.sql.Column,
-      partitionCols: Seq[String]): CommitInfo = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    // content-dependent rewrite: fixed base snapshot, abort on any
-    // concurrent commit (an appended row could match the predicate)
+      predicate: org.apache.spark.sql.Column): CommitInfo = {
+    import org.apache.spark.sql.functions.{coalesce, not}
     val base = GraftLog.fold(GraftLog.records(tableDir))
-    if (base.files.isEmpty) return CommitInfo(0, Seq.empty, 0)
+    if (base.files.isEmpty) return NoOp
     val hit = coalesce(predicate, lit(false))
-    val touched = touchedDirs(
-      readLive(spark, tableDir, base.files, base.schema).filter(hit), partitionCols)
-    if (touched.isEmpty) return CommitInfo(0, Seq.empty, 0)
-    val (touchedFiles, carried) = splitLive(base.files, touched)
-    val cur = readLive(spark, tableDir, touchedFiles, base.schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val before = cur.count()
-      val survivors = cur.filter(not(hit))
-      val (files, kept) = HiveParquetWriter.writeFiles(survivors, partitionCols, tableDir)
-      val rec = GraftLog.commitReplacing(tableDir, "delete", kept, carried ++ files,
-        Seq.empty, base.snapshotId, carryAppends = false, base.schema)
-      CommitInfo(rec.snapshotId, rec.files, before - kept)
-    } finally cur.unpersist()
+    val touched = touchedDirs(readLive(spark, tableDir, base).filter(hit), base.partitionCols)
+    if (touched.isEmpty) return NoOp
+    val (rec, _) = rewrite(spark, tableDir, base, "delete", Some(touched.keySet),
+      base.partitionCols)(_.filter(not(hit)))
+    CommitInfo(rec.snapshotId, rec.files, touched.values.sum)
+  }
+
+  private val NoOp = CommitInfo(0, Seq.empty, 0)
+
+  /** The partition directories the rows of `df` lie in, each with its
+    * row count: one grouped scan, collected to the driver (bounded by
+    * the directories touched, never by table size). Groups of no rows
+    * are dropped: without partition columns the count is a global
+    * aggregate, which returns one row even over no input.
+    */
+  private def touchedDirs(df: DataFrame, partitionCols: Seq[String]): Map[String, Long] =
+    df.groupBy(partitionCols.map(col): _*).agg(count(lit(1))).collect()
+      .filter(_.getLong(partitionCols.size) >= 1)
+      .map(r => GraftLog.partitionPath(partitionCols, partitionCols.indices.map(r.getString)) ->
+        r.getLong(partitionCols.size)).toMap
+
+  /** The one copy-on-write step of compact, delete and upsert. From the
+    * folded `base`, read the live files whose partition directory is in
+    * `dirs` (every live file when None) with the table schema, write
+    * `rows` of them under `layout`, and commit the written files plus
+    * the other live files, carried byte-identical, as a live-set-
+    * replacing `op` record validated against `base`: a `rewrite` carries
+    * concurrent appends, any other op aborts on them
+    * (`ConcurrentModificationException`), since an appended row could
+    * hold a key or match a predicate it already decided about. The
+    * record counts the rows written; it is returned with that count.
+    */
+  private def rewrite(spark: SparkSession, tableDir: String, base: GraftLog.Live, op: String,
+      dirs: Option[Set[String]], layout: Seq[String], sources: Seq[String] = Seq.empty)(
+      rows: DataFrame => DataFrame): (GraftLog.Record, Long) = {
+    val (scope, carried) = base.files.partition(f => dirs.forall(_(GraftLog.partitionDir(f))))
+    val out = rows(readLive(spark, tableDir, scope, base.schema))
+    val (files, written) = HiveParquetWriter.writeFiles(out, layout, tableDir)
+    val rec = GraftLog.commitReplacing(tableDir, op, written, carried ++ files, sources,
+      base.snapshotId, carryAppends = op == "rewrite",
+      GraftLog.widen(base.schema, Some(HiveParquetWriter.dataSchema(out, layout))))
+    (rec, written)
   }
 
   /** Delete data files unreachable from the newest `keepLast`
     * snapshots. Returns the deleted relative paths. `_`-prefixed
     * directories under the table belong to writers (the log, and the
     * `_staging_*` dir of an append in flight, whose staged files are
-    * not yet published) and are never swept.
+    * not yet published) and are never swept. `keepLast` below 1 would
+    * keep no snapshot, so even the live files would go: it is refused
+    * before anything is deleted.
     */
   def expireSnapshots(tableDir: String, keepLast: Int): Seq[String] = {
+    require(keepLast >= 1, s"expireSnapshots keeps at least the current snapshot, got keepLast = $keepLast")
     val recs = GraftLog.records(tableDir)
     if (recs.isEmpty) return Seq.empty
     val keptIds = recs.map(_.snapshotId).sorted.takeRight(keepLast)

@@ -79,13 +79,6 @@ object HiveParquetWriter {
       c -> when(v.isNull || v === "", lit("null")).otherwise(v)
     }.toMap)
 
-  /** Directory name of one rendered partition value, matching the write
-    * path exactly: Spark's partitionBy escapes special characters (/, =,
-    * %, …) via escapePathName.
-    */
-  private[sink] def renderDir(colName: String, v: String): String =
-    s"$colName=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
-
   /** The table schema a write records: data columns in frame order, then
     * the partition columns as strings (the order Spark reads them in). */
   private[sink] def dataSchema(df: DataFrame, partitionCols: Seq[String]): StructType =

@@ -71,13 +71,14 @@ object StreamingIngest {
     * at-least-once, and replaying a MERGE that already committed would
     * not even be content-idempotent (a second upsert of batch N after
     * batch N+1 committed would resurrect N's values), so the ledger
-    * check is correctness-critical here, not just dedup hygiene.
+    * check is correctness-critical here, not just dedup hygiene. An
+    * empty micro-batch touches no partition, so `upsert` commits nothing.
     */
   private[graft] def upsertBatch(
       batch: DataFrame, tableDir: String, keyCols: Seq[String],
       partitionCols: Seq[String], checkpointDir: String, batchId: Long): Unit = {
     val key = s"stream:$checkpointDir:$batchId"
-    if (!GraftLog.committedSources(tableDir).contains(key) && !batch.isEmpty)
+    if (!GraftLog.committedSources(tableDir).contains(key))
       graft.sink.LakeOps.upsert(batch.sparkSession, tableDir, batch,
         keyCols, partitionCols, sources = Seq(key)): Unit
   }

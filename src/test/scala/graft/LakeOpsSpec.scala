@@ -452,8 +452,7 @@ class LakeOpsSpec extends SparkSpec {
     val s1 = GraftLog.records(tdir).map(_.snapshotId).max
     // predicate TRUE on id 2 (escaped dir a/b) and on v>=35 (plain);
     // NULL on id 3's v — which must SURVIVE (SQL DELETE semantics)
-    val d1 = LakeOps.delete(spark, tdir, col("id") === 2L || col("v") >= 35L,
-      partitionCols = Seq("category"))
+    val d1 = LakeOps.delete(spark, tdir, col("id") === 2L || col("v") >= 35L)
     assert(d1.rows == 2)
     assert(LakeOps.readTable(spark, tdir).select("id")
       .as[Long].collect().sorted.toSeq == Seq(1L, 3L))
@@ -464,14 +463,16 @@ class LakeOpsSpec extends SparkSpec {
     assert(LakeOps.readSnapshot(spark, tdir, s1).count() == 4)
     // no-match predicate → no snapshot at all (Q10 rule)
     val records = GraftLog.records(tdir).size
-    val noop = LakeOps.delete(spark, tdir, col("id") === 99L, Seq("category"))
+    val noop = LakeOps.delete(spark, tdir, col("id") === 99L)
     assert(noop.snapshotId == 0 && noop.rows == 0)
     assert(GraftLog.records(tdir).size == records)
     // full wipe: live set reaches zero files and the table reads empty
-    val wipe = LakeOps.delete(spark, tdir, lit(true), Seq("category"))
+    val wipe = LakeOps.delete(spark, tdir, lit(true))
     assert(wipe.rows == 2)
     assert(GraftLog.liveFiles(tdir, None).isEmpty)
     assert(LakeOps.readTable(spark, tdir).count() == 0)
+    // nothing live: compact commits no empty snapshot
+    assert(LakeOps.compact(spark, tdir).snapshotId == 0L && GraftLog.records(tdir).size == records + 1)
   }
 
   test("rollback: restores old content as a forward commit; itself roll-back-able (r5)") {
@@ -553,7 +554,7 @@ class LakeOpsSpec extends SparkSpec {
     LakeOps.upsert(spark, tdir, Seq((2L, "a", 21L), (4L, "b", 40L))
       .toDF("id", "category", "v"), Seq("id"), Seq("category"))
     LakeOps.compact(spark, tdir)
-    val s5 = LakeOps.delete(spark, tdir, col("id") === 3L, Seq("category")).snapshotId
+    val s5 = LakeOps.delete(spark, tdir, col("id") === 3L).snapshotId
     val tags = LakeOps.diffSnapshots(spark, tdir, s1, s5, Seq("id"))
       .select(col("id"), col("change")).as[(Long, String)].collect().toMap
     assert(tags == Map(1L -> "unchanged", 2L -> "updated",
@@ -561,7 +562,7 @@ class LakeOpsSpec extends SparkSpec {
 
     // full-table delete → empty endpoint: the changelog degenerates to
     // all-'deleted' instead of tripping the schema-change guard
-    val s6 = LakeOps.delete(spark, tdir, lit(true), Seq("category")).snapshotId
+    val s6 = LakeOps.delete(spark, tdir, lit(true)).snapshotId
     val wiped = LakeOps.diffSnapshots(spark, tdir, s5, s6, Seq("id"))
     assert(wiped.where(col("change") =!= "deleted").count() == 0L)
     assert(wiped.count() == 3L) // ids 1, 2, 4 all deleted
@@ -858,7 +859,7 @@ class LakeOpsSpec extends SparkSpec {
     assert(LakeOps.readTable(spark, tdir).filter(col("id") === 1L)
       .select("zip", "v").as[(String, Long)].collect().toSeq == Seq(("007", 11L)))
     // a table after a full-table DELETE keeps its columns
-    LakeOps.delete(spark, tdir, lit(true), Seq("zip"))
+    LakeOps.delete(spark, tdir, lit(true))
     val wiped = LakeOps.readTable(spark, tdir)
     assert(wiped.columns.toSeq == Seq("id", "v", "zip") && wiped.count() == 0L)
   }
@@ -878,28 +879,41 @@ class LakeOpsSpec extends SparkSpec {
     }
   }
 
-  test("the older log formats read as they always did: Spark infers the partition columns they lack") {
+  test("the older log formats read partition columns as strings") {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val root = Files.createTempDirectory("graft_oldfmt_").toString
     val a = Seq((1L, 10L)).toDF("id", "v") -> "zip=007/a.parquet"
     val b = Seq((2L, 20L)).toDF("id", "v") -> "zip=010/b.parquet"
     val dataOnly = StructType(Seq(StructField("id", LongType, false), StructField("v", LongType, false)))
+    def dirs(tdir: String): Set[String] = GraftLog.liveFiles(tdir).map(_.takeWhile(_ != '/')).toSet
+    def rows(tdir: String): Seq[(Long, Long, String)] = LakeOps.readTable(spark, tdir)
+      .select("id", "v", "zip").as[(Long, Long, String)].collect().sortBy(_._1).toSeq
     for ((name, schema) <- Seq("data_only" -> Some(dataOnly), "schema_less" -> None)) {
       val tdir = s"$root/$name"
       commitPlaced(tdir, schema, a, b)
       assert(GraftLog.records(tdir).map(_.schema) == Seq.fill(2)(schema.map(_.json)))
       for (df <- Seq(LakeOps.readTable(spark, tdir), LakeOps.readSnapshot(spark, tdir, 2L))) {
         assert(df.schema.map(f => f.name -> f.dataType) ==
-          Seq("id" -> LongType, "v" -> LongType, "zip" -> IntegerType), name)
-        assert(df.as[(Long, Long, Int)].collect().sortBy(_._1).toSeq ==
-          Seq((1L, 10L, 7), (2L, 20L, 10)), name)
+          Seq("id" -> LongType, "v" -> LongType, "zip" -> StringType), name)
+        assert(df.as[(Long, Long, String)].collect().sortBy(_._1).toSeq ==
+          Seq((1L, 10L, "007"), (2L, 20L, "010")), name)
       }
       // an upsert carrying a value that is not an int still merges
       LakeOps.upsert(spark, tdir, Seq((1L, "007", 11L), (3L, "abc", 30L)).toDF("id", "zip", "v"),
         Seq("id"), Seq("zip"))
-      assert(LakeOps.readTable(spark, tdir).select("id", "v", "zip").as[(Long, Long, String)]
-        .collect().sortBy(_._1).toSeq == Seq((1L, 11L, "007"), (2L, 20L, "010"), (3L, 30L, "abc")), name)
+      assert(rows(tdir) == Seq((1L, 11L, "007"), (2L, 20L, "010"), (3L, 30L, "abc")), name)
+      // a rewrite of the older format keeps each row in its directory
+      val c = s"$root/${name}_compact"
+      commitPlaced(c, schema, a, b)
+      LakeOps.compact(spark, c)
+      assert(dirs(c) == Set("zip=007", "zip=010"), name)
+      assert(rows(c) == Seq((1L, 10L, "007"), (2L, 20L, "010")), name)
+      val d = s"$root/${name}_delete"
+      commitPlaced(d, schema, Seq((1L, 10L), (4L, 40L)).toDF("id", "v") -> "zip=007/a.parquet", b)
+      assert(LakeOps.delete(spark, d, col("id") === 4L).rows == 1L, name)
+      assert(dirs(d) == Set("zip=007", "zip=010"), name)
+      assert(rows(d) == Seq((1L, 10L, "007"), (2L, 20L, "010")), name)
     }
   }
 
@@ -915,5 +929,88 @@ class LakeOpsSpec extends SparkSpec {
     assert(df.schema("zip").dataType == StringType)
     assert(df.select("id", "zip").as[(Long, String)].collect().sortBy(_._1).toSeq ==
       Seq((1L, "007"), (2L, "010")))
+  }
+
+  test("compact, delete and upsert keep the table's layout: none, one column, and a hostile name") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+    import org.apache.spark.sql.types._
+    // a row's partition values: a group of its id, then a value with a
+    // character Spark escapes in directory names
+    def parts(layout: Seq[String], id: Long): Seq[String] =
+      layout.indices.map(j => if (j == 0) s"g${id % 3}" else s"v:${id % 2}")
+    def frame(layout: Seq[String], rows: Seq[(Long, Long)]) = spark.createDataFrame(
+      rows.map { case (id, v) => Row.fromSeq(Seq(id, v) ++ parts(layout, id)) }.asJava,
+      StructType(Seq(StructField("id", LongType), StructField("v", LongType)) ++
+        layout.map(StructField(_, StringType))))
+    def table(tdir: String, layout: Seq[String]): Seq[(Long, Long, Seq[String])] =
+      LakeOps.readTable(spark, tdir).select((Seq("id", "v") ++ layout).map(col): _*).collect()
+        .map(r => (r.getLong(0), r.getLong(1), layout.indices.map(i => r.getString(i + 2))))
+        .sortBy(_._1).toSeq
+    // a file's directory levels, unescaped: (names, values)
+    def levels(file: String): (Seq[String], Seq[String]) =
+      file.split('/').dropRight(1).toSeq.map(l =>
+        (unescapePathName(l.takeWhile(_ != '=')), unescapePathName(l.dropWhile(_ != '=').drop(1)))).unzip
+    val start = (1L to 6L).map(i => (i, i * 10))
+    // (operation, run it, the rows after it, the ids whose directories
+    // it rewrites — None: all — and the rows it reports)
+    val ops: Seq[(String, (String, Seq[String]) => graft.sink.CommitInfo, Seq[(Long, Long)],
+        Option[Seq[Long]], (Seq[String], Seq[(Long, Long)]) => Long)] = Seq(
+      ("compact", (t, _) => LakeOps.compact(spark, t), start, None, (_, after) => after.size.toLong),
+      ("delete", (t, _) => LakeOps.delete(spark, t, col("id") === 1L), start.filterNot(_._1 == 1L),
+        Some(Seq(1L)), (_, _) => 1L),
+      ("upsert", (t, l) => LakeOps.upsert(spark, t, frame(l, Seq((1L, 100L), (7L, 70L))), Seq("id"), l),
+        start.filterNot(_._1 == 1L) ++ Seq((1L, 100L), (7L, 70L)), Some(Seq(1L, 7L)),
+        (l, after) => after.count(r => Set(parts(l, 1L), parts(l, 7L))(parts(l, r._1))).toLong))
+    for (layout <- Seq(Seq.empty[String], Seq("category"), Seq("p", "k:1"));
+         (name, run, after, touchedIds, reported) <- ops) {
+      val cell = s"$name on (${layout.mkString(", ")})"
+      val tdir = Files.createTempDirectory("graft_layout_").toString + "/t"
+      val w = new graft.sink.HiveParquetWriter
+      w.append(frame(layout, start.take(4)), layout, tdir)
+      w.append(frame(layout, start.drop(4)), layout, tdir)
+      val liveBefore = GraftLog.liveFiles(tdir)
+      val touched = touchedIds.map(_.map(parts(layout, _)).toSet)
+      val carried = liveBefore.filterNot(f => touched.forall(_(levels(f)._2)))
+        .map(f => f -> Files.readAllBytes(Paths.get(tdir, f)).toSeq)
+      val snapshots = GraftLog.records(tdir).size
+      val c = run(tdir, layout)
+      // one snapshot with what the operation reports, never an empty one
+      assert(c.snapshotId > 0 && GraftLog.records(tdir).size == snapshots + 1, cell)
+      assert(c.rows == reported(layout, after) && c.rows > 0, cell)
+      val got = table(tdir, layout)
+      assert(got == after.map { case (id, v) => (id, v, parts(layout, id)) }.sortBy(_._1), cell)
+      assert(got.map(_._1).distinct.size == got.size, s"$cell: duplicate key")
+      // every live file lies under the table's layout, in its row's directory
+      val liveAfter = GraftLog.liveFiles(tdir)
+      assert(liveAfter.forall(f => levels(f)._1 == layout), s"$cell: $liveAfter")
+      // untouched directories carry their files byte-identical
+      carried.foreach { case (f, bytes) =>
+        assert(liveAfter.contains(f) && Files.readAllBytes(Paths.get(tdir, f)).toSeq == bytes, s"$cell: $f")
+      }
+      assert(liveBefore.filterNot(carried.map(_._1).contains).forall(!liveAfter.contains(_)), cell)
+      // an operation that touches nothing commits nothing
+      assert(LakeOps.delete(spark, tdir, col("id") === 99L).snapshotId == 0L, cell)
+      assert(LakeOps.upsert(spark, tdir, frame(layout, Nil), Seq("id"), layout).snapshotId == 0L, cell)
+      assert(GraftLog.records(tdir).size == snapshots + 1, cell)
+      if (name == "upsert" && layout.size > 1) {
+        // an upsert under another order of the table's columns is refused
+        // before it writes, and the table still reads
+        intercept[IllegalArgumentException](LakeOps.upsert(spark, tdir,
+          frame(layout, Seq((2L, 21L))), Seq("id"), layout.reverse))
+        assert(GraftLog.records(tdir).size == snapshots + 1 && GraftLog.liveFiles(tdir) == liveAfter, cell)
+        assert(table(tdir, layout) == got, cell)
+      }
+    }
+  }
+
+  test("expireSnapshots refuses to keep no snapshot") {
+    import spark.implicits._
+    val tdir = Files.createTempDirectory("graft_exp_none_").toString + "/t"
+    (new graft.sink.HiveParquetWriter).append(Seq((1L, "a"), (2L, "b")).toDF("id", "p"), Seq("p"), tdir)
+    val live = GraftLog.liveFiles(tdir)
+    for (keep <- Seq(0, -1)) intercept[IllegalArgumentException](LakeOps.expireSnapshots(tdir, keep))
+    assert(live.forall(f => Files.exists(Paths.get(tdir, f))))
+    assert(LakeOps.readTable(spark, tdir).count() == 2L)
   }
 }

@@ -241,4 +241,18 @@ class StreamingSpec extends SparkSpec {
     assert(state(2L) == 25L, "replayed batch resurrected a stale value")
     assert(GraftLog.records(tableDir).size == 2)
   }
+
+  test("an empty MERGE micro-batch commits nothing") {
+    import spark.implicits._
+    import graft.sink.{GraftLog, HiveParquetWriter}
+    val root = Files.createTempDirectory("graft_stream_empty_").toString
+    val tableDir = s"$root/t"
+    val empty = Seq.empty[(Long, String, Long)].toDF("id", "category", "v")
+    StreamingIngest.upsertBatch(empty, tableDir, Seq("id"), Seq("category"), s"$root/ckpt", 0L)
+    assert(GraftLog.records(tableDir).isEmpty)
+    new HiveParquetWriter().append(Seq((1L, "a", 10L)).toDF("id", "category", "v"),
+      Seq("category"), tableDir)
+    StreamingIngest.upsertBatch(empty, tableDir, Seq("id"), Seq("category"), s"$root/ckpt", 1L)
+    assert(GraftLog.records(tableDir).size == 1)
+  }
 }
