@@ -1,9 +1,11 @@
 package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.sink.KnownFileIndex
 import graft.types._
 
 /** JSON-lines decode against a fixed schema — the reference's
@@ -77,19 +79,17 @@ object JsonDecode {
   def decodeRaw(raw: DataFrame, schema: GStruct): DataFrame =
     raw.select(schema.fields.map(f => coerceType(col(f.name), f.gtype).as(f.name)): _*)
 
-  /** Decode newline-delimited JSON files into the schema's frame.
-    * Spark expands every path as a Hadoop glob, so glob metacharacters
-    * are escaped: a source named `back\slash.json` or `a[1].json` reads
-    * as itself.
+  /** Decode newline-delimited JSON files into the schema's frame,
+    * malformed lines dropped (`mode=DROPMALFORMED`). The files go to
+    * Spark through the known-files index ([[KnownFileIndex]]): one stat
+    * per path on the driver and no listing job, so building the frame
+    * starts no Spark job. Paths are literal: a source named
+    * `back\slash.json` or `gl*b[1]{x}?.json` reads as itself. A path
+    * that is gone throws `FileNotFoundException` here, before any job.
     */
-  def read(spark: SparkSession, schema: GStruct, paths: Seq[String]): DataFrame =
-    decodeRaw(
-      spark.read
-        .schema(readSchema(schema))
-        .option("mode", "DROPMALFORMED")
-        .json(paths.map(_.flatMap {
-          case c @ ('\\' | '{' | '}' | '[' | ']' | '*' | '?') => s"\\$c"
-          case c => c.toString
-        }): _*),
-      schema)
+  def read(spark: SparkSession, schema: GStruct, paths: Seq[String]): DataFrame = {
+    val files = KnownFileIndex.statuses(spark, paths)
+    decodeRaw(KnownFileIndex.read(spark, new JsonFileFormat, files.map(_.getPath), files,
+      readSchema(schema), Map("mode" -> "DROPMALFORMED")), schema)
+  }
 }

@@ -3,7 +3,8 @@ package graft.sink
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -28,13 +29,17 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 object LakeOps {
 
   /** Read live files (paths relative to `tableDir`) with the snapshot's
-    * table schema from the log — no footer read and no inference job; a
-    * file written before an ADD-COLUMN reads the column as null. Every
-    * partition column the files' directories name reads as its directory
-    * string: the current format's schema holds it, and the older ones
-    * gain it — a data-only schema at its end, a schema-less log after
-    * the data columns Spark infers from the footers (`mergeSchema`).
-    * Spark infers no partition column type.
+    * table schema from the log — no footer read, no inference job and no
+    * listing job: the files go to Spark through the known-files index
+    * ([[KnownFileIndex]], one stat per file on the driver, `tableDir` as
+    * the root), so building the frame starts no Spark job. A file written
+    * before an ADD-COLUMN reads the column as null. Every partition
+    * column the files' directories name reads as its directory string:
+    * the current format's schema holds it, and the older ones gain it — a
+    * data-only schema at its end, a schema-less log after the data
+    * columns Spark's `mergeSchema` infers from the footers (a Spark job,
+    * paid by that oldest format only). Spark infers no partition column
+    * type.
     *
     * No live files (a full-table DELETE, or a table with no commits)
     * read as an empty frame of the schema; a table with no commits has
@@ -42,13 +47,15 @@ object LakeOps {
     */
   private def readLive(spark: SparkSession, tableDir: String,
       files: Seq[String], schema: Option[StructType]): DataFrame = {
-    val paths = files.map(f => s"$tableDir/$f")
+    val statuses = KnownFileIndex.statuses(spark, files.map(f => s"$tableDir/$f"))
     val logged = schema.getOrElse(if (files.isEmpty) new StructType()
-      else spark.read.option("mergeSchema", "true").parquet(paths: _*).schema)
+      else new ParquetFileFormat().inferSchema(spark, Map("mergeSchema" -> "true"), statuses)
+        .getOrElse(throw new IllegalStateException(s"no parquet schema in the live files of $tableDir")))
     val table = StructType(logged ++ GraftLog.partitionCols(files)
       .filterNot(logged.fieldNames.contains).map(StructField(_, StringType)))
     if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), table)
-    else spark.read.option("basePath", tableDir).schema(table).parquet(paths: _*)
+    else KnownFileIndex.read(spark, new ParquetFileFormat,
+      Seq(KnownFileIndex.qualified(spark, tableDir)), statuses, table)
   }
 
   private def readLive(spark: SparkSession, tableDir: String, live: GraftLog.Live): DataFrame =
@@ -267,16 +274,28 @@ object LakeOps {
     * replacing `op` record validated against `base`: a `rewrite` carries
     * concurrent appends, any other op aborts on them
     * (`ConcurrentModificationException`), since an appended row could
-    * hold a key or match a predicate it already decided about. The
-    * record counts the rows written; it is returned with that count.
+    * hold a key or match a predicate it already decided about.
+    *
+    * The record holds the live rows after the commit: the rows written,
+    * plus, when any file is carried, `base.rows` less the rows of the
+    * files read. The write job counts those with an `Observation` on the
+    * read, which `rows` always consumes. An empty read is not observed:
+    * it holds 0 rows, and the optimizer may prune a plan over no rows, so
+    * the observation would never fire and `get` would block. Returns the
+    * record and the rows written.
     */
   private def rewrite(spark: SparkSession, tableDir: String, base: GraftLog.Live, op: String,
       dirs: Option[Set[String]], layout: Seq[String], sources: Seq[String] = Seq.empty)(
       rows: DataFrame => DataFrame): (GraftLog.Record, Long) = {
     val (scope, carried) = base.files.partition(f => dirs.forall(_(GraftLog.partitionDir(f))))
-    val out = rows(readLive(spark, tableDir, scope, base.schema))
+    val in = readLive(spark, tableDir, scope, base.schema)
+    val replaced = Observation()
+    val observed = scope.nonEmpty && carried.nonEmpty
+    val out = rows(if (observed) in.observe(replaced, count(lit(1)).as("rows")) else in)
     val (files, written) = HiveParquetWriter.writeFiles(out, layout, tableDir)
-    val rec = GraftLog.commitReplacing(tableDir, op, written, carried ++ files, sources,
+    val read = if (observed) replaced.get("rows").asInstanceOf[Long] else 0L
+    val live = if (carried.isEmpty) written else base.rows - read + written
+    val rec = GraftLog.commitReplacing(tableDir, op, live, carried ++ files, sources,
       base.snapshotId, carryAppends = op == "rewrite",
       GraftLog.widen(base.schema, Some(HiveParquetWriter.dataSchema(out, layout))))
     (rec, written)

@@ -86,6 +86,15 @@ object HiveParquetWriter {
       partitionCols.map(StructField(_, StringType)))
 
   /** Stage + publish data files under `tableDir` (no commit record).
+    *
+    * The repartition by the partition key asks for the session's
+    * `spark.sql.shuffle.partitions` explicitly, which AQE does not
+    * coalesce. AQE's coalescing merges shuffle partitions by bytes, but a
+    * partitioned write costs per file (open, encode, footer, close), not
+    * per byte: a small batch over 128 directories was merged into one
+    * task that wrote all 128 files in turn. Each directory still hashes
+    * to exactly one task, so it still gets one file per write.
+    *
     * Returns the published relative paths and the rows written, counted
     * by the write job itself: an observed `count` on the frame the
     * writer consumes — after the repartition, where AQE cannot drop the
@@ -103,7 +112,9 @@ object HiveParquetWriter {
     try {
       val counted = Observation()
       val rendered = render(df, partitionCols)
-      (if (partitionCols.isEmpty) rendered else rendered.repartition(partitionCols.map(col): _*))
+      (if (partitionCols.isEmpty) rendered
+       else rendered.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+         partitionCols.map(col): _*))
         .observe(counted, count(lit(1)).as("rows"))
         .write.partitionBy(partitionCols: _*).parquet(staging.toString)
       val rows = counted.get.getOrElse("rows", throw new IllegalStateException(

@@ -18,4 +18,9 @@ object GraftBridge {
     * builder has no Dataset, so it needs this form. */
   def converted(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** `s` with every field nullable, at any depth: the data schema Spark
+    * gives a file source it reads (`StructType.asNullable` is
+    * `private[spark]`). */
+  def nullable(s: types.StructType): types.StructType = s.asNullable
 }

@@ -23,6 +23,39 @@ class LakeOpsSpec extends SparkSpec {
       .mkString("\n"))
   }
 
+  /** `body`'s result, the Spark jobs it starts and the task count of each
+    * stage it submits, in order. A listener files job and stage starts
+    * by job group; a marker job in a group of its own flushes the
+    * asynchronous listener bus, which delivers events in order. */
+  private def sparkWork[A](body: => A): (A, Int, Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    def group(p: java.util.Properties) =
+      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(group(e.properties))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.add(group(e.properties) -> e.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("under_test", "work under test")
+      val out = body
+      spark.sparkContext.setJobGroup("under_test_end", "listener flush")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains("under_test_end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains("under_test_end"), "listener saw no marker job")
+      (out, jobs.asScala.count(_ == "under_test"),
+        stages.asScala.collect { case ("under_test", n) => n }.toSeq)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("exactly-once: kept sources are not re-ingested on a second run") {
     val root = Files.createTempDirectory("graft_eo_").toString
     val tdir = s"$root/w/t"
@@ -625,7 +658,8 @@ class LakeOpsSpec extends SparkSpec {
     // for non-ASCII independently of the locale by the next spec
     val nonAscii = "ünïcødé€.json"
     val names = Seq("we\"ird.json", "back\\slash.json", "new\nline.json",
-      "tab\there.json", "gl*b[1]{x}?.json") ++ Seq(nonAscii).filter(n => java.nio.charset.Charset
+      "tab\there.json", "gl*b[1]{x}?.json", "100%.json", "100%25.json", " lead.json",
+      "c,d.json", "#hash.json", "e f.json") ++ Seq(nonAscii).filter(n => java.nio.charset.Charset
         .forName(System.getProperty("sun.jnu.encoding")).newEncoder().canEncode(n))
     def offer(): Unit = names.zipWithIndex.foreach { case (n, i) =>
       writeBatch(root, "c1", n, Seq(i + 1))
@@ -761,7 +795,6 @@ class LakeOpsSpec extends SparkSpec {
 
   test("a fresh table's read runs no Spark job before its action; the write counts its rows") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val tdir = Files.createTempDirectory("graft_fresh_").toString + "/t"
     val w = new graft.sink.HiveParquetWriter
     val rows = (1 to 40).map(i => (i.toLong, s"c${i % 4}", i * 10L))
@@ -769,34 +802,72 @@ class LakeOpsSpec extends SparkSpec {
     val c2 = w.append(rows.drop(25).toDF("id", "category", "v"), Seq("category"), tdir)
     assert(c1.rows == 25L && c2.rows == 15L)
     assert(GraftLog.liveFiles(tdir).size <= 32) // below Spark's parallel-listing threshold
-    // job starts by job group; a marker job in its own group flushes the
-    // asynchronous listener bus, which delivers events in order
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    val ((cur, old), jobs, _) = sparkWork(
+      (LakeOps.readTable(spark, tdir), LakeOps.readSnapshot(spark, tdir, c1.snapshotId)))
+    assert(jobs == 0, "a read planned with a Spark job before its action")
+    assert(cur.count() == 40L && old.count() == 25L)
+    assert(cur.columns.toSeq == Seq("id", "v", "category"))
+  }
+
+  test("100 known files: neither a decode nor a read on any layout runs a Spark job before its action") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("graft_known_").toString
+    (1 to 100).foreach(i => writeBatch(root, "c1", f"f$i%03d.json", Seq(i)))
+    val pending = Pipeline.listPending(root, "c1")
+    val (decoded, decodeJobs, _) = sparkWork(Pipeline.decode(spark, IngestQueries.fixtureTable, pending))
+    assert(decodeJobs == 0, "the decode planned with a Spark job")
+    assert(decoded.count() == 100L && decoded.inputFiles.length == 100)
+    // a source gone before the decode fails it here, before any job
+    Files.delete(Paths.get(pending.head))
+    val (gone, goneJobs, _) = sparkWork(intercept[java.io.FileNotFoundException](
+      Pipeline.decode(spark, IngestQueries.fixtureTable, pending)))
+    assert(goneJobs == 0 && gone.getMessage.contains("f001.json"))
+    // one append of 100 files per layout: 100 directories, or 100 input
+    // partitions without one
+    for (layout <- Seq(Seq.empty[String], Seq("category"), Seq("p", "k:1"))) {
+      val tdir = Files.createTempDirectory("graft_known_t_").toString + "/t"
+      val rows = (0 until 100).map(i => Row.fromSeq(Seq(i.toLong) ++
+        (if (layout.size == 1) Seq(s"c$i") else layout.indices.map(j => s"${if (j == 0) i / 10 else i % 10}"))))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 100),
+        StructType(StructField("id", LongType) +: layout.map(StructField(_, StringType))))
+      (new graft.sink.HiveParquetWriter).append(df, layout, tdir)
+      assert(GraftLog.liveFiles(tdir).size == 100, layout)
+      val (read, jobs, _) = sparkWork(LakeOps.readTable(spark, tdir))
+      assert(jobs == 0, s"a read on (${layout.mkString(", ")}) planned with a Spark job")
+      assert(read.count() == 100L && read.inputFiles.length == 100 &&
+        read.columns.toSeq == "id" +: layout, layout)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup("fresh_read", "reads under test")
-      val cur = LakeOps.readTable(spark, tdir)
-      val old = LakeOps.readSnapshot(spark, tdir, c1.snapshotId)
-      spark.sparkContext.setJobGroup("fresh_read_end", "listener flush")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("fresh_read_end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("fresh_read_end"), "listener saw no marker job")
-      assert(groups.asScala.count(_ == "fresh_read") == 0,
-        "a read planned with a Spark job before its action")
-      spark.sparkContext.clearJobGroup()
-      assert(cur.count() == 40L && old.count() == 25L)
-      assert(cur.columns.toSeq == Seq("id", "v", "category"))
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+  }
+
+  test("a partitioned write runs one task per shuffle partition, one file per directory") {
+    import spark.implicits._
+    val tdir = Files.createTempDirectory("graft_tasks_").toString + "/t"
+    val df = (0 until 64).map(i => (i.toLong, s"d${i % 16}")).toDF("id", "p")
+    val (c, _, stageTasks) = sparkWork((new graft.sink.HiveParquetWriter).append(df, Seq("p"), tdir))
+    // the write stage runs last; AQE would coalesce a small shuffle to 1
+    assert(stageTasks.last == spark.conf.get("spark.sql.shuffle.partitions").toInt &&
+      stageTasks.last == 4, stageTasks)
+    assert(c.rows == 64L && c.files.size == 16 && c.files.map(GraftLog.partitionDir).distinct.size == 16)
+  }
+
+  test("partition-scoped delete and upsert keep the live row count; rollback reports it") {
+    import spark.implicits._
+    val tdir = Files.createTempDirectory("graft_rows_").toString + "/t"
+    val w = new graft.sink.HiveParquetWriter
+    w.append(Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b")).toDF("id", "p"), Seq("p"), tdir)
+    val d = LakeOps.delete(spark, tdir, col("id") === 1L)
+    assert(d.rows == 1L)
+    assert(GraftLog.fold(GraftLog.records(tdir)).rows == 3L)
+    LakeOps.compact(spark, tdir)
+    assert(LakeOps.rollback(tdir, d.snapshotId).rows == 3L)
+    assert(GraftLog.fold(GraftLog.records(tdir)).rows == 3L)
+    // an upsert that inserts a new key adds it; one that replaces a key does not
+    LakeOps.upsert(spark, tdir, Seq((5L, "b")).toDF("id", "p"), Seq("id"), Seq("p"))
+    assert(GraftLog.fold(GraftLog.records(tdir)).rows == 4L)
+    LakeOps.upsert(spark, tdir, Seq((2L, "a")).toDF("id", "p"), Seq("id"), Seq("p"))
+    assert(GraftLog.fold(GraftLog.records(tdir)).rows == 4L)
+    assert(LakeOps.readTable(spark, tdir).count() == 4L)
   }
 
   test("a log of schema-less records reads with the union schema; an append on top keeps it") {
@@ -981,6 +1052,7 @@ class LakeOpsSpec extends SparkSpec {
       val got = table(tdir, layout)
       assert(got == after.map { case (id, v) => (id, v, parts(layout, id)) }.sortBy(_._1), cell)
       assert(got.map(_._1).distinct.size == got.size, s"$cell: duplicate key")
+      assert(GraftLog.fold(GraftLog.records(tdir)).rows == after.size, s"$cell: logged rows")
       // every live file lies under the table's layout, in its row's directory
       val liveAfter = GraftLog.liveFiles(tdir)
       assert(liveAfter.forall(f => levels(f)._1 == layout), s"$cell: $liveAfter")
